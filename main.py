@@ -3,7 +3,7 @@ spark-submit --py-files on clusters of N and 4N executors").
 
 Usage:
     ./submit.sh [n_images] [n_polygons] [output_path]
-or directly:
+or directly (build the zip first with scripts/build_dist.sh):
     spark-submit --py-files dist/stac_to_geocore_spark.zip main.py 100000 32 /tmp/assignments
 
 Runs the flagship pipeline (H3/S2 encode + PIP join + tile assignment) and

@@ -1,8 +1,7 @@
 #!/usr/bin/env bash
-# Rebuild dist/stac_to_geocore_spark.zip from the package tree at HEAD.
-# submit.sh runs this automatically; run it manually after editing package
-# source so the committed artifact matches (tests/test_dist_zip.py enforces
-# byte-parity between the zip and the tree).
+# Build dist/stac_to_geocore_spark.zip (the spark-submit --py-files
+# artifact) from the package tree. submit.sh runs this before every submit;
+# the zip is a build output and is not committed (dist/ is git-ignored).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 mkdir -p dist

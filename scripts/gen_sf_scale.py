@@ -1,5 +1,5 @@
 """Deterministic scale-up of a driver testdata dir for LARGE-SCALE A/B
-measurement only (bench_extra / bench.py at sf1.0). NOT driver data and NOT
+measurement only (bench.py at sf1.0). NOT driver data and NOT
 used by any correctness gate — the oracle always runs on the driver's own
 sf0.001/sf0.01/sf0.1 dirs, which this script never touches.
 

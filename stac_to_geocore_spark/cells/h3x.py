@@ -14,7 +14,7 @@ principles:
 - The hierarchy is TRUE aperture-7: parent/children are exact
   Eisenstein-integer lattice division/multiplication by (2+tau) (each cell
   has exactly 7 children that round back to it — no float re-encode), so
-  compact/uncompact multi-res covers are exact set operations.
+  multi-res rollups (h3_parent) are exact.
 - Cells at face boundaries are clipped to the face's Voronoi region (each
   point maps to the max-dot face, then to that face's lattice). This yields
   a deterministic total partition of the sphere; unlike Uber's library we do
@@ -281,53 +281,6 @@ def h3_children_np(cell: np.ndarray) -> np.ndarray:
     return _pack(face7, ca, cb, r0 + 1)
 
 
-def h3_compact_np(cells: np.ndarray, min_res: int = 0) -> np.ndarray:
-    """Minimal multi-res representation: wherever all 7 children of a parent
-    are present they are replaced by the parent, cascading finest-to-coarsest
-    (the H3 `compact` operation — what makes multi-res covers cheap to store
-    and join). Input may be mixed-res; output is sorted unique ids.
-
-    min_res bounds the cascade: no output cell is coarser than min_res —
-    multi-res JOINS use this to keep the level set (and so their ancestor
-    expansion factor) fixed and small."""
-    out = np.unique(np.asarray(cells, dtype=np.int64))
-    if len(out) == 0:
-        return out
-    _, _, _, res_all = h3_unpack(out)
-    for r in range(int(res_all.max()), min_res, -1):
-        face, a, b, res = h3_unpack(out)
-        m = res == r
-        if not m.any():
-            continue
-        fine = out[m]
-        parents = h3_parent_np(fine, r - 1)
-        uniq, counts = np.unique(parents, return_counts=True)
-        full = uniq[counts == 7]
-        if len(full) == 0:
-            continue
-        keep = ~np.isin(parents, full)
-        out = np.unique(np.concatenate([out[~m], fine[keep], full]))
-    return out
-
-
-def h3_uncompact_np(cells: np.ndarray, res: int) -> np.ndarray:
-    """Expand every cell to its complete res-`res` descendant set (inverse of
-    compact for a full cover). Output is sorted unique ids."""
-    cells = np.atleast_1d(np.asarray(cells, dtype=np.int64))
-    if len(cells) == 0:
-        return cells
-    _, _, _, cres = h3_unpack(cells)
-    if (cres > res).any():
-        raise ValueError("cell finer than target res")
-    out = []
-    for r in np.unique(cres):
-        cur = cells[cres == r]
-        for _ in range(res - int(r)):
-            cur = h3_children_np(cur).ravel()
-        out.append(cur)
-    return np.unique(np.concatenate(out))
-
-
 def _disk_offsets(k: int) -> np.ndarray:
     """All axial offsets within hex distance k: (2k+1 rows, 2) ints."""
     offs = []
@@ -398,31 +351,6 @@ def _session_cache_key():
         return None
     sc = s.sparkContext
     return (sc.applicationId, sc.startTime)
-
-
-@functools.lru_cache(maxsize=64)
-def _multi_res_udf(rl: tuple[int, ...], _skey):
-    # creating (and cloudpickling) a pandas UDF costs ~0.1-0.3s of driver
-    # time; pip_join builds one per call, so the UDF is cached per res
-    # tuple (part of the r2 pip_assign plan-build regression)
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType
-
-    @pandas_udf(ArrayType(LongType()))
-    def _enc_multi(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        xyz = _latlon_to_xyz(lat_s.to_numpy(np.float64), lon_s.to_numpy(np.float64))
-        cols = h3_encode_multi_np(xyz, list(rl))
-        return pd.Series(list(np.stack(cols, axis=1)))
-
-    return _enc_multi
-
-
-def multi_res_cells(lat: Column, lon: Column, res_list: list[int]) -> Column:
-    """array<long> of cell ids at each res in res_list, computed in ONE
-    Arrow round trip sharing one sphere projection (h3_encode_multi_np) —
-    the encode surface for multi-resolution joins (explode to (res, cell)
-    and equi-join instead of re-scanning the table once per res)."""
-    return _multi_res_udf(tuple(res_list), _session_cache_key())(lat, lon)
 
 
 @functools.lru_cache(maxsize=64)

@@ -1,19 +1,28 @@
-"""Polygon (bbox) -> covering cell set at adaptive resolution.
+"""Polygon (bbox) -> covering H3-style cell set at adaptive resolution.
+
+The spatial JOINS do not use these covers: pip_join, pip_ring_join,
+knn_join and bbox_overlap_join all take their candidates from the one
+uniform lon/lat grid in spatial/grid.py. H3 covers serve only where cell
+ids are output payload — the flagship's cell_p5 join (pipeline.py) and the
+`cover_cells` SQL UDTF.
 
 The filter-refine contract: for every point p inside bbox B,
 `h3_encode(p, res(B))` MUST be in `cover(B)` (no false negatives; false
-positives are removed by the exact refine predicate in pip.py). The cover is
-built by enumerating the hex lattice directly on each icosahedron face the
-bbox touches — O(cells), never O(area/sample_step^2) — with generous pads
-for gnomonic distortion and face-boundary clipping.
+positives are removed by the flagship's exact refine predicate). The cover
+is built by enumerating the hex lattice directly on each icosahedron face
+the bbox touches — O(cells), never O(area/sample_step^2) — with generous
+pads for gnomonic distortion and face-boundary clipping. A face is
+enumerated when some bbox sample maps to it OR lies within twice the
+sample spacing of mapping to it, so a face that enters the bbox between
+two samples is not missed.
 
 Resolution is chosen per-polygon (SURVEY.md §4.3 "resolution selection"):
 the finest res in [res_min, res_max] whose estimated cover stays under
 `max_cells`. Big collection polygons get res 5-6, small item footprints get
 res 8-9 — exactly the H3 res 5-9 band from BASELINE.json.
 
-`fully_inside` marks cells that cannot touch the bbox boundary; pip.py skips
-the exact predicate for those rows (the classic filter-refine split).
+`fully_inside` marks cells that cannot touch the bbox boundary; the flagship
+skips the exact predicate for those rows (the classic filter-refine split).
 """
 
 from __future__ import annotations
@@ -42,9 +51,8 @@ _DISTORT = 1.7
 
 
 def cell_area_rad2(res: int) -> float:
-    """Area (rad^2) of one hex cell at `res` — the ONE place the lattice
-    area model lives; adaptive_res and overlap.py's vectorized res pickers
-    all derive from it so they can never drift apart."""
+    """Area (rad^2) of one hex cell at `res` (the lattice area model
+    adaptive_res sizes covers with)."""
     s = h3x.res_spacing(res)
     return (math.sqrt(3.0) / 2.0) * s * s
 
@@ -82,21 +90,36 @@ def cover_bbox_np(west: float, south: float, east: float, north: float, res: int
     glon, glat = glon.ravel(), glat.ravel()
 
     xyz = h3x._latlon_to_xyz(glat, glon)
-    faces, zp = h3x._xyz_to_face_plane(xyz)
+    dots = xyz @ h3x._FACE_CENTERS.T
     xform = h3x._RES_XFORM[res]
-    zl = zp * xform
-    bf = zl.imag / h3x._TAU.imag
-    af = zl.real - 0.5 * bf
 
     # pad in lattice units: sampling gap + rounding + face-clip slack
     gap_rad = math.radians(max((east - west) / (nx - 1) * coslat, (north - south) / (ny - 1)))
     pad = int(math.ceil(gap_rad * _DISTORT / spacing)) + 3
 
+    # a face can enter the bbox BETWEEN samples without being any sample's
+    # max-dot face; a point within gap of sample p moves each dot by at most
+    # gap, so such a face f has dot(p, c_f) >= max_dot(p) - 2 * gap at some
+    # sample p. Enumerate those faces too, ranging each one's lattice over
+    # the near samples projected onto its plane; a face some sample maps to
+    # is ranged over its own samples, whose pad covers the gaps between them
+    faces = dots.argmax(axis=1)
+    own = faces[:, None] == np.arange(dots.shape[1])[None, :]
+    near = dots >= dots.max(axis=1, keepdims=True) - 2.0 * gap_rad
+
     cells_all, full_all = [], []
-    for f in np.unique(faces):
-        m = faces == f
-        a_lo, a_hi = int(np.floor(af[m].min())) - pad, int(np.ceil(af[m].max())) + pad
-        b_lo, b_hi = int(np.floor(bf[m].min())) - pad, int(np.ceil(bf[m].max())) + pad
+    for f in np.nonzero(near.any(axis=0))[0]:
+        m = own[:, f] if own[:, f].any() else near[:, f]
+        # same gnomonic formula as h3x._xyz_to_face_plane, so a face's own
+        # samples land on the lattice exactly where the encoder puts them
+        fm = np.full(int(m.sum()), f)
+        x = np.einsum("...k,...k->...", xyz[m], h3x._FACE_E1[fm]) / dots[m, f]
+        y = np.einsum("...k,...k->...", xyz[m], h3x._FACE_E2[fm]) / dots[m, f]
+        zl = (x + 1j * y) * xform
+        bf = zl.imag / h3x._TAU.imag
+        af = zl.real - 0.5 * bf
+        a_lo, a_hi = int(np.floor(af.min())) - pad, int(np.ceil(af.max())) + pad
+        b_lo, b_hi = int(np.floor(bf.min())) - pad, int(np.ceil(bf.max())) + pad
         aa, bb = np.meshgrid(np.arange(a_lo, a_hi + 1), np.arange(b_lo, b_hi + 1))
         aa, bb = aa.ravel().astype(np.int64), bb.ravel().astype(np.int64)
         # candidate centers -> lat/lon (through this face's plane)
@@ -222,11 +245,16 @@ def cover_bbox_batch_np(west: np.ndarray, south: np.ndarray, east: np.ndarray,
     bf = zl.imag / h3x._TAU.imag
     af = zl.real - 0.5 * bf
 
-    # one face per box (reduceat over the ragged sample groups)
+    # one face per box (reduceat over the ragged sample groups), and no
+    # other face within cover_bbox_np's 2 * gap near-face margin of any
+    # sample — those boxes take the per-polygon path
     scnt = nx0 * ny0
     sstart = np.concatenate([[0], np.cumsum(scnt)[:-1]])
-    one_face = (np.minimum.reduceat(faces, sstart)
-                == np.maximum.reduceat(faces, sstart))
+    gap0 = np.radians(np.maximum((e0 - w0) / (nx0 - 1) * cl0, (n0 - s0) / (ny0 - 1)))
+    dots = xyz @ h3x._FACE_CENTERS.T
+    n_near = (dots >= dots.max(axis=1, keepdims=True) - 2.0 * gap0[sbox][:, None]).sum(axis=1)
+    one_face = ((np.minimum.reduceat(faces, sstart) == np.maximum.reduceat(faces, sstart))
+                & (np.maximum.reduceat(n_near, sstart) == 1))
     handled = np.zeros(n, bool)
     handled[sidx[one_face]] = True
     keep_boxes = np.nonzero(one_face)[0]
@@ -239,13 +267,11 @@ def cover_bbox_batch_np(west: np.ndarray, south: np.ndarray, east: np.ndarray,
     bf_hi = np.maximum.reduceat(bf, sstart)[keep_boxes]
     face_of = faces[sstart][keep_boxes]
     w1, s1, e1, n1 = w0[keep_boxes], s0[keep_boxes], e0[keep_boxes], n0[keep_boxes]
-    nx1, ny1, cl1 = nx0[keep_boxes], ny0[keep_boxes], cl0[keep_boxes]
+    cl1 = cl0[keep_boxes]
     orig = sidx[keep_boxes]
 
     # pad in lattice units: sampling gap + rounding + face-clip slack
-    gap_rad = np.radians(np.maximum((e1 - w1) / (nx1 - 1) * cl1,
-                                    (n1 - s1) / (ny1 - 1)))
-    pad = np.ceil(gap_rad * _DISTORT / spacing).astype(np.int64) + 3
+    pad = np.ceil(gap0[keep_boxes] * _DISTORT / spacing).astype(np.int64) + 3
     a_lo = np.floor(af_lo).astype(np.int64) - pad
     a_hi = np.ceil(af_hi).astype(np.int64) + pad
     b_lo = np.floor(bf_lo).astype(np.int64) - pad
@@ -276,65 +302,6 @@ def cover_bbox_batch_np(west: np.ndarray, south: np.ndarray, east: np.ndarray,
     # sort by (box, cell) to match cover_bbox_np's sorted-unique layout
     order = np.lexsort((cells, box))
     return orig[box[order]], cells[order], full[order], handled
-
-
-def cover_bbox_compact_np(west: float, south: float, east: float, north: float,
-                          res: int, min_res: int = 0) -> tuple[np.ndarray, np.ndarray]:
-    """Multi-res compact cover: interior (fully-inside) cells collapse to
-    their aperture-7 ancestors wherever a complete 7-child set is present;
-    boundary cells stay at `res` for the exact refine. Returns
-    (compact_interior_cells, boundary_cells). Exact inverse:
-    h3_uncompact_np(interior, res) reproduces the fine interior set —
-    the storage/broadcast win for large polygons is ~7x per collapsed level.
-    min_res bounds the collapse (see h3_compact_np)."""
-    cells, full = cover_bbox_np(west, south, east, north, res)
-    return h3x.h3_compact_np(cells[full], min_res), np.sort(cells[~full])
-
-
-def merge_envelopes(boxes, max_k: int = 4) -> list[tuple[float, float, float, float]]:
-    """Merge bboxes into at most max_k covering envelopes: union-find merge
-    of overlapping boxes to a fixpoint, then greedy smallest-waste pair
-    merges down to max_k. The result is a SUPERSET of the input union, so
-    it is safe anywhere a bbox prefilter must never drop a qualifying row.
-
-    Why bound the clause count: each envelope becomes one pushdown-ready
-    4-comparison range clause, and when the point columns are DERIVED
-    expressions (not stored attributes) predicate pushdown inlines the full
-    column arithmetic into EVERY comparison — measured ~45 ms per clause
-    over a 150k-row single-split scan at sf1.0, so a 24-box OR-chain cost
-    1.3 s where 4 merged envelopes cost ~0.2 s. On stored columns the
-    clauses are plain compares and more of them only sharpens min/max
-    pruning; max_k trades a little of that sharpness for a bounded worst
-    case on both kinds of input. boxes: iterable of (w, s, e, n)."""
-    envs = [list(map(float, b)) for b in boxes]
-    changed = True
-    while changed:  # union-find overlap merge to fixpoint
-        changed = False
-        out: list[list[float]] = []
-        for b in envs:
-            for o in out:
-                if b[0] <= o[2] and b[2] >= o[0] and b[1] <= o[3] and b[3] >= o[1]:
-                    o[0] = min(o[0], b[0]); o[1] = min(o[1], b[1])
-                    o[2] = max(o[2], b[2]); o[3] = max(o[3], b[3])
-                    changed = True
-                    break
-            else:
-                out.append(b)
-        envs = out
-    while len(envs) > max_k:  # greedy: merge the pair wasting least area
-        best, bi, bj = None, 0, 1
-        for i in range(len(envs)):
-            for j in range(i + 1, len(envs)):
-                a, b = envs[i], envs[j]
-                u = ((max(a[2], b[2]) - min(a[0], b[0]))
-                     * (max(a[3], b[3]) - min(a[1], b[1])))
-                waste = u - (a[2] - a[0]) * (a[3] - a[1]) - (b[2] - b[0]) * (b[3] - b[1])
-                if best is None or waste < best:
-                    best, bi, bj = waste, i, j
-        a, b = envs[bi], envs.pop(bj)
-        a[0] = min(a[0], b[0]); a[1] = min(a[1], b[1])
-        a[2] = max(a[2], b[2]); a[3] = max(a[3], b[3])
-    return [tuple(b) for b in envs]
 
 
 # Shared driver-dim contract: a geometry table at or below this row count is
@@ -460,182 +427,6 @@ def covers_df(polys: DataFrame, res_min: int = 5, res_max: int = 9,
             yield pd.concat(parts, ignore_index=True) if parts else empty
 
     return polys.mapInPandas(gen, COVER_SCHEMA)
-
-
-COVER_EXPANDED_SCHEMA = StructType(
-    [
-        StructField("poly_id", StringType(), False),
-        StructField("lvl", IntegerType(), False),
-        StructField("nat", BooleanType(), False),
-        StructField("key", LongType(), False),
-        StructField("west", DoubleType(), False),
-        StructField("south", DoubleType(), False),
-        StructField("east", DoubleType(), False),
-        StructField("north", DoubleType(), False),
-    ]
-)
-
-
-def _validate_levels(fine_res: int, levels: list[int]) -> list[int]:
-    """The completeness argument REQUIRES a contiguous level range ending at
-    fine_res: with a gap (or fine_res missing), cells whose compact res
-    lands in the hole emit no native row and the at-least-one-side-native
-    join silently drops real pairs. Fail loudly at the API boundary."""
-    lvls = sorted({int(l) for l in levels})
-    if not lvls or lvls[-1] != fine_res or lvls != list(range(lvls[0], fine_res + 1)):
-        raise ValueError(
-            f"levels must be a contiguous range ending at fine_res={fine_res}; got {levels}"
-        )
-    return lvls
-
-
-def _compact_expanded_arrays(wv, sv, ev, nv, fine_res: int, lvls: list[int]
-                             ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Shared numpy body for the compact-expanded cover: batched fine
-    covers -> per-box compaction (only boxes that HAVE interior cells pay
-    the python loop) -> per-level ancestor expansion -> per-(box, lvl, key)
-    dedup. Returns (box_idx, lvl, nat, key), box-major.
-
-    The dedup matters: every boundary cell under the same coarse ancestor
-    would otherwise emit its own duplicate non-native row at that level —
-    up to ~7x per collapsed level of join-input duplication that distinct()
-    would have to absorb downstream."""
-    lo = lvls[0]
-    n = len(wv)
-    # batched fine covers; per-polygon fallback for multi-face/huge boxes
-    bi, cells, full, handled = cover_bbox_batch_np(wv, sv, ev, nv, fine_res)
-    todo = np.nonzero(~handled)[0]
-    if len(todo):
-        extra_c, extra_f, extra_b = [], [], []
-        for i in todo:
-            c, f = cover_bbox_np(wv[i], sv[i], ev[i], nv[i], fine_res)
-            extra_c.append(c)
-            extra_f.append(f)
-            extra_b.append(np.full(len(c), i, np.int64))
-        cells = np.concatenate([cells] + extra_c)
-        full = np.concatenate([full] + extra_f)
-        bi = np.concatenate([bi] + extra_b)
-    order = np.argsort(bi, kind="stable")
-    bi, cells, full = bi[order], cells[order], full[order]
-
-    # compact ONLY the boxes with interior cells (large polygons — rare)
-    has_int = np.bincount(bi[full], minlength=n) > 0 if full.any() else np.zeros(n, bool)
-    if has_int.any():
-        keep = ~has_int[bi]
-        parts_c = [cells[keep]]
-        parts_b = [bi[keep]]
-        starts = np.searchsorted(bi, np.arange(n + 1))
-        for i in np.nonzero(has_int)[0]:
-            sl = slice(starts[i], starts[i + 1])
-            c, f = cells[sl], full[sl]
-            cc = np.concatenate([h3x.h3_compact_np(c[f], lo), c[~f]])
-            parts_c.append(cc)
-            parts_b.append(np.full(len(cc), i, np.int64))
-        cells = np.concatenate(parts_c)
-        bi = np.concatenate(parts_b)
-
-    res_of = h3x.h3_unpack(cells)[3] if len(cells) else np.empty(0, np.int64)
-    out_key, out_lvl, out_box, out_nat = [], [], [], []
-    for l in lvls:
-        m = res_of >= l
-        if not m.any():
-            continue
-        out_key.append(h3x.h3_parent_np(cells[m], l))
-        out_lvl.append(np.full(int(m.sum()), l, np.int32))
-        out_box.append(bi[m])
-        out_nat.append(res_of[m] == l)
-    if not out_key:
-        e = np.empty(0, np.int64)
-        return e, e.astype(np.int32), np.empty(0, bool), e
-    key = np.concatenate(out_key)
-    lvl = np.concatenate(out_lvl)
-    bx = np.concatenate(out_box)
-    nat = np.concatenate(out_nat)
-    # dedup (box, lvl, key); a group is native if ANY of its rows is
-    order = np.lexsort((key, lvl, bx))
-    key, lvl, bx, nat = key[order], lvl[order], bx[order], nat[order]
-    new = np.ones(len(key), bool)
-    new[1:] = (bx[1:] != bx[:-1]) | (lvl[1:] != lvl[:-1]) | (key[1:] != key[:-1])
-    gstart = np.nonzero(new)[0]
-    nat_g = np.maximum.reduceat(nat.astype(np.int8), gstart).astype(bool)
-    return bx[gstart], lvl[gstart], nat_g, key[gstart]
-
-
-def covers_pdf_compact_expanded(polys_pdf: pd.DataFrame, fine_res: int,
-                                levels: list[int]) -> pd.DataFrame:
-    """Driver-side twin of covers_df_compact_expanded for dim-sized region
-    tables: pure numpy, no Spark jobs (the covers_pdf counterpart for the
-    compact join's broadcast path)."""
-    lvls = _validate_levels(fine_res, levels)
-    wv = polys_pdf["west"].to_numpy(np.float64)
-    sv = polys_pdf["south"].to_numpy(np.float64)
-    ev = polys_pdf["east"].to_numpy(np.float64)
-    nv = polys_pdf["north"].to_numpy(np.float64)
-    pid = polys_pdf["poly_id"].to_numpy(object)
-    bx, lvl, nat, key = _compact_expanded_arrays(wv, sv, ev, nv, fine_res, lvls)
-    return pd.DataFrame({
-        "poly_id": pid[bx], "lvl": lvl, "nat": nat, "key": key,
-        "west": wv[bx], "south": sv[bx], "east": ev[bx], "north": nv[bx],
-    })
-
-
-def covers_df_compact_expanded(polys: DataFrame, fine_res: int,
-                               levels: list[int],
-                               min_partitions: int | None = None) -> DataFrame:
-    """Distributed COMPACT multi-res covers, pre-expanded into join rows.
-
-    For each polygon: the fine-res cover is compacted (interior cells
-    collapse to aperture-7 ancestors, bounded at min(levels)); each compact
-    cell of res r then emits one (lvl, key=ancestor(cell, lvl)) row per
-    lvl in `levels` with lvl <= r, flagged nat = (lvl == r) on its NATIVE
-    level. Joining two such expansions on (lvl, key) with the condition
-    (A.nat OR B.nat) yields a complete candidate set: two intersecting
-    bboxes share a point whose fine cell c is represented in both compact
-    covers by SOME ancestor (res ra, rb); at lvl = min(ra, rb) both sides
-    emit ancestor(c, lvl) — ancestry composition is exact lattice math —
-    and the side with the coarser representation is NATIVE at that level
-    by construction, so the join cannot miss the pair (duplicates from
-    coarser shared levels are removed by the caller's distinct). The
-    native-side requirement is what kills the coarse-level quadratic:
-    without it, every fine cell's ancestor rows join every OTHER fine
-    cell's ancestor rows at the coarsest level — measured 30x MORE
-    candidates than the single-res join on a dense fixture; with it,
-    coarse levels only match against genuinely-collapsed interiors.
-
-    The expansion happens INSIDE the one mapInPandas (numpy h3_parent_np
-    per level over the whole batch): the cover subtree is computed once,
-    with no per-level union branches or re-scans. Expansion multiplies
-    compact rows by <= len(levels) (typically 4) while compaction divides
-    large-polygon interiors by up to 7^(len(levels)-1) — see
-    bbox_overlap_join_compact for the measured regime analysis."""
-    if min_partitions is None:
-        min_partitions = polys.sparkSession.sparkContext.defaultParallelism
-    if polys.rdd.getNumPartitions() < min_partitions:
-        polys = polys.repartition(min_partitions)
-    lvls = _validate_levels(fine_res, levels)
-
-    empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in COVER_EXPANDED_SCHEMA.fields})
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                yield empty
-                continue
-            wv = b["west"].to_numpy(np.float64)
-            sv = b["south"].to_numpy(np.float64)
-            ev = b["east"].to_numpy(np.float64)
-            nv = b["north"].to_numpy(np.float64)
-            pid = b["poly_id"].to_numpy(object)
-            bx, lvl, nat, key = _compact_expanded_arrays(wv, sv, ev, nv, fine_res, lvls)
-            if len(bx) == 0:
-                yield empty
-                continue
-            yield pd.DataFrame({
-                "poly_id": pid[bx], "lvl": lvl, "nat": nat, "key": key,
-                "west": wv[bx], "south": sv[bx], "east": ev[bx], "north": nv[bx],
-            })
-
-    return polys.mapInPandas(gen, COVER_EXPANDED_SCHEMA)
 
 
 def register_cover_udtf(spark: SparkSession, name: str = "cover_cells") -> None:

@@ -1,26 +1,21 @@
-"""kNN via expanding cell-cover candidate fetch: nearest images to query
+"""kNN via expanding grid-cell candidate fetch: nearest images to query
 centroids.
 
 BASELINE.json: "answers kNN queries (nearest-image-to-centroid) with
 cell-ring expansion". Queries (collection centroids) are few; points are the
-10^12-row images table. Per iteration:
+10^12-row images table. Per iteration, with search radius R:
 
-  candidate cells = cover(query bbox of radius R)     [driver-side numpy]
-  candidates      = points ⋈ broadcast(cells)          [scan + broadcast join]
+  candidate cells = box_cells(query bbox of radius R, step R)  [JVM explode]
+  candidates      = points(point_cell, step R) ⋈ broadcast(cells)
   top-k           = Window.partitionBy(query).orderBy(dist) row_number <= k
 
-R doubles until every query's k-th candidate lies within R (scaled-degree
-metric) — at that point the candidate set provably contains the true top-k
-(cover_bbox_np is superset-guaranteed and property-tested), so the final
-window is EXACT. The cover-based expansion is the ring expansion in bbox
-form: it composes rings of cells around the query and — unlike raw lattice
-rings — stays correct across icosahedron face seams at coarse resolutions.
-
-The cell resolution auto-selects from point density (one agg), so sparse
-tables use coarse cells (few candidate cells, one or two passes) and dense
-tables use fine ones. At warehouse scale the points table is bucketed by
-cell prefix (tables/lineage.py), so the broadcast cell-set join prunes file
-reads instead of scanning.
+R doubles until every query's k-th candidate lies within 0.98R
+(scaled-degree metric) — at that point the candidate set provably contains
+the true top-k (every point within R lies inside its query's bbox, and the
+bbox's grid cells cover it exactly), so the final window is EXACT. The
+"cell ring" is the block of grid cells around each query: the one grid
+generator every spatial join shares (spatial/grid.py), so the whole round
+is JVM column math with no Python boundary.
 
 Distance metric: squared equirectangular "scaled degrees"
 (dx = dlon * cos(mid_lat), dy = dlat) — monotone in true distance at these
@@ -37,22 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stac_to_geocore_spark.cells import h3x
-from stac_to_geocore_spark.spatial.cover import cover_bbox_np
-
-DEG = 180.0 / math.pi
-
-
-def _pick_res(n: int, bbox_area_deg2: float, k: int, res_min: int = 2, res_max: int = 9) -> int:
-    """Finest res whose cells hold >= ~k/12 points on average (uniform
-    estimate): keeps candidate-cell counts small without starving the first
-    pass. Skewed data still converges — R doubles until exactness is proven."""
-    for res in range(res_max, res_min - 1, -1):
-        s_deg = h3x.res_spacing(res) * DEG
-        cell_area = 0.866 * s_deg * s_deg
-        if n * cell_area / max(bbox_area_deg2, 1e-9) >= max(1.0, k / 12.0):
-            return res
-    return res_min
+from stac_to_geocore_spark.spatial.grid import box_cells, point_cell
 
 
 def knn_join(
@@ -62,13 +42,11 @@ def knn_join(
     point_id: str = "image_id",
     lon: str = "lon",
     lat: str = "lat",
-    res: int | None = None,
     max_iter: int = 12,
 ) -> DataFrame:
     """Exact k nearest points for each query row.
 
     queries: pandas DataFrame (query_id, lon, lat) — small by contract.
-    res=None auto-selects cell resolution from point density.
     Returns (query_id, point_id, rank, dist2), rank 1..k (dist2 in squared
     scaled degrees, rounded to 9 dp for stable hashing).
 
@@ -87,11 +65,10 @@ def knn_join(
         )
 
     # NO unbounded persist of the points table: at 10^12 rows a full-table
-    # cache is a multi-TB liability. Each round re-scans through the
-    # JVM bbox pre-filter instead — the filter is exactly what parquet
-    # min/max pruning pushes down, and rounds are almost always 1 thanks
-    # to the 3x initial-radius padding, so the table is read twice total
-    # (extent agg + one filtered candidate scan).
+    # cache is a multi-TB liability. Each round re-scans and probes the
+    # broadcast cell set instead; rounds are almost always 1 thanks to the
+    # 3x initial-radius padding, so the table is read twice total (extent
+    # agg + one candidate scan).
     base = points.select(
         F.col(point_id).alias("point_id"), F.col(lon).alias("p_lon"), F.col(lat).alias("p_lat")
     )
@@ -112,69 +89,32 @@ def knn_join(
     k = min(k, n_pts)
     area = max(1e-9, (ext["e"] - ext["w"]) * (ext["nn"] - ext["s"])
                * math.cos(math.radians((ext["s"] + ext["nn"]) / 2.0)))
-    if res is None:
-        res = _pick_res(n_pts, area, k)
     # initial radius: uniform-density estimate of the k-th neighbor
     # distance, padded 3x so the guarantee usually closes on the first
     # pass (each extra pass costs a full join+window round); candidate
-    # cells grow ~9x but the cover stays tiny relative to the join
+    # cells grow ~9x but the cell set stays tiny relative to the join
     R = 3.0 * math.sqrt(max(1e-12, k * area / (math.pi * max(1, n_pts))))
     for _ in range(max_iter):
-        cell_rows = []
-        bboxes = []
+        qrows = []
         for i, qid in enumerate(qids):
             cos_f = max(0.05, math.cos(math.radians(min(89.0, abs(qlat[i]) + R))))
-            w, s = qlon[i] - R / cos_f, max(-89.9, qlat[i] - R)
-            e, n = qlon[i] + R / cos_f, min(89.9, qlat[i] + R)
-            cells, _full = cover_bbox_np(w, s, e, n, res)
-            cell_rows.extend(
-                (qid, float(qlon[i]), float(qlat[i]), int(c)) for c in cells
-            )
-            bboxes.append((w, s, e, n))
-        # JVM-side pre-filter: any point with scaled distance <= R lies
-        # inside its query's bbox (dy <= R; dx <= R implies dlon <= R/cos),
-        # so dropping out-of-bbox points BEFORE the python cell encode
-        # cannot remove a true top-k member once the <=0.98R exactness
-        # check passes — out-of-bbox points all have distance > R >= kth
-        # distance. Uncached, this is also the predicate parquet min/max
-        # pruning wants. CAPPED at 64 clauses (same reason as pip.py:90 —
-        # a thousands-deep Or-chain stalls Catalyst's recursive tree
-        # transforms); beyond the cap, collapse to the single min/max
-        # envelope of all query bboxes — still a correct superset filter.
-        # clause count bounded by MERGED envelopes (spatial/cover.py): a
-        # superset of the query bboxes, so the <=0.98R exactness argument
-        # is untouched, while per-clause cost on derived point columns
-        # (pushdown inlines the column arithmetic into every comparison —
-        # ~45 ms/clause on a single-split 150k-row scan) stays bounded.
-        if len(bboxes) <= 64:
-            from stac_to_geocore_spark.spatial.cover import merge_envelopes
-
-            envs = merge_envelopes(bboxes, max_k=4)
-        else:
-            envs = [(min(b[0] for b in bboxes), min(b[1] for b in bboxes),
-                     max(b[2] for b in bboxes), max(b[3] for b in bboxes))]
-        bbox_pred = None
-        for w, s, e, n in envs:
-            q_pred = (
-                (F.col("p_lon") >= w) & (F.col("p_lon") <= e)
-                & (F.col("p_lat") >= s) & (F.col("p_lat") <= n)
-            )
-            bbox_pred = q_pred if bbox_pred is None else (bbox_pred | q_pred)
-        cells_df = spark.createDataFrame(
-            cell_rows, "query_id string, q_lon double, q_lat double, cell long"
-        )
-        # no fan_out here (unlike pip_join): the bbox filter leaves a small
-        # candidate set, and the extra round-robin exchange+stage measured
-        # SLOWER than the single-split encode it parallelizes (1.29 s ->
-        # 1.51 s at sf1.0); at scale the filtered rows keep the scan's own
-        # partitioning, which is already parallel
-        pts = base.filter(bbox_pred).withColumn(
-            "cell", h3x.h3_encode(F.col("p_lat"), F.col("p_lon"), res)
-        )
+            qrows.append((qid, float(qlon[i]), float(qlat[i]),
+                          float(qlon[i] - R / cos_f), float(max(-89.9, qlat[i] - R)),
+                          float(qlon[i] + R / cos_f), float(min(89.9, qlat[i] + R))))
+        # every point with scaled distance <= R lies inside its query's bbox
+        # (dy <= R; dx <= R implies dlon <= R/cos), and the bbox's grid
+        # cells at step R cover it exactly — so the candidates are a
+        # superset of the in-radius points, which the <=0.98R check needs
+        cells = F.broadcast(box_cells(spark.createDataFrame(
+            qrows, "query_id string, q_lon double, q_lat double, "
+                   "west double, south double, east double, north double",
+        ), R, R).select("query_id", "q_lon", "q_lat", "gx", "gy"))
+        gx, gy = point_cell(F.col("p_lon"), F.col("p_lat"), R, R)
+        pts = base.select("point_id", "p_lon", "p_lat", gx.alias("gx"), gy.alias("gy"))
         mid = F.radians((F.col("q_lat") + F.col("p_lat")) / 2.0)
         dx = (F.col("q_lon") - F.col("p_lon")) * F.cos(mid)
         dy = F.col("q_lat") - F.col("p_lat")
-        cand = pts.join(F.broadcast(cells_df), "cell").withColumn("dist2", dx * dx + dy * dy)
+        cand = pts.join(cells, ["gx", "gy"]).withColumn("dist2", dx * dx + dy * dy)
         w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("point_id").asc())
         topk = (
             cand.withColumn("rank", F.row_number().over(w))
@@ -185,10 +125,8 @@ def knn_join(
         by_q: dict = {}
         for row in rows:
             by_q.setdefault(row["query_id"], []).append(row)
-        # every point with scaled-degree distance <= R lies inside the
-        # query bbox (dy <= R; dx <= R => dlon <= R/cos), and the cover is
-        # a proven superset of the bbox — so kth_dist <= R*0.98 certifies
-        # the candidate set contains the true top-k
+        # the candidates cover every point within R of its query, so
+        # kth_dist <= R*0.98 certifies they contain the true top-k
         satisfied = all(
             q in by_q
             and len(by_q[q]) >= k
@@ -204,5 +142,5 @@ def knn_join(
         R *= 2.0
     raise RuntimeError(
         f"knn_join did not converge after {max_iter} radius doublings "
-        f"(final R={R}); raise max_iter or pass a coarser res"
+        f"(final R={R}); raise max_iter"
     )

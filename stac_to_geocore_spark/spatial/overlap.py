@@ -1,212 +1,52 @@
-"""Region-region spatial join: bbox overlap via shared grid-cell covers.
+"""Region-region spatial join: bbox overlap via shared grid cells.
 
 pip.py joins points to regions; this joins REGIONS to REGIONS (collection
 footprints vs AOIs, tiles vs collections, ...). Filter-refine shape:
 
-  grid_cells(A) equi-join grid_cells(B) on (gx, gy)  ->  candidate pairs
+  box_cells(A) equi-join box_cells(B) on (gx, gy)  ->  candidate pairs
   refine: exact bbox-intersection predicate (pure JVM column math)
   dedup:  anchor-cell rule (pure JVM) — each pair survives exactly once
 
-Both inputs are axis-aligned bboxes, so the candidate cells of a box under
-a uniform lon/lat grid with steps (dx, dy) are EXACTLY the floor-division
-ranges [floor(w/dx)..floor(e/dx)] x [floor(s/dy)..floor(n/dy)] — generated
-with sequence()+explode in whole-stage-codegen JVM, no Python boundary and
-no padding ring (the hex cover needed one for its superset guarantee; the
-grid ranges are already exact). Completeness: intersecting boxes share the
-reference corner p = (max(wa, wb), max(sa, sb)); p's cell is in both
-ranges, so the equi-join cannot miss a pair.
+Candidates come from the one grid generator every spatial join shares
+(spatial/grid.py): exact floor-division cell ranges, exploded in JVM.
+Completeness: intersecting boxes share the reference corner
+p = (max(wa, wb), max(sa, sb)); p's cell is in both ranges, so the
+equi-join cannot miss a pair.
 
 The anchor-cell rule makes the join output DISTINCT BY CONSTRUCTION: a
 candidate row is kept only when its (gx, gy) IS the reference corner's
 cell — one cell per pair, so no distinct()/shuffle-dedup of the candidate
 set is ever needed. (The hex-cover design duplicated each pair once per
 shared cover cell — measured 8.8x at sf1.0 — and paid a full exchange +
-hash aggregate to dedup; that was >half the query's wall time. Guide §8:
-decide with small rows / use what you know that the optimizer does not.)
+hash aggregate to dedup; that was >half the query's wall time.)
 
 Scale shape: each side shuffles (or broadcasts) only (id, gx, gy, bbox)
 rows; (gx, gy) is the natural bucketing column pair, so two pre-bucketed
 region tables co-locate and the join is shuffle-free. Each side is
-measured with ONE narrow pure-JVM stats aggregation (count + mean/max box
-extents — five scalars) that doubles as the routing probe: a dim-sized
-side broadcasts its exploded cells; big sides equi-join cell-bucketed
-with a pinned sort-merge — nothing but scalars is ever collected to the
-driver. The old bounded `limit(driver_plan_max+1).toPandas()` probe and
-pandas-UDF res-stats pass are gone from this operator.
+measured with ONE narrow pure-JVM stats aggregation (grid_side_stats —
+five scalars) that doubles as the routing probe: a dim-sized side
+broadcasts its exploded cells; big sides equi-join cell-bucketed with a
+pinned sort-merge — nothing but scalars is ever collected to the driver.
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
-from stac_to_geocore_spark.spatial.cover import (
-    COVER_EXPANDED_SCHEMA,
-    COVER_SCHEMA,
-    DRIVER_DIM_MAX,
-    adaptive_res,
-    cell_area_rad2,
-    covers_df,
-    covers_df_compact_expanded,
-    covers_pdf,
+from stac_to_geocore_spark.spatial.cover import DRIVER_DIM_MAX
+from stac_to_geocore_spark.spatial.grid import (
+    MAX_CELLS,
+    box_cells,
+    grid_side_stats,
+    grid_steps,
 )
-
-
-def _min_res_pdf(pdf, res_min: int, res_max: int, max_cells: int) -> int:
-    res = res_max
-    for r in pdf.itertuples(index=False):
-        res = min(res, adaptive_res(r.west, r.south, r.east, r.north,
-                                    res_min, res_max, max_cells))
-    return res
-
-
-def _area_rad2_col():
-    # built lazily, NOT at module import: executors import this module when
-    # unpickling the _res UDF, and Column construction asserts an active
-    # SparkContext (absent on workers)
-    return (
-        F.radians(F.col("east") - F.col("west"))
-        * F.radians(F.col("north") - F.col("south"))
-        * F.cos(F.radians((F.col("south") + F.col("north")) / F.lit(2.0)))
-    )
-
-
-def _res_stats_distributed(
-    df: DataFrame, res_min: int, res_max: int, max_cells: int,
-    with_median: bool = False,
-) -> tuple[int, float, float]:
-    """(coarsest adaptive res, mean bbox area rad^2, median bbox area rad^2)
-    over a big region table in ONE narrow agg/scan: the per-row res is
-    computed in an Arrow batch, the areas in JVM column math; only three
-    scalars cross the wire. The single-res join sizes cells to the MEAN box;
-    the compact join uses the MEDIAN (robust to the large-box tail that the
-    compaction exists to absorb) — the approx-percentile digest is built
-    only when with_median is set, so the single-res path's stats scan pays
-    nothing for a statistic it discards (median is 0.0 otherwise)."""
-    from pyspark.sql.functions import pandas_udf
-
-    # adaptive_res, vectorized: res r fits iff bbox_area <= max_cells *
-    # cell_area(r); the threshold grows monotonically as r coarsens, so the
-    # satisfied set is a suffix [res_min..r*] and r* = res_min - 1 + count.
-    thresh = np.array([
-        max_cells * cell_area_rad2(r) for r in range(res_min, res_max + 1)
-    ])
-
-    @pandas_udf(IntegerType())
-    def _res(w: pd.Series, s: pd.Series, e: pd.Series, n: pd.Series) -> pd.Series:
-        wv, sv, ev, nv = (x.to_numpy(np.float64) for x in (w, s, e, n))
-        areas = np.maximum(
-            1e-12,
-            np.radians(ev - wv) * np.radians(nv - sv)
-            * np.cos(np.radians((sv + nv) / 2.0)),
-        )
-        fits = areas[:, None] <= thresh[None, :]
-        return pd.Series((res_min - 1 + fits.sum(axis=1)).clip(res_min).astype("int32"))
-
-    aggs = [
-        F.min(_res(F.col("west"), F.col("south"), F.col("east"), F.col("north"))).alias("r"),
-        F.avg(_area_rad2_col()).alias("a"),
-    ]
-    if with_median:
-        aggs.append(F.percentile_approx(_area_rad2_col(), 0.5, 10000).alias("m"))
-    row = df.select(*aggs).collect()[0]
-    return (
-        int(row["r"]) if row["r"] is not None else res_max,
-        float(row["a"]) if row["a"] is not None else 0.0,
-        float(row["m"]) if with_median and row["m"] is not None else 0.0,
-    )
-
-
-def _res_stats_pdf(pdf, res_min: int, res_max: int, max_cells: int) -> tuple[int, float, float]:
-    if len(pdf) == 0:
-        return res_max, 0.0, 0.0
-    import numpy as np
-
-    areas = (
-        np.radians(pdf["east"] - pdf["west"])
-        * np.radians(pdf["north"] - pdf["south"])
-        * np.cos(np.radians((pdf["south"] + pdf["north"]) / 2.0))
-    )
-    return (_min_res_pdf(pdf, res_min, res_max, max_cells),
-            float(np.mean(areas)), float(np.median(areas)))
-
-
-def _res_for_mean_area(mean_area_rad2: float, res_min: int, res_max: int,
-                       target_cells: float) -> int:
-    """Finest res whose cell area keeps the MEAN box's cover near
-    target_cells. adaptive_res caps the WORST box (max_cells protects the
-    cover explosion of a huge polygon); this sizes the TYPICAL box — for a
-    region-region join the cover row count is what shuffles, and a box much
-    smaller than max_cells' worth of cells gains nothing from fine cells
-    (measured: 0.1-deg boxes at res 9 cover ~430 cells each vs ~4 at the
-    mean-sized res — a 100x shuffle-volume difference for the same exact
-    result, since the refine predicate removes the extra coarse-res
-    candidates either way)."""
-    for res in range(res_max, res_min - 1, -1):
-        if mean_area_rad2 / cell_area_rad2(res) <= target_cells:
-            return res
-    return res_min
-
-
-def _grid_side_stats(df: DataFrame) -> tuple[int, float, float, float, float]:
-    """(row_count, mean_w, max_w, mean_h, max_h) of a region table in ONE
-    narrow pure-JVM aggregation. This single job replaces BOTH of the old
-    per-side jobs: the `limit(driver_plan_max+1).toPandas()` routing probe
-    AND the res-stats pass (which ran a pandas UDF over every row —
-    ArrowEvalPython over the full table, 0.78 s at sf1.0). Grid sizing
-    needs only mean/max extents, which are plain column aggregates, and
-    routing needs only the count; five scalars cross the wire."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(F.col("east") - F.col("west")).alias("mw"),
-        F.max(F.col("east") - F.col("west")).alias("xw"),
-        F.avg(F.col("north") - F.col("south")).alias("mh"),
-        F.max(F.col("north") - F.col("south")).alias("xh"),
-    ).collect()[0]
-    return (int(row["n"]),) + tuple(
-        float(v) if v is not None else 0.0
-        for v in (row["mw"], row["xw"], row["mh"], row["xh"]))
-
-
-def _grid_steps(mean_w: float, max_w: float, mean_h: float, max_h: float,
-                max_cells: int, fixed_res: int | None,
-                target_cells_per_box: float) -> tuple[float, float]:
-    """Grid steps (dx, dy) in degrees. Sized so the MEAN box covers about
-    target_cells_per_box cells (cover rows = shuffle volume; a finer grid
-    buys nothing once the exact refine is this cheap — measured at sf1.0
-    on the orders-bbox self-join: targets 0.25-1.0 are flat within noise
-    at ~2.3-2.5 s, 2.0 costs +25%, 4.0 +60%, 16.0 3x, so the default sits
-    at 0.5), floored so the LARGEST box never explodes past ~max_cells
-    cells (the explosion guard adaptive_res provided for hex covers).
-    fixed_res maps to the hex spacing of that res so existing res-pinning
-    callers keep a comparable cell size — the output is exact at ANY step,
-    so both knobs are pure performance knobs (tested invariant under res
-    choice)."""
-    from stac_to_geocore_spark.cells import h3x
-
-    if fixed_res is not None:
-        dx = dy = h3x.res_spacing(fixed_res) * (180.0 / math.pi)
-    else:
-        k = 2.0 / math.sqrt(max(0.01, target_cells_per_box))
-        dx, dy = k * mean_w, k * mean_h
-    lim = max(2.0, math.sqrt(max(1, max_cells)) - 1.0)
-    dx = max(dx, max_w / lim, 1e-12)
-    dy = max(dy, max_h / lim, 1e-12)
-    return dx, dy
 
 
 def bbox_overlap_join(
     polys_a: DataFrame,
     polys_b: DataFrame,
-    res_min: int = 3,
-    res_max: int = 9,
-    max_cells: int = 2048,
-    fixed_res: int | None = None,
+    max_cells: int = MAX_CELLS,
     driver_plan_max: int = DRIVER_DIM_MAX,
     target_cells_per_box: float = 0.5,
     salt_hot_cells: bool = True,
@@ -220,10 +60,9 @@ def bbox_overlap_join(
     per input ROW pair, so duplicated id rows produce duplicated pairs
     (bag semantics — the pre-grid implementation's distinct() also
     deduplicated dirty inputs as a side effect; dedup inputs first if ids
-    repeat). res_min/res_max are retained for signature compatibility with
-    the hex-cover era but are unused by the grid planner — cell size is
-    governed by target_cells_per_box / max_cells / fixed_res, and the
-    output is provably invariant to all three (tested).
+    repeat). Cell size is governed by target_cells_per_box / max_cells
+    (spatial/grid.grid_steps), and the output is provably invariant to
+    both (tested).
 
     Sides at or below driver_plan_max rows broadcast their exploded grid
     cells; bigger sides equi-join on (gx, gy) — the natural bucketing
@@ -259,33 +98,18 @@ def bbox_overlap_join(
     # ONE narrow stats agg per side (a self-join measures its one input
     # once); the agg doubles as the routing probe — no bounded toPandas()
     # probe, no separate stats job, nothing but scalars reaches the driver
-    n_a, mean_w, max_w, mean_h, max_h = _grid_side_stats(polys_a)
+    n_a, mean_w, max_w, mean_h, max_h = grid_side_stats(polys_a)
     n_b = n_a
     if not self_join:
-        n_b, mw, xw, mh, xh = _grid_side_stats(polys_b)
+        n_b, mw, xw, mh, xh = grid_side_stats(polys_b)
         mean_w, max_w = max(mean_w, mw), max(max_w, xw)
         mean_h, max_h = max(mean_h, mh), max(max_h, xh)
     a_small = n_a <= driver_plan_max
     b_small = n_b <= driver_plan_max
-    dx, dy = _grid_steps(mean_w, max_w, mean_h, max_h,
-                         max_cells, fixed_res, target_cells_per_box)
+    dx, dy = grid_steps(mean_w, max_w, mean_h, max_h, max_cells, target_cells_per_box)
 
     def cells(df: DataFrame) -> DataFrame:
-        # exact covered ranges under the uniform grid: floor-division
-        # endpoints + sequence/explode, all whole-stage codegen
-        return (
-            df.select(
-                "poly_id", "west", "south", "east", "north",
-                F.explode(F.sequence(
-                    F.floor(F.col("west") / F.lit(dx)),
-                    F.floor(F.col("east") / F.lit(dx)))).alias("gx"),
-            ).select(
-                "poly_id", "west", "south", "east", "north", "gx",
-                F.explode(F.sequence(
-                    F.floor(F.col("south") / F.lit(dy)),
-                    F.floor(F.col("north") / F.lit(dy)))).alias("gy"),
-            )
-        )
+        return box_cells(df.select("poly_id", "west", "south", "east", "north"), dx, dy)
 
     def tagged(cov: DataFrame, tag: str) -> DataFrame:
         return cov.select(
@@ -390,119 +214,3 @@ def bbox_overlap_join(
 
     return joined.filter(refine & anchor).select("id_a", "id_b")
 
-
-def bbox_overlap_join_compact(
-    polys_a: DataFrame,
-    polys_b: DataFrame,
-    res_min: int = 3,
-    res_max: int = 9,
-    fine_res: int | None = None,
-    collapse_levels: int = 3,
-    max_fine_cells: int = 262144,
-    target_cells_per_box: float = 4.0,
-    driver_plan_max: int = DRIVER_DIM_MAX,
-) -> DataFrame:
-    """Multi-res COMPACT variant of bbox_overlap_join for mixed-size region
-    tables: identical output, different candidate-generation trade.
-
-    The single-res join picks ONE res for both sides, capped by the
-    LARGEST box — a table mixing continent-scale AOIs with item-footprint
-    boxes is forced coarse, and dense tiny boxes then share fat cells
-    (candidate pairs grow quadratically per cell). Here the fine res is
-    sized to the MEDIAN box (robust to the AOI tail); each polygon's fine
-    cover is COMPACTED (interior 7-child sets collapse to ancestors,
-    bounded at fine_res - collapse_levels) and pre-expanded to
-    (lvl, ancestor, native-flag) join rows in one mapInPandas
-    (covers_df_compact_expanded — completeness + the native-side condition
-    that prevents a coarse-level quadratic are argued there). One
-    sort-merge equi-join on (lvl, key) with at-least-one-side-native, the
-    exact refine, then distinct.
-
-    MEASURED regime guidance (sf-like fixtures, self-join, local[8]):
-    output matched bbox_overlap_join exactly on every fixture (tiny-
-    uniform, mixed 25x, AOI 12-16 deg sparse AND dense). Candidates:
-    2.1x FEWER than single-res on the dense+AOI fixture (42.6M vs 90.6M).
-    Wall time with this CHEAP 4-compare bbox refine: single-res WON every
-    fixture (its coarse plan shuffles fewer, fatter cells and the refine
-    absorbs the extra candidates at JVM speed) — so for plain bbox
-    overlap, prefer bbox_overlap_join. This operator is the right shape
-    when the refine is EXPENSIVE (exact polygon-polygon intersection in a
-    Python kernel at ~us/candidate): there the 2x candidate reduction
-    dominates, and the same (lvl, key, nat) join machinery carries any
-    refine predicate.
-    """
-    from stac_to_geocore_spark.cells.h3x import MAX_RES
-    from stac_to_geocore_spark.spatial.cover import covers_pdf_compact_expanded
-
-    if collapse_levels < 0:
-        raise ValueError(f"collapse_levels must be >= 0, got {collapse_levels}")
-    if fine_res is not None and not (0 <= fine_res <= MAX_RES):
-        raise ValueError(f"fine_res must be in [0, {MAX_RES}], got {fine_res}")
-    spark = polys_a.sparkSession
-    self_join = polys_a is polys_b
-    pdf_a = polys_a.limit(driver_plan_max + 1).toPandas()
-    pdf_b = pdf_a if self_join else polys_b.limit(driver_plan_max + 1).toPandas()
-    a_small = len(pdf_a) <= driver_plan_max
-    b_small = len(pdf_b) <= driver_plan_max
-
-    if fine_res is None:
-        # mean-box res (the shuffle-volume knob) bounded by the coarsest
-        # res at which the WORST box's TRANSIENT fine cover (materialized
-        # per-polygon inside the cover kernel, pre-compaction) stays under
-        # max_fine_cells — a much looser cap than the single-res join's
-        # max_cells because compaction shrinks it before anything shuffles
-        sides = ((pdf_a, a_small, polys_a),) if self_join else (
-            (pdf_a, a_small, polys_a), (pdf_b, b_small, polys_b))
-        cap_res, med_area = res_max, 0.0
-        for pdf, small, df in sides:
-            r, _a, med = (
-                _res_stats_pdf(pdf, res_min, res_max, max_fine_cells)
-                if small
-                else _res_stats_distributed(df, res_min, res_max, max_fine_cells, with_median=True)
-            )
-            cap_res = min(cap_res, r)
-            med_area = max(med_area, med)
-        # MEDIAN box, not mean: a mixed table's mean area is dominated by
-        # exactly the large-box tail compaction absorbs — sizing to the
-        # median keeps cells matched to the typical (small) box, which is
-        # where candidate selectivity is won
-        med_res = _res_for_mean_area(med_area, res_min, res_max, target_cells_per_box)
-        fine_res = max(res_min, min(cap_res, med_res))
-    levels = list(range(max(0, fine_res - collapse_levels), fine_res + 1))
-
-    def side_exp(df: DataFrame, pdf, small: bool) -> DataFrame:
-        # dim-sized sides plan driver-side (pure numpy, zero Spark jobs) and
-        # broadcast — the same contract as bbox_overlap_join's covers_pdf path
-        if small:
-            return spark.createDataFrame(
-                covers_pdf_compact_expanded(pdf, fine_res, levels),
-                COVER_EXPANDED_SCHEMA,
-            )
-        return covers_df_compact_expanded(df, fine_res, levels)
-
-    exp_a = side_exp(polys_a, pdf_a, a_small)
-    if self_join:
-        lhs, rhs = exp_a.alias("A"), exp_a.alias("B")  # ReusedExchange (see bbox_overlap_join)
-        if a_small:
-            rhs = F.broadcast(rhs)
-    else:
-        lhs = exp_a.alias("A")
-        rhs = side_exp(polys_b, pdf_b, b_small).alias("B")
-        if b_small:
-            rhs = F.broadcast(rhs)
-        elif a_small:
-            lhs = F.broadcast(lhs)
-    if not (a_small or b_small):
-        lhs = lhs.hint("merge")  # same AQE-broadcast-OOM guard as bbox_overlap_join
-    return (
-        lhs.join(rhs, (F.col("A.lvl") == F.col("B.lvl")) & (F.col("A.key") == F.col("B.key"))
-                 & (F.col("A.nat") | F.col("B.nat")))
-        .filter(
-            (F.col("A.west") <= F.col("B.east"))
-            & (F.col("A.east") >= F.col("B.west"))
-            & (F.col("A.south") <= F.col("B.north"))
-            & (F.col("A.north") >= F.col("B.south"))
-        )
-        .select(F.col("A.poly_id").alias("id_a"), F.col("B.poly_id").alias("id_b"))
-        .distinct()
-    )

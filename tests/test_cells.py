@@ -104,31 +104,6 @@ class TestH3Style:
         zp = pa + pb * complex(0.5, np.sqrt(3) / 2)
         assert np.abs(z - zp).max() < 0.5 - 1e-9
 
-    def test_compact_uncompact_roundtrip(self):
-        cells = np.unique(h3x.h3_encode_np(LAT, LON, 6))
-        full = h3x.h3_uncompact_np(cells, 9)          # complete 3-level cover
-        assert len(full) == len(cells) * 7 ** 3
-        compacted = h3x.h3_compact_np(full)
-        assert (compacted == np.sort(cells)).all()    # cascades all the way back
-
-    def test_compact_partial_sets_stay_fine(self):
-        cells = np.unique(h3x.h3_encode_np(LAT[:50], LON[:50], 5))
-        kids = h3x.h3_children_np(cells)
-        partial = kids[:, :6].ravel()                 # 6 of 7 children only
-        assert (h3x.h3_compact_np(partial) == np.sort(partial)).all()
-        mixed = np.concatenate([kids[:1].ravel(), kids[1:, :3].ravel()])
-        got = h3x.h3_compact_np(mixed)
-        assert cells[0] in got and len(got) == 1 + 3 * (len(cells) - 1)
-
-    def test_compact_cover_roundtrip(self):
-        from stac_to_geocore_spark.spatial.cover import cover_bbox_compact_np, cover_bbox_np
-
-        cells, full = cover_bbox_np(-100.0, 45.0, -80.0, 60.0, 7)
-        interior, boundary = cover_bbox_compact_np(-100.0, 45.0, -80.0, 60.0, 7)
-        assert len(interior) < full.sum()  # actually compacted
-        assert (h3x.h3_uncompact_np(interior, 7) == np.sort(cells[full])).all()
-        assert (boundary == np.sort(cells[~full])).all()
-
     def test_h3_parent_column_rollup(self, spark):
         from pyspark.sql import functions as F
 

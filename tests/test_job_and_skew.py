@@ -44,8 +44,38 @@ def test_run_harvest_end_to_end(spark, tmp_path):
 
 
 def test_run_harvest_matches_reference_bytes(spark, tmp_path):
-    """Spot-check: a sink object is byte-identical to the reference flow."""
-    import stac_to_geocore as ref
+    """A 60-item harvest store must equal the frozen harvest_sink_job rows
+    (key, byte length, md5) — rows verified byte-equal to the reference
+    flow when they were frozen, so this gates reference byte parity without
+    the reference checkout. lastRun.txt lists its keys in partition order,
+    which follows the core count, so it is compared as a key set."""
+    import hashlib
+
+    from stac_to_geocore_spark.known_answers import KNOWN
+    from stac_to_geocore_spark.sources.sinks import MANIFEST_KEY
+
+    store_root = str(tmp_path / "frozen")
+    run_harvest(spark, API_ROOT, store_root, make_fake_stac_fetch(n_items=60))
+    store = LocalObjectStore(store_root)
+    keys = [k for k in store.list() if k != MANIFEST_KEY]
+    got = sorted(
+        (k, len(store.get(k)), hashlib.md5(store.get(k).encode("utf-8")).hexdigest())
+        for k in keys
+    )
+    want = sorted(tuple(r) for r in KNOWN["harvest_sink_job"]["rows"] if r[0] != MANIFEST_KEY)
+    assert got == want
+    assert sorted(store.get(MANIFEST_KEY).splitlines()) == sorted(keys)
+
+
+def test_run_harvest_matches_live_reference(spark, tmp_path):
+    """Spot-check against the live reference flow: a sink object is
+    byte-identical to what the reference produces. Runs only where the
+    reference checkout exists."""
+    ref = pytest.importorskip(
+        "stac_to_geocore",
+        reason=f"reference checkout {REF_DIR} absent; "
+               "test_run_harvest_matches_reference_bytes gates the frozen bytes",
+    )
     from stac_to_geocore_spark.compat.template import null_template
     from stac_to_geocore_spark.fixtures import stac_collections_fixture, stac_items_fixture, stac_root_fixture
 

@@ -101,3 +101,51 @@ def test_bbox_overlap_both_big_sort_merges_never_broadcasts(spark):
     p = _plan(bbox_overlap_join(df, df, driver_plan_max=50))
     assert "SortMergeJoin" in p, p.splitlines()[:25]
     assert "BroadcastHashJoin" not in p
+
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def _sql_plans_of(spark, run) -> list[str]:
+    """Physical plans of every SQL execution `run()` issues, read from the
+    SQL status store (final adaptive plans). The store keeps only the last
+    spark.ui.retainedExecutions entries, sorted by id, so the new ones are
+    found by walking back from the newest to the id seen before the run."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest(n):
+        return store.executionsList(n - 1, 1).apply(0)
+
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    last = newest(n).executionId() if n else -1
+    run()
+    bus.waitUntilEmpty()
+    plans, n = [], store.executionsCount()
+    while n and newest(n).executionId() > last:
+        plans.append(newest(n).physicalPlanDescription())
+        n -= 1
+    return plans
+
+
+@pytest.mark.parametrize("name", ["pip_assign", "pip_salted", "pip_ring", "knn_ring", "bbox_overlap"])
+def test_spatial_join_plans_have_no_python_node(spark, name):
+    """Every spatial join takes its candidates from the shared JVM grid
+    generator (spatial/grid.py), so no plan the query runs crosses into
+    Python: neither the final executed plan of its result nor any SQL
+    execution issued while building it (stats probes, kNN rounds)."""
+    import __spark_entry__ as m
+
+    out = {}
+
+    def run():
+        out["df"] = df = m.queries()[name](spark, "/root/testdata/sf0.01")
+        assert df.collect()
+
+    plans = _sql_plans_of(spark, run)
+    assert plans
+    final = out["df"]._jdf.queryExecution().executedPlan().toString()
+    for plan in [final.split("== Initial Plan ==")[0]] + plans:
+        for node in _PYTHON_NODES:
+            assert node not in plan, f"{name}: {node} in\n{plan[:3000]}"

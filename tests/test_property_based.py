@@ -1,9 +1,12 @@
-"""Hypothesis property tests for the pure-numpy kernels (SURVEY.md §5.2):
-cover superset, codec round-trips, tile monotonicity, S2 hierarchy."""
+"""Hypothesis property tests (SURVEY.md §5.2): the pure-numpy kernels (cover
+superset, codec round-trips, tile monotonicity, S2 hierarchy) and the
+operators vs brute force (relational joins; the grid spatial joins, on
+inputs that sit exactly on box edges and grid lines)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from stac_to_geocore_spark.cells import h3x
@@ -152,3 +155,141 @@ def test_range_join_matches_brute_force(fact_offs, iv_rows, bucket):
         if lo <= off <= lo + ln
     }
     assert got == want
+
+
+# --- grid spatial joins vs numpy brute force (random instances) ---
+
+_box_st = st.tuples(
+    st.floats(min_value=-100.0, max_value=-90.0), st.floats(min_value=50.0, max_value=58.0),
+    st.floats(min_value=0.0, max_value=3.0), st.floats(min_value=0.0, max_value=3.0),
+)
+_pt_st = st.tuples(st.floats(min_value=-101.0, max_value=-86.0),
+                   st.floats(min_value=49.0, max_value=62.0))
+
+
+def _grid_lines(spark, w, s, e, n, wb, hb):
+    """Points exactly on the join's grid lines (k*dx, k*dy) inside [w, e] x
+    [s, n], with the steps the join derives from boxes of widths wb and
+    heights hb (the same grid_steps call pip_ring_join makes)."""
+    import math
+
+    from stac_to_geocore_spark.spatial.grid import grid_steps
+    from stac_to_geocore_spark.spatial.pip import POINT_CELLS_PER_BOX
+
+    dx, dy = grid_steps(sum(wb) / len(wb), max(wb), sum(hb) / len(hb), max(hb),
+                        target_cells_per_box=POINT_CELLS_PER_BOX)
+    xs = [k * dx for k in range(math.ceil(w / dx), math.floor(e / dx) + 1)][:4]
+    ys = [k * dy for k in range(math.ceil(s / dy), math.floor(n / dy) + 1)][:4]
+    return [(x, y) for x in xs for y in ys] + [(x, (s + n) / 2) for x in xs] + [((w + e) / 2, y) for y in ys]
+
+
+@settings(max_examples=8, deadline=None)
+@given(boxes=st.lists(_box_st, min_size=1, max_size=5),
+       pts=st.lists(_pt_st, max_size=25), salt=st.sampled_from([0, 3]))
+def test_pip_join_matches_brute_force(boxes, pts, salt):
+    """pip_join (broadcast and salted) vs the closed-bbox predicate, on
+    random points plus every box corner and edge midpoint, and points on
+    the grid lines of the join's own steps."""
+    from stac_to_geocore_spark.session import get_spark
+    from stac_to_geocore_spark.spatial.grid import grid_side_stats, grid_steps
+    from stac_to_geocore_spark.spatial.pip import POINT_CELLS_PER_BOX, pip_join
+
+    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    rows = [(f"b{i}", x, y, x + w, y + h) for i, (x, y, w, h) in enumerate(boxes)]
+    polys = spark.createDataFrame(rows, "poly_id string, west double, south double, east double, north double")
+    _n, mw, xw, mh, xh = grid_side_stats(polys)
+    dx, dy = grid_steps(mw, xw, mh, xh, target_cells_per_box=POINT_CELLS_PER_BOX)
+    xy = list(pts)
+    for _b, w, s, e, n in rows:
+        xy += [(w, s), (e, n), (w, n), (e, s), (w, (s + n) / 2), ((w + e) / 2, n)]
+        xy += [(k * dx, (s + n) / 2) for k in (int(w // dx), int(e // dx))]
+        xy += [((w + e) / 2, k * dy) for k in (int(s // dy), int(n // dy))]
+    xy += [(k * dx, j * dy) for _b, w, s, e, n in rows
+           for k in (int(w // dx), int(w // dx) + 1) for j in (int(s // dy), int(s // dy) + 1)]
+    points = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+                                   "image_id long, lon double, lat double")
+    want = {(i, b) for i, (x, y) in enumerate(xy) for b, w, s, e, n in rows
+            if w <= x <= e and s <= y <= n}
+    got = {(r.image_id, r.poly_id) for r in pip_join(
+        points, polys, broadcast_covers=salt == 0, salt_factor=salt).collect()}
+    assert got == want
+
+
+def _ray_cast_np(px, py, rx, ry):
+    x1, y1 = np.asarray(rx), np.asarray(ry)
+    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+    X, Y = np.asarray(px)[:, None], np.asarray(py)[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        crosses = ((y1 > Y) != (y2 > Y)) & (X < (x2 - x1) * (Y - y1) / (y2 - y1) + x1)
+    return crosses.sum(axis=1) % 2 == 1
+
+
+@settings(max_examples=8, deadline=None)
+@given(cx=st.floats(min_value=-98.0, max_value=-92.0), cy=st.floats(min_value=51.0, max_value=57.0),
+       r=st.floats(min_value=0.05, max_value=3.0), tips=st.integers(min_value=3, max_value=7),
+       sq=_box_st, pts=st.lists(_pt_st, max_size=40))
+def test_pip_ring_join_matches_brute_force(cx, cy, r, tips, sq, pts):
+    """pip_ring_join vs a numpy even-odd ray cast (same operation order, so
+    exact) on a random star and a square ring whose edges are horizontal
+    and vertical, with points on vertices, on the horizontal edges, and on
+    the join's grid lines."""
+    from stac_to_geocore_spark.session import get_spark
+    from stac_to_geocore_spark.spatial.pip import pip_ring_join
+
+    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    ang = np.arange(2 * tips) * (np.pi / tips)
+    rad = np.where(np.arange(2 * tips) % 2 == 0, r, r / 2)
+    x0, y0, w, h = sq
+    w, h = max(w, 0.01), max(h, 0.01)
+    rings = {
+        "star": ([float(v) for v in cx + rad * np.cos(ang)], [float(v) for v in cy + rad * np.sin(ang)]),
+        "square": ([x0, x0 + w, x0 + w, x0], [y0, y0, y0 + h, y0 + h]),
+    }
+    xy = list(pts)
+    for rx, ry in rings.values():
+        xy += list(zip(rx, ry))
+    xy += [(x0 + w * f, y) for f in (0.0, 0.3, 0.5, 1.0) for y in (y0, y0 + h)]
+    widths = [max(rx) - min(rx) for rx, _ry in rings.values()]
+    heights = [max(ry) - min(ry) for _rx, ry in rings.values()]
+    for rx, ry in rings.values():
+        xy += _grid_lines(spark, min(rx), min(ry), max(rx), max(ry), widths, heights)
+    px = np.array([float(x) for x, _y in xy])
+    py = np.array([float(y) for _x, y in xy])
+    points = spark.createDataFrame([(i, float(px[i]), float(py[i])) for i in range(len(xy))],
+                                   "point_id long, lon double, lat double")
+    ring_df = spark.createDataFrame([(k, rx, ry) for k, (rx, ry) in rings.items()],
+                                    "poly_id string, ring_lon array<double>, ring_lat array<double>")
+    want = {(int(i), k) for k, (rx, ry) in rings.items()
+            for i in np.nonzero(_ray_cast_np(px, py, rx, ry))[0]}
+    got = {(r.point_id, r.poly_id) for r in pip_ring_join(points, ring_df).collect()}
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None)
+@given(pts=st.lists(_pt_st, min_size=1, max_size=60), dup=st.integers(min_value=0, max_value=5),
+       qs=st.lists(_pt_st, min_size=1, max_size=4), k=st.integers(min_value=1, max_value=6))
+def test_knn_join_matches_brute_force(pts, dup, qs, k):
+    """knn_join vs a numpy top-k by (scaled-degree distance, point id), with
+    duplicated points and a query placed exactly on a point."""
+    from stac_to_geocore_spark.session import get_spark
+    from stac_to_geocore_spark.spatial.knn import knn_join
+
+    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # two far corners bound the extent, so the first radius (sized from
+    # the extent) converges within max_iter doublings on any draw
+    xy = [(-101.0, 49.0), (-86.0, 62.0)] + list(pts) + list(pts[:dup])
+    qs = list(qs) + [xy[2]]
+    plon = np.array([float(x) for x, _y in xy])
+    plat = np.array([float(y) for _x, y in xy])
+    points = spark.createDataFrame([(i, float(plon[i]), float(plat[i])) for i in range(len(xy))],
+                                   "image_id long, lon double, lat double")
+    queries = pd.DataFrame({"query_id": [f"q{i}" for i in range(len(qs))],
+                            "lon": [float(x) for x, _y in qs], "lat": [float(y) for _x, y in qs]})
+    got = knn_join(points, queries, k=k).toPandas()
+    kk = min(k, len(xy))
+    for q in queries.itertuples(index=False):
+        dx = (q.lon - plon) * np.cos(np.radians((q.lat + plat) / 2.0))
+        dy = q.lat - plat
+        order = np.lexsort((np.arange(len(xy)), dx * dx + dy * dy))
+        mine = got[got.query_id == q.query_id].sort_values("rank")["point_id"].tolist()
+        assert mine == order[:kk].tolist(), q.query_id

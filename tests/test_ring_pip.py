@@ -1,16 +1,13 @@
-"""General-polygon (ring) PIP: cell-cover filter + exact ray-cast refine
-(spatial/pip.refine_ring) must match brute-force numpy on non-rectangular
+"""General-polygon (ring) PIP: grid-cell filter + exact ray-cast refine
+(spatial/pip.pip_ring_join) must match brute-force numpy on non-rectangular
 polygons — the path real GeoCore collection footprints would take."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from stac_to_geocore_spark.cells.h3x import h3_encode
-from stac_to_geocore_spark.spatial.cover import adaptive_res, cover_bbox_np
-from stac_to_geocore_spark.spatial.pip import refine_ring
+from stac_to_geocore_spark.spatial.pip import pip_ring_join
 
 
 def _star_ring(cx: float, cy: float, r_out: float, r_in: float, n: int = 5):
@@ -40,26 +37,14 @@ def test_ring_refine_matches_brute_force(spark):
     py = rng.uniform(51, 59, 3000)
     want = _brute_pip(px, py, rx, ry)
 
-    # filter: cover of the ring's bbox; refine: exact ray cast
-    west, east, south, north = rx.min(), rx.max(), ry.min(), ry.max()
-    res = adaptive_res(west, south, east, north)
-    cells, _ = cover_bbox_np(west, south, east, north, res)
-    pdf = pd.DataFrame({"pid": np.arange(3000), "lon": px, "lat": py})
-    df = (
-        spark.createDataFrame(pdf)
-        .withColumn("cell", h3_encode(F.col("lat"), F.col("lon"), res))
-        .withColumn("ring_lon", F.array(*[F.lit(float(v)) for v in rx]))
-        .withColumn("ring_lat", F.array(*[F.lit(float(v)) for v in ry]))
+    pts = spark.createDataFrame(pd.DataFrame({"pid": np.arange(3000), "lon": px, "lat": py}))
+    rings = spark.createDataFrame(
+        [("star", [float(v) for v in rx], [float(v) for v in ry])],
+        "poly_id string, ring_lon array<double>, ring_lat array<double>",
     )
-    cells_df = spark.createDataFrame([(int(c),) for c in cells], "cell long")
-    inside = (
-        df.join(F.broadcast(cells_df), "cell")  # cover filter
-        .filter(refine_ring(F.lit("star"), F.col("lon"), F.col("lat"), F.col("ring_lon"), F.col("ring_lat")))
-        .select("pid")
-        .toPandas()["pid"]
-        .to_numpy()
-    )
+    inside = pip_ring_join(pts, rings, point_id="pid").toPandas()
+    assert set(inside.poly_id) == {"star"}
     got = np.zeros(3000, dtype=bool)
-    got[inside] = True
+    got[inside.pid.to_numpy()] = True
     assert (got == want).all(), f"{(got != want).sum()} disagreements"
     assert want.sum() > 100  # the test actually exercises inside points

@@ -1,9 +1,9 @@
 """Round-3 hardening regressions (VERDICT r2 items 3-5 + ADVICE):
 
 - knn_join raises on non-convergence (no silent partial results) and stays
-  exact when the query count exceeds the 64-clause bbox-predicate cap.
+  exact with many queries per round.
 - bbox_overlap_join routes sides above driver_plan_max through the
-  distributed covers path (no driver collect of the big side).
+  distributed cell-join path.
 - merge_manifest_parts survives a mid-merge crash with the old manifest and
   every part file intact (re-run merges cleanly).
 - SnapshotTable commits are compare-and-swap: a metadata file that appears
@@ -40,8 +40,8 @@ def test_knn_raises_on_non_convergence(spark):
 
 
 def test_knn_exact_beyond_or_chain_cap(spark):
-    """>64 queries trips the envelope-collapse path; results must still be
-    the exact brute-force top-k."""
+    """Many queries (more than the old 64-clause prefilter cap) in one
+    round; results must still be the exact brute-force top-k."""
     from stac_to_geocore_spark.spatial.knn import knn_join
 
     n = 1500
@@ -88,10 +88,10 @@ def test_knn_k_exceeds_point_count_ranks_all_points(spark):
 
 # ------------------------------------------------------- bbox_overlap_join
 
-def test_bbox_overlap_distributed_path_no_driver_collect(spark, monkeypatch):
-    """One side above driver_plan_max: covers must be planned distributed
-    (covers_pdf — the driver-side planner — must NOT see the big side), and
-    the pair set must match the analytic neighbor structure of a grid."""
+def test_bbox_overlap_distributed_path_no_driver_collect(spark):
+    """Both sides above driver_plan_max: the join runs distributed (a
+    cell equi-join, nothing but stats scalars reaches the driver), and the
+    pair set must match the analytic neighbor structure of a grid."""
     import stac_to_geocore_spark.spatial.overlap as ov
 
     # grid of 1d-wide boxes spaced 0.9 apart -> each box overlaps exactly
@@ -105,21 +105,11 @@ def test_bbox_overlap_distributed_path_no_driver_collect(spark, monkeypatch):
         "north": [11.0] * n,
     }))
 
-    seen_sizes = []
-    real_covers_pdf = ov.covers_pdf
-
-    def spy_covers_pdf(pdf, *a, **kw):
-        seen_sizes.append(len(pdf))
-        return real_covers_pdf(pdf, *a, **kw)
-
-    monkeypatch.setattr(ov, "covers_pdf", spy_covers_pdf)
     pairs = (
-        ov.bbox_overlap_join(big, big, driver_plan_max=50, fixed_res=4)
+        ov.bbox_overlap_join(big, big, driver_plan_max=50)
         .filter(F.col("id_a") < F.col("id_b"))
         .toPandas()
     )
-    # the driver-side planner never ran on the >50-row side
-    assert all(s <= 50 for s in seen_sizes), seen_sizes
     want = {(f"g{i:04d}", f"g{i + 1:04d}") for i in range(n - 1)}
     got = set(zip(pairs.id_a, pairs.id_b))
     assert got == want, f"missing={want - got} extra={got - want}"
@@ -139,9 +129,9 @@ def test_bbox_overlap_mixed_small_big_matches_small_small(spark):
 
 
 def test_pip_join_distributed_covers_path_exact(spark):
-    """polygons_are_dim=False forces the distributed covers_df path (no
-    driver collect of the polygon table); assignments must match the
-    driver-planned path exactly."""
+    """broadcast_covers=False with no salt leaves the box cells to a
+    shuffle join (asserted on the plan with auto-broadcast off);
+    assignments must match the pinned-broadcast path exactly."""
     from stac_to_geocore_spark.fixtures import POLYGONS_SCHEMA, gen_polygons_pdf, image_centroids
     from stac_to_geocore_spark.spatial.pip import pip_join
 
@@ -150,26 +140,20 @@ def test_pip_join_distributed_covers_path_exact(spark):
         pd.DataFrame({"image_id": [f"p{i}" for i in range(2000)], "lon": lon, "lat": lat})
     )
     polys = spark.createDataFrame(gen_polygons_pdf(20, seed=13), POLYGONS_SCHEMA)
-    dim = pip_join(pts, polys).toPandas()
-    dist = pip_join(pts, polys, polygons_are_dim=False, broadcast_covers=True).toPandas()
-    key = lambda df: set(zip(df.image_id, df.poly_id))  # noqa: E731
-    assert key(dim) == key(dist)
-    assert len(key(dim)) > 0
-
-
-def test_pip_join_dim_claim_violation_raises(spark):
-    """polygons_are_dim=True on a table over the cap must raise, not
-    silently collect or switch paths (the round-3 review finding)."""
-    from stac_to_geocore_spark.spatial.pip import pip_join
-
-    pts = spark.createDataFrame(pd.DataFrame({"image_id": ["a"], "lon": [0.0], "lat": [0.0]}))
-    big = spark.range(10_001).selectExpr(
-        "CAST(id AS STRING) AS poly_id",
-        "CAST(id % 100 AS DOUBLE) AS west", "CAST(id % 50 AS DOUBLE) AS south",
-        "CAST(id % 100 + 1 AS DOUBLE) AS east", "CAST(id % 50 + 1 AS DOUBLE) AS north",
-    )
-    with pytest.raises(ValueError, match="polygons_are_dim=True"):
-        pip_join(pts, big, polygons_are_dim=True)
+    dim = pip_join(pts, polys, broadcast_covers=True).toPandas()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = pip_join(pts, polys, broadcast_covers=False)
+        dist = shuffled.toPandas()
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in plan, plan[:2000]
+    key_of = lambda df: set(zip(df.image_id, df.poly_id))  # noqa: E731
+    assert key_of(dim) == key_of(dist)
+    assert len(key_of(dim)) > 0
 
 
 # ------------------------------------------------- manifest merge durability
@@ -272,36 +256,13 @@ def test_snapshot_commit_is_compare_and_swap(spark, tmp_path):
     assert "/elsewhere" in v3_dirs and "/mine" in v3_dirs
 
 
-# ------------------------------------------- round-4 overlap res tuning
-
-
-def test_overlap_mean_res_is_coarser_than_cap_for_tiny_boxes():
-    """Tiny boxes must NOT cover at the finest cap-fitting res: the mean-box
-    rule picks the res where a typical cover is ~target_cells_per_box."""
-    import numpy as np
-    import pandas as pd
-
-    from stac_to_geocore_spark.spatial.overlap import (
-        _res_for_mean_area,
-        _res_stats_pdf,
-    )
-
-    rng = np.random.default_rng(3)
-    lon = rng.uniform(-120, -60, 200)
-    lat = rng.uniform(45, 75, 200)
-    pdf = pd.DataFrame({
-        "poly_id": [f"t{i}" for i in range(200)],
-        "west": lon, "south": lat, "east": lon + 0.08, "north": lat + 0.07,
-    })
-    cap_res, mean_area, _med = _res_stats_pdf(pdf, 3, 9, 2048)
-    mean_res = _res_for_mean_area(mean_area, 3, 9, 4.0)
-    assert cap_res == 9  # tiny boxes fit max_cells even at the finest res
-    assert mean_res < cap_res  # the tuned res is strictly coarser
+# ------------------------------------------- overlap grid-step invariance
 
 
 def test_overlap_join_output_invariant_under_res_choice(spark):
-    """Same exact pair set at the tuned res, the old finest res, and a very
-    coarse res — the refine predicate makes res a pure performance knob."""
+    """Same exact pair set at the default grid resolution (step), a much
+    finer one, and a much coarser one — the refine predicate makes the
+    step a pure performance knob."""
     from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
     rows = []
@@ -321,6 +282,7 @@ def test_overlap_join_output_invariant_under_res_choice(spark):
         }
 
     tuned = pairs()
-    assert tuned == pairs(fixed_res=9)
-    assert tuned == pairs(fixed_res=4)
+    assert tuned == pairs(target_cells_per_box=64.0)
+    assert tuned == pairs(target_cells_per_box=0.01)
+    assert tuned == pairs(target_cells_per_box=64.0, max_cells=4)
     assert len(tuned) > 0

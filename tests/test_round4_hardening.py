@@ -2,7 +2,7 @@
 
 - snapshots.vacuum() reclaims commit tmp files from dead pids, never from
   live ones
-- pip_ring_join rejects duplicate poly_id rows (refine groups by poly_id)
+- pip_ring_join rejects duplicate poly_id rows (the refine joins edges by poly_id)
 - minhash pair output is identical with and without the opt-in signature
   persist
 - the UDF session-cache key is stable per context and not an id() value
@@ -70,45 +70,3 @@ def test_session_cache_key_is_stable_and_not_an_object_id(spark):
     app_id, start = k1
     assert isinstance(app_id, str) and app_id  # applicationId, not id()
     assert isinstance(start, int)
-
-
-def test_vectorized_res_stats_match_scalar_adaptive_res(spark):
-    import numpy as np
-    import pandas as pd
-
-    from stac_to_geocore_spark.spatial.overlap import (
-        _min_res_pdf,
-        _res_stats_distributed,
-    )
-
-    rng = np.random.default_rng(17)
-    n = 300
-    w = rng.uniform(-130, -60, n)
-    s = rng.uniform(42, 78, n)
-    # mix of tiny, medium and huge boxes so several res levels are exercised
-    dw = rng.choice([0.01, 0.3, 5.0, 25.0], n) * rng.uniform(0.5, 1.5, n)
-    dh = rng.choice([0.01, 0.3, 5.0, 20.0], n) * rng.uniform(0.5, 1.5, n)
-    pdf = pd.DataFrame({
-        "poly_id": [f"p{i}" for i in range(n)],
-        "west": w, "south": s, "east": w + dw, "north": s + dh,
-    })
-    df = spark.createDataFrame(pdf)
-    got_res, got_area, got_med = _res_stats_distributed(df, 3, 9, 2048, with_median=True)
-    assert got_res == _min_res_pdf(pdf, 3, 9, 2048)
-    want_area = float(np.mean(
-        np.radians(pdf["east"] - pdf["west"]) * np.radians(pdf["north"] - pdf["south"])
-        * np.cos(np.radians((pdf["south"] + pdf["north"]) / 2.0))
-    ))
-    # partitioned float sum order differs from numpy's — compare loosely
-    assert abs(got_area - want_area) < 1e-9 * max(1.0, abs(want_area))
-    # the approx median (compact join's res knob) must sit within the
-    # exact median's neighbor ranks — percentile_approx with accuracy 1e4
-    # is exact at n=300, so compare tightly
-    want_med = float(np.median(
-        np.radians(pdf["east"] - pdf["west"]) * np.radians(pdf["north"] - pdf["south"])
-        * np.cos(np.radians((pdf["south"] + pdf["north"]) / 2.0))
-    ))
-    lo = np.sort(np.radians(pdf["east"] - pdf["west"]) * np.radians(pdf["north"] - pdf["south"])
-                 * np.cos(np.radians((pdf["south"] + pdf["north"]) / 2.0)))
-    assert lo[len(lo) // 2 - 2] <= got_med <= lo[len(lo) // 2 + 2]
-    assert abs(got_med - want_med) < 0.5 * want_med

@@ -52,6 +52,17 @@ def test_cover_superset_random_bboxes():
         assert full.sum() <= len(cells)
 
 
+def test_cover_includes_face_entering_between_samples():
+    """A face that enters the bbox between two bbox samples is enumerated:
+    this point encodes on face 2, which no sample of the box maps to (the
+    cover used to hold only faces 0, 1, 3 and 6 and dropped the point from
+    the flagship's cell join)."""
+    cells, _full = cover_bbox_np(-90.03, 56.59, -88.55, 59.36, 5)
+    p = h3x.h3_encode_np(np.array([58.28263045]), np.array([-90.01400873]), 5)
+    assert h3x.h3_unpack(p)[0][0] == 2
+    assert np.isin(p, cells).all()
+
+
 def test_pip_join_broadcast_exact(spark, points_pdf, polys_pdf):
     pts = spark.createDataFrame(points_pdf)
     polys = spark.createDataFrame(polys_pdf, POLYGONS_SCHEMA)
@@ -285,78 +296,3 @@ def test_bbox_overlap_salts_hot_cells_on_side_b_only(spark):
     got_s = {(r.id_a, r.id_b) for r in salted.collect()}
     got_p = {(r.id_a, r.id_b) for r in plain.collect()}
     assert got_s == got_p and len(got_s) > 0
-
-
-def _mixed_boxes(spark, n, dense=False):
-    """Tiny boxes plus 0.5% AOI-scale (12-16 deg) boxes; dense=True packs
-    the tiny boxes into a ~5x2.5 deg window (the coarse-cell quadratic
-    regime the compact join exists for)."""
-    from pyspark.sql import functions as Fx
-
-    m1 = Fx.pmod(Fx.col("id") * 40503 + 17, Fx.lit(50000))
-    m2 = Fx.pmod(Fx.col("id") * 9851 + 3, Fx.lit(25000))
-    big = (Fx.col("id") % 200 == 0)
-    dx = Fx.when(big, 6.0 + (Fx.col("id") % 3).cast("double")).otherwise(
-        0.02 + (Fx.col("id") % 5).cast("double") * 0.01)
-    dy = Fx.when(big, 5.0 + (Fx.col("id") % 2).cast("double")).otherwise(
-        0.02 + (Fx.col("id") % 7).cast("double") * 0.005)
-    denom = 10000.0 if dense else 1000.0
-    return spark.range(n).select(
-        Fx.concat(Fx.lit("b"), Fx.col("id").cast("string")).alias("poly_id"),
-        (Fx.lit(-80.0) + Fx.pmod(m1 * m1 + 7 * m1, Fx.lit(50000)) / denom).alias("lon"),
-        (Fx.lit(45.0) + Fx.pmod(m2 * m2 + 13 * m2, Fx.lit(25000)) / denom).alias("lat"),
-        dx.alias("dx"), dy.alias("dy"),
-    ).select(
-        "poly_id",
-        (F.col("lon") - F.col("dx")).alias("west"), (F.col("lat") - F.col("dy")).alias("south"),
-        (F.col("lon") + F.col("dx")).alias("east"), (F.col("lat") + F.col("dy")).alias("north"),
-    )
-
-
-def test_bbox_overlap_compact_matches_single_res(spark):
-    """The multi-res compact join must return EXACTLY the single-res join's
-    pairs on a mixed-size (AOI + tiny) fixture — the single-res path is
-    itself brute-force-anchored, so equality transitively anchors this one."""
-    from stac_to_geocore_spark.spatial.overlap import (
-        bbox_overlap_join,
-        bbox_overlap_join_compact,
-    )
-
-    polys = _mixed_boxes(spark, 11000)
-    ref = {(r.id_a, r.id_b)
-           for r in bbox_overlap_join(polys, polys).filter("id_a < id_b").collect()}
-    got = {(r.id_a, r.id_b)
-           for r in bbox_overlap_join_compact(polys, polys).filter("id_a < id_b").collect()}
-    assert got == ref and len(ref) > 100
-
-
-def test_compact_expansion_native_condition_counts(spark):
-    """Structural claims of the compact join's candidate generation on the
-    dense regime: (a) the native-side join condition yields FEWER candidate
-    pairs than the single-res join's shared-coarse-cell join; (b) dropping
-    the native condition explodes candidates at the coarse levels (the
-    quadratic the condition exists to kill)."""
-    from stac_to_geocore_spark.spatial.cover import covers_df, covers_df_compact_expanded
-    from stac_to_geocore_spark.spatial.overlap import (
-        _res_for_mean_area,
-        _res_stats_distributed,
-    )
-
-    polys = _mixed_boxes(spark, 6000, dense=True)
-    r1, a1, _ = _res_stats_distributed(polys, 3, 9, 2048)
-    res_single = max(3, min(r1, _res_for_mean_area(a1, 3, 9, 4.0)))
-    cov = covers_df(polys, fixed_res=res_single).select("poly_id", "cell")
-    cand_single = cov.alias("A").join(cov.alias("B"), "cell").count()
-
-    r2, _a, med = _res_stats_distributed(polys, 3, 9, 262144, with_median=True)
-    fine = max(3, min(r2, _res_for_mean_area(med, 3, 9, 4.0)))
-    exp = covers_df_compact_expanded(
-        polys, fine, list(range(max(0, fine - 3), fine + 1))
-    ).select("poly_id", "lvl", "nat", "key")
-    on_nat = ((F.col("A.lvl") == F.col("B.lvl")) & (F.col("A.key") == F.col("B.key"))
-              & (F.col("A.nat") | F.col("B.nat")))
-    on_all = (F.col("A.lvl") == F.col("B.lvl")) & (F.col("A.key") == F.col("B.key"))
-    cand_nat = exp.alias("A").join(exp.alias("B"), on_nat).count()
-    cand_all = exp.alias("A").join(exp.alias("B"), on_all).count()
-    assert cand_nat < cand_single  # finer native cells beat forced-coarse
-    assert cand_all > 3 * cand_nat  # the coarse-level quadratic is real
