@@ -108,7 +108,7 @@ _KNN_QUERIES = [
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthetic images (counter-based, distributed gen) ->
-    H3/S2/tile encode -> broadcast cell-bucketed PIP join -> assignments."""
+    H3/S2/tile encode -> broadcast grid-cell PIP join -> assignments."""
     from stac_to_geocore_spark.fixtures import images_df, polygons_df
     from stac_to_geocore_spark.pipeline import flagship
 
@@ -367,7 +367,7 @@ def _orders_bbox_polys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """>DRIVER_DIM_MAX synthetic bboxes derived from the orders table by
     integer column math (expressible identically in DuckDB, so the brute
     pairwise oracle regenerates the same table) — forces bbox_overlap_join
-    down its DISTRIBUTED covers path (both sides too big to driver-plan)."""
+    down its DISTRIBUTED path (both sides too big to broadcast)."""
     o = _t(spark, sf_dir, "orders")
     # QUADRATIC scatter (m*m + c*m mod 1e6), not the linear k*c mod 1e6 the
     # point fixtures use: sf0.01 orderkeys are CONSECUTIVE, and a linear
@@ -397,10 +397,11 @@ def _orders_bbox_polys(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_bbox_overlap_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100x-scale path of the region join (round-3 VERDICT #6): both
     sides exceed DRIVER_DIM_MAX (15k orders-derived bboxes at sf0.01), so
-    covers are planned DISTRIBUTED (covers_df mapInPandas) and the join is a
-    cell equi-join with no broadcast of either side — the plan a regression
-    in the distributed-covers code now moves both a committed bench number
-    and this oracle-checked row."""
+    each side's grid cells are exploded distributed (spatial/grid.py
+    box_cells) and the join is a sort-merge (gx, gy) equi-join with no
+    broadcast of either side — the plan a regression in the distributed
+    grid path now moves both a committed bench number and this
+    oracle-checked row."""
     from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
     polys = _orders_bbox_polys(spark, sf_dir)

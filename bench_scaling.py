@@ -24,8 +24,9 @@ import time
 def ensure_images_table(spark, n_images: int) -> str:
     """Materialize the synthetic images table once (the metric is
     encode+PIP+tile over an EXISTING table — BASELINE.json — not fixture
-    generation). Cached under .cache/ keyed by row count."""
-    path = os.path.abspath(f".cache/bench_images_{n_images}")
+    generation). Cached under the repo's .cache/ keyed by row count."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache",
+                        f"bench_images_{n_images}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from stac_to_geocore_spark.fixtures import images_df
 

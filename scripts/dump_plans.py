@@ -7,9 +7,13 @@ Prints each as '=== <name> ===' + explain('formatted') output.
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the package too, whatever the working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 
 def fmt(df) -> str:
@@ -30,10 +34,11 @@ def main() -> None:
     targets = sys.argv[1:] or ["flagship", "q5", "q1", "pip_assign", "minhash", "asof"]
     for t in targets:
         if t == "flagship":
+            from bench_scaling import ensure_images_table
             from stac_to_geocore_spark.fixtures import polygons_df
             from stac_to_geocore_spark.pipeline import flagship
 
-            images = spark.read.parquet("/root/repo/.cache/bench_images_2000000")
+            images = spark.read.parquet(ensure_images_table(spark, 2_000_000))
             df = flagship(images, polygons_df(spark, 24))
         else:
             name = {

@@ -52,15 +52,6 @@ def tile_y_expr(lat: Column, z: int) -> Column:
     return F.greatest(F.lit(0), F.least(F.lit(2**z - 1), raw)).cast("long")
 
 
-def tile_key_expr(lon: Column, lat: Column, z: int) -> Column:
-    """Single sortable int64 key: z in the top bits, then interleave-free (x, y).
-
-    Packs (z, x, y) as z * 4^26 ... simpler: key = (x << 32) | y with z known
-    from context; used for range-partitioning tiles of one zoom level.
-    """
-    return (tile_x_expr(lon, z) * F.lit(2**32) + tile_y_expr(lat, z)).cast("long")
-
-
 def tile_assign(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat", zooms: tuple[int, ...] = (12,)) -> DataFrame:
     """Add tile_z{z}_x / tile_z{z}_y columns for each requested zoom."""
     out = df

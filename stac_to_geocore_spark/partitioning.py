@@ -4,9 +4,8 @@ A compact parquet table often lands as one or two file splits — single-file
 dims are even written as ONE row group, which Spark can never split — so a
 CPU-heavy stage downstream (a vectorized Python UDF, wide string column
 math, per-row hashing) serializes onto one or two cores no matter how many
-the cluster has. The fix is the same one covers_df has carried since round
-3: repartition UP to the cluster's parallelism when (and only when) the
-input arrives with fewer partitions. The exchange moves exactly the rows
+the cluster has. The fix: repartition UP to the cluster's parallelism when
+(and only when) the input arrives with fewer partitions. The exchange moves exactly the rows
 the stage was going to read anyway, once, and buys core-count parallelism
 for everything above it.
 

@@ -5,18 +5,18 @@ assignment) on synthetic image+caption table". One declarative plan:
 
   images (image_id, bytes, w, h, fmt, caption, phash, lon, lat)
     -> h3_r{res} + cell_p5 (Arrow pandas UDF, numpy kernel)
-    -> s2_l{lvl}           (Arrow pandas UDF)
+    -> s2_l{lvl}           (same fused UDF)
     -> tile z/x/y          (pure JVM column math, whole-stage codegen)
-    -> cell-bucket join against broadcast polygon covers at res 5 + exact
-       bbox refine (filter-refine PIP; zero shuffle on the images side)
-    -> assignments (image_id, poly_id, lon, lat, h3, s2, tile_x/y, cell_p5)
+    -> pip_join            (the shared grid join of spatial/pip.py: box
+                            cells broadcast, equi-join on (gx, gy), closed
+                            bbox refine; zero shuffle on the images side)
+    -> assignments (image_id, poly_id, lon, lat, h3, cell_p5, s2, tile_x/y)
 
-Why cover at res 5 while encoding at res 7: collection polygons span
-degrees, so res-5 covers stay a few hundred cells each (broadcastable at any
-polygon count that fits a dim table), while the res-7/s2/tile columns are
-the per-image output payload. cell_p5 doubles as the join key AND the
-lineage/bucketing partition key, so the whole pipeline is scan -> map ->
-broadcast-join -> filter: no shuffle of the 10^12-row side at all.
+The cell ids are output payload, not join keys: containment comes from the
+same exact grid candidate generator as every other spatial join. cell_p5
+is the lineage/bucketing partition key of materialize_assignments. The
+whole pipeline is scan -> map -> broadcast-join: no shuffle of the
+10^12-row side at all.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stac_to_geocore_spark.cells.tiles import tile_x_expr, tile_y_expr
-from stac_to_geocore_spark.spatial.cover import DRIVER_DIM_MAX, covers_df
+from stac_to_geocore_spark.spatial.pip import pip_join
 
 COVER_RES = 5
 
@@ -76,8 +76,9 @@ def encode_stage(images: DataFrame, res: int = 7, s2_level: int = 12, zoom: int 
         "lon",
         "lat",
         F.col("_cells.h3").alias(f"h3_r{res}"),
-        # coalesce: provably non-null join key so Catalyst's inferred
-        # isnotnull filter is pruned instead of forcing a second UDF pass
+        # coalesce: makes the lineage partition key non-null in the schema
+        # (a UDF result is nullable by type; the kernel never yields null,
+        # so the values are the encoder's own)
         F.coalesce(F.col("_cells.cover"), F.lit(-1)).alias("cell_p5"),
         F.col("_cells.s2").alias(f"s2_l{s2_level}"),
         tile_x_expr(F.col("lon"), zoom).alias(f"tile_z{zoom}_x"),
@@ -94,52 +95,15 @@ def flagship(
     broadcast_covers: bool = True,
     salt_factor: int = 0,
 ) -> DataFrame:
-    """encode -> PIP assign (broadcast cell join + refine) -> assignments.
+    """encode -> PIP assign (pip_join: grid cell join + bbox refine) ->
+    assignments (image_id, poly_id, lon, lat, h3_r{res}, cell_p5,
+    s2_l{s2_level}, tile_z{zoom}_x, tile_z{zoom}_y).
 
-    salt_factor > 0 switches to the salted shuffle-join path (for cover
-    sides too large to broadcast with heavy cell skew).
+    salt_factor > 0 salts the join key (for box sides too large to
+    broadcast with heavy cell skew); see pip_join.
     """
-    enc = encode_stage(images, res, s2_level, zoom)
-    # dim-sized polygon sets plan their covers on the driver (pure numpy, no
-    # Spark job or extra python-worker round — same reasoning as the
-    # reference's driver-side pagination planner); big polygon tables go
-    # through the distributed covers_df path. ONE bounded limit-probe job
-    # doubles as the collect (a separate count() was an extra job per call)
-    driver_plan_max = DRIVER_DIM_MAX
-    pdf = polygons.limit(driver_plan_max + 1).toPandas()
-    if len(pdf) <= driver_plan_max:
-        from stac_to_geocore_spark.spatial.cover import COVER_SCHEMA, covers_pdf
-
-        covers = images.sparkSession.createDataFrame(
-            covers_pdf(pdf, fixed_res=COVER_RES), COVER_SCHEMA
-        ).withColumnRenamed("cell", "cell_p5")
-    else:
-        covers = covers_df(polygons, fixed_res=COVER_RES).withColumnRenamed("cell", "cell_p5")
-    if broadcast_covers:
-        covers = F.broadcast(covers)
-    if salt_factor > 0:
-        enc = enc.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(salt_factor)))
-        covers = covers.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1))))
-        joined = enc.join(covers, ["cell_p5", "salt"], "inner")
-    else:
-        joined = enc.join(covers, "cell_p5", "inner")
-    return joined.filter(
-        F.col("fully_inside")
-        | (
-            (F.col("lon") >= F.col("west")) & (F.col("lon") <= F.col("east"))
-            & (F.col("lat") >= F.col("south")) & (F.col("lat") <= F.col("north"))
-        )
-    ).select(
-        "image_id",
-        "poly_id",
-        "lon",
-        "lat",
-        f"h3_r{res}",
-        "cell_p5",
-        f"s2_l{s2_level}",
-        f"tile_z{zoom}_x",
-        f"tile_z{zoom}_y",
-    )
+    return pip_join(encode_stage(images, res, s2_level, zoom), polygons, point_id="image_id",
+                    broadcast_covers=broadcast_covers, salt_factor=salt_factor)
 
 
 def materialize_assignments(

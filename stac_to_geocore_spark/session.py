@@ -73,9 +73,3 @@ def _core_count(master: str) -> int:
             return 8
     return os.cpu_count() or 8
 
-
-def stop_all() -> None:
-    """Stop the active session (used by scaling bench between local[8]/local[32] runs)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

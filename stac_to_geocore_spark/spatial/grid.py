@@ -1,7 +1,8 @@
 """Uniform lon/lat grid: the one candidate generator of every spatial join.
 
-pip_join, pip_ring_join, knn_join and bbox_overlap_join all find their
-candidate pairs the same way. A box covers EXACTLY the grid cells
+pip_join (and the flagship pipeline through it), pip_ring_join, knn_join
+and bbox_overlap_join all find their candidate pairs the same way. A box
+covers EXACTLY the grid cells
 
   [floor(west/dx) .. floor(east/dx)] x [floor(south/dy) .. floor(north/dy)]
 
@@ -17,8 +18,8 @@ boundary, no driver-side cover planning, no padding ring.
 Cell size is a pure performance knob (outputs are exact at ANY step, which
 the tests check): one narrow pure-JVM aggregation measures the boxes (count
 plus mean/max extents — five scalars) and grid_steps sizes the cells from
-those. H3/S2 covers (spatial/cover.py) are not used here; they serve only
-where cell ids are output payload (the flagship, the cover UDTF).
+those. H3/S2 cells are not join keys anywhere; they are output payload
+(the flagship's h3/cell_p5/s2 columns, sql_functions, the cover UDTF).
 """
 
 from __future__ import annotations
@@ -30,6 +31,11 @@ from pyspark.sql import functions as F
 
 # explosion guard: the LARGEST box never covers more than ~MAX_CELLS cells
 MAX_CELLS = 2048
+
+# The join-routing contract: a box or ring table at or below this row count
+# is dim-sized, safe to broadcast or collect to the driver (pip_join,
+# pip_ring_join and bbox_overlap_join all route on it — tune it in ONE place)
+DRIVER_DIM_MAX = 10_000
 
 
 def grid_side_stats(df: DataFrame) -> tuple[int, float, float, float, float]:

@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stac_to_geocore_spark.spatial.cover import DRIVER_DIM_MAX
 from stac_to_geocore_spark.spatial.grid import (
+    DRIVER_DIM_MAX,
     MAX_CELLS,
     box_cells,
     grid_side_stats,

@@ -9,7 +9,7 @@ collection polygons").
 Plan shape (all JVM column math; Catalyst/AQE pick physical operators):
 
   polygons --box_cells--> (poly_id, gx, gy, bbox)   [exact grid ranges]
-  points   --point_cell--> (point_id, lon, lat, gx, gy)   [one row/point]
+  points   --point_cell--> (point_id, lon, lat, ..., gx, gy)   [one row/point]
   equi-join on (gx, gy)  broadcast when the box side is dim-sized, else
                          shuffle hash/sort-merge with optional salting
   refine                 closed bbox predicate, or the even-odd ray cast
@@ -19,8 +19,9 @@ Candidates come from the one grid generator every spatial join shares
 (spatial/grid.py): a point's cell is one floor-division pair, so the points
 table is scanned once with no Python boundary, no driver-side cover
 planning and no prefilter — points outside every box's cells simply find
-no match in the hash probe. H3 covers are not involved; they serve only
-the flagship and the cover UDTF, where cell ids are output payload.
+no match in the hash probe. The flagship pipeline (pipeline.py) is this
+join over its encoded images: the H3/S2/tile columns ride along as point
+payload, never as join keys.
 
 Scale notes (the 100 TB story):
 - The box side is polygons x a handful of cells — for realistic polygon
@@ -34,9 +35,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from stac_to_geocore_spark.spatial.cover import DRIVER_DIM_MAX
 from stac_to_geocore_spark.spatial.grid import (
+    DRIVER_DIM_MAX,
     box_cells,
     grid_side_stats,
     grid_steps,
@@ -64,7 +66,10 @@ def pip_join(
 
     points:   (point_id, lon, lat, ...)
     polygons: (poly_id, west, south, east, north)
-    returns   (point_id, poly_id, lon, lat)
+    returns   (point_id, poly_id, then the other point columns in input
+              order) — every point column rides along as payload, so no
+              point column may be named like a box-side or join column
+              (poly_id, west, south, east, north, gx, gy, salt)
 
     broadcast_covers: True forces a broadcast of the box cells, False
     leaves the join strategy to Catalyst/AQE, None broadcasts a dim-sized
@@ -77,18 +82,16 @@ def pip_join(
     One narrow stats job over the boxes sizes the grid and doubles as the
     routing probe.
     """
+    rest = [c for c in points.columns if c != point_id]
     n, mean_w, max_w, mean_h, max_h = grid_side_stats(polygons)
     if n == 0:  # no polygons -> empty result with the contract schema
-        fields = {f.name: f.dataType.simpleString() for f in points.schema.fields}
-        return points.sparkSession.createDataFrame(
-            [],
-            f"`{point_id}` {fields[point_id]}, poly_id string, "
-            f"`{lon}` {fields[lon]}, `{lat}` {fields[lat]}",
-        )
+        return points.sparkSession.createDataFrame([], StructType(
+            [points.schema[point_id], polygons.schema["poly_id"]]
+            + [points.schema[c] for c in rest]))
     dx, dy = grid_steps(mean_w, max_w, mean_h, max_h,
                         target_cells_per_box=POINT_CELLS_PER_BOX)
     gx, gy = point_cell(F.col(lon), F.col(lat), dx, dy)
-    pts = points.select(point_id, lon, lat, gx.alias("gx"), gy.alias("gy"))
+    pts = points.select("*", gx.alias("gx"), gy.alias("gy"))
     boxes = box_cells(polygons.select("poly_id", "west", "south", "east", "north"), dx, dy)
     keys = ["gx", "gy"]
     if salt_factor > 0:
@@ -102,7 +105,7 @@ def pip_join(
     return pts.join(boxes, keys).filter(
         (F.col(lon) >= F.col("west")) & (F.col(lon) <= F.col("east"))
         & (F.col(lat) >= F.col("south")) & (F.col(lat) <= F.col("north"))
-    ).select(point_id, "poly_id", lon, lat)
+    ).select(point_id, "poly_id", *rest)
 
 
 def pip_ring_join(

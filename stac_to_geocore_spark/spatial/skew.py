@@ -1,10 +1,10 @@
 """Skew planning: measure the cell histogram, salt only the hot cells.
 
 BASELINE.json north_rule: "salted keys for skewed coastal/urban cells". The
-uniform salt in pip.py/pipeline.py replicates the whole cover side; this
-module does the targeted version from SURVEY.md §4.3: a sampled
+uniform salt of pip_join (which the flagship runs) replicates the whole box
+side; this module does the targeted version from SURVEY.md §4.3: a sampled
 groupBy(cell).count() finds hot cells, only those get per-row salts, and
-only their cover rows replicate — the replication cost is proportional to
+only their cell rows replicate — the replication cost is proportional to
 the skew, not the table.
 
 Deterministic: the salt is a hash of the point id (not rand()), so retries

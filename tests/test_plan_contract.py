@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -22,12 +23,20 @@ def _plan(df) -> str:
 
 def test_flagship_plan_shape(spark):
     p = _plan(flagship(images_df(spark, 10_000, bytes_mode="none"), polygons_df(spark, 32)))
-    # covers broadcast; the images side must never shuffle
+    # box cells broadcast; the images side must never shuffle
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
     assert p.count("Exchange") == p.count("BroadcastExchange"), "non-broadcast shuffle crept into the flagship"
-    # refine predicate fused into the join (filter-refine, no second pass)
-    assert "fully_inside" in p
+    join = re.search(r"^\(\d+\) BroadcastHashJoin\n(.*?)\n\n", p, re.M | re.S).group(1)
+    # the shared grid join: keyed on the grid cell, not on any H3 cell
+    assert re.search(r"Left keys \[2\]: \[gx#\d+L, gy#\d+L\]", join), join
+    assert re.search(r"Right keys \[2\]: \[gx#\d+L, gy#\d+L\]", join), join
+    # closed bbox refine fused into the join (filter-refine, no second pass)
+    cond = join.split("Join condition: ", 1)[1]
+    for term in (r"lon#\d+ >= west#", r"lon#\d+ <= east#", r"lat#\d+ >= south#", r"lat#\d+ <= north#"):
+        assert re.search(term, cond), cond
+    # one fused encode UDF; the join adds no Python stage
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython$", p, re.M)) == 1, p
 
 
 def test_flagship_scan_pruned(spark, tmp_path):

@@ -187,9 +187,11 @@ def _grid_lines(spark, w, s, e, n, wb, hb):
 @given(boxes=st.lists(_box_st, min_size=1, max_size=5),
        pts=st.lists(_pt_st, max_size=25), salt=st.sampled_from([0, 3]))
 def test_pip_join_matches_brute_force(boxes, pts, salt):
-    """pip_join (broadcast and salted) vs the closed-bbox predicate, on
-    random points plus every box corner and edge midpoint, and points on
-    the grid lines of the join's own steps."""
+    """pip_join (broadcast and salted), and the flagship pipeline that runs
+    it over encoded images, vs the closed-bbox predicate, on random points
+    plus every box corner and edge midpoint, and points on the grid lines
+    of the join's own steps."""
+    from stac_to_geocore_spark.pipeline import flagship
     from stac_to_geocore_spark.session import get_spark
     from stac_to_geocore_spark.spatial.grid import grid_side_stats, grid_steps
     from stac_to_geocore_spark.spatial.pip import POINT_CELLS_PER_BOX, pip_join
@@ -210,9 +212,10 @@ def test_pip_join_matches_brute_force(boxes, pts, salt):
                                    "image_id long, lon double, lat double")
     want = {(i, b) for i, (x, y) in enumerate(xy) for b, w, s, e, n in rows
             if w <= x <= e and s <= y <= n}
-    got = {(r.image_id, r.poly_id) for r in pip_join(
-        points, polys, broadcast_covers=salt == 0, salt_factor=salt).collect()}
-    assert got == want
+    for join in (pip_join, flagship):
+        got = {(r.image_id, r.poly_id) for r in join(
+            points, polys, broadcast_covers=salt == 0, salt_factor=salt).collect()}
+        assert got == want, join.__name__
 
 
 def _ray_cast_np(px, py, rx, ry):

@@ -55,8 +55,7 @@ def test_cover_superset_random_bboxes():
 def test_cover_includes_face_entering_between_samples():
     """A face that enters the bbox between two bbox samples is enumerated:
     this point encodes on face 2, which no sample of the box maps to (the
-    cover used to hold only faces 0, 1, 3 and 6 and dropped the point from
-    the flagship's cell join)."""
+    cover used to hold only faces 0, 1, 3 and 6 and missed the point)."""
     cells, _full = cover_bbox_np(-90.03, 56.59, -88.55, 59.36, 5)
     p = h3x.h3_encode_np(np.array([58.28263045]), np.array([-90.01400873]), 5)
     assert h3x.h3_unpack(p)[0][0] == 2
@@ -80,10 +79,18 @@ def test_pip_join_salted_shuffle_exact(spark, points_pdf, polys_pdf):
     assert got == _brute_pairs(points_pdf, polys_pdf)
 
 
-def test_pip_join_no_polygons(spark, points_pdf):
+def test_pip_join_no_polygons(spark, points_pdf, polys_pdf):
+    from stac_to_geocore_spark.pipeline import flagship
+
     pts = spark.createDataFrame(points_pdf)
     empty = spark.createDataFrame([], POLYGONS_SCHEMA)
     assert pip_join(pts, empty).count() == 0
+    # the flagship's empty result keeps its 9-column schema
+    out = flagship(pts, empty)
+    assert out.count() == 0
+    assert out.schema == flagship(pts, spark.createDataFrame(polys_pdf, POLYGONS_SCHEMA)).schema
+    assert out.columns == ["image_id", "poly_id", "lon", "lat", "h3_r7", "cell_p5",
+                           "s2_l12", "tile_z12_x", "tile_z12_y"]
 
 
 def test_knn_exact_vs_brute_force(spark, points_pdf):
@@ -162,36 +169,6 @@ def test_bbox_overlap_join_vs_brute_force(spark):
         if a[1] <= b[3] and a[3] >= b[1] and a[2] <= b[4] and a[4] >= b[2]:
             want.add((a[0], b[0]))
     assert got == want and ("p0", "p3") in got and ("p0", "p2") in got
-
-
-def test_cover_batch_kernel_bit_identical():
-    """cover_bbox_batch_np must reproduce cover_bbox_np EXACTLY (same cells,
-    same fully_inside, same order) for every box it claims to handle, across
-    tiny/medium/high-latitude boxes and several resolutions."""
-    from stac_to_geocore_spark.spatial.cover import cover_bbox_batch_np
-
-    rng = np.random.default_rng(11)
-    n = 600
-    lon = rng.uniform(-179, 178, n)
-    lat = rng.uniform(-85, 84, n)
-    dx = 10 ** rng.uniform(-3, 0.7, n)
-    dy = 10 ** rng.uniform(-3, 0.5, n)
-    w, e = lon - dx, lon + dx
-    s = np.maximum(lat - dy, -89.9)
-    nn = np.minimum(lat + dy, 89.9)
-    for res in (4, 6, 8):
-        bi, cells, full, handled = cover_bbox_batch_np(w, s, e, nn, res)
-        assert handled.sum() > n // 3  # the batch path takes a real share
-        order = np.argsort(bi, kind="stable")
-        bi_s, cells_s, full_s = bi[order], cells[order], full[order]
-        bounds = np.searchsorted(bi_s, np.arange(n + 1))
-        for i in range(n):
-            if not handled[i]:
-                continue
-            c_ref, f_ref = cover_bbox_np(w[i], s[i], e[i], nn[i], res)
-            lo, hi = bounds[i], bounds[i + 1]
-            assert np.array_equal(c_ref, cells_s[lo:hi]), i
-            assert np.array_equal(f_ref, full_s[lo:hi]), i
 
 
 def _scatter_boxes(spark, n, hot_fraction=0.0):
