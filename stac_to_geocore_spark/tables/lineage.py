@@ -9,17 +9,20 @@ rows/sec), so a killed job resumes by skipping committed partitions —
 BASELINE.json north_rule: "resumable from checkpoint with per-partition
 lineage + metrics".
 
-Commit protocol (two-phase, local-fs rename as the atomic swap; on a real
-cluster the same protocol rides Iceberg's snapshot commit via
-iceberg-spark-runtime — SURVEY.md §7.0):
+One stats aggregation over the persisted input lists and measures every
+partition. The pending ones commit in sorted-key batches, each one write and
+a two-phase commit (local-fs rename as the atomic swap; on a real cluster the
+same protocol rides Iceberg's snapshot commit via iceberg-spark-runtime):
 
-  1. stage:  write the batch of partitions to  <path>/.staging-<run>/
+  1. stage:  write the batch of partitions to  <path>/.staging-<run>-<batch>/
   2. swap:   os.rename each partition dir into <path>/data/<part>=<v>/
-  3. commit: append one manifest JSON line per partition
+  3. commit: append the batch's manifest JSON lines in one fsynced write
 
 A crash between (2) and (3) leaves renamed data without a manifest row; the
 next run detects the orphan dir and re-swaps/overwrites it (write is
-idempotent per partition), so resume is exactly-once per partition.
+idempotent per partition), so resume is exactly-once per partition. A crash
+in (3) can leave a last line with no newline: not a commit, so readers skip
+it; the next write truncates it and removes a killed run's staging dirs.
 
 The checksum is an order-independent XOR of xxhash64 over the row's columns,
 computed by the JVM (F.xxhash64 + bit_xor) — no Python in the data path.
@@ -27,6 +30,7 @@ computed by the JVM (F.xxhash64 + bit_xor) — no Python in the data path.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -41,7 +45,8 @@ def read_manifest(path: str) -> list[dict]:
     if not os.path.exists(mf):
         return []
     with open(mf) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        lines = f.read().split("\n")[:-1]  # the last piece is "" or the torn tail
+    return [json.loads(line) for line in lines if line.strip()]
 
 
 class LineageWriter:
@@ -64,83 +69,75 @@ class LineageWriter:
         batch_size: int | None = None,
         fail_after_batches: int | None = None,
     ) -> list[dict]:
-        """Write all not-yet-committed partitions of df.
-
-        batch_size: partitions per commit batch (None = all pending in one
-        batch). fail_after_batches: test hook — raise after N committed
-        batches to simulate a kill.
-        """
+        """Write all not-yet-committed partitions of df and return their
+        manifest rows in key order: stats from one aggregation, then one
+        staged write per batch of `batch_size` partitions (None = all).
+        Raises ValueError before any write if the partition column has nulls.
+        elapsed_sec and rows_per_sec are apportioned, not measured: the batch's
+        write time split by row share. fail_after_batches: test hook — raise
+        after N committed batches to simulate a kill."""
         pc = self.partition_col
+        for d in glob.glob(os.path.join(self.path, ".staging-*")):
+            shutil.rmtree(d, ignore_errors=True)  # left by a killed run
         os.makedirs(os.path.dirname(self.manifest_path), exist_ok=True)
+        if os.path.exists(self.manifest_path):
+            with open(self.manifest_path, "rb+") as mf:  # drop a torn tail
+                mf.truncate(mf.read().rfind(b"\n") + 1)
         done = self.completed_partitions()
 
         df = df.persist()
         try:
-            # collects only the DISTINCT partition-key list: the key is a
-            # coarse cell prefix (e.g. h3 res-5 parent) by design, so its
-            # cardinality is bounded by the cell vocabulary (~10^4-10^5 at
-            # planetary coverage), not by the row count — driver-safe at
-            # 100 TB. A caller partitioning by a high-cardinality key would
-            # also produce that many commit batches, which is the real
-            # misuse; the collect is not the binding constraint.
-            all_parts = [r[0] for r in df.select(pc).distinct().collect()]
-            pending = sorted(str(p) for p in all_parts if str(p) not in done)
-            batches = (
-                [pending]
-                if batch_size is None
-                else [pending[i : i + batch_size] for i in range(0, len(pending), batch_size)]
+            key = F.col(pc).cast("string")
+            rng = F.col("cell" if "cell" in df.columns else pc)
+            # one row per DISTINCT key reaches the driver: a coarse cell prefix
+            # by design, bounded by the cell vocabulary (~10^4-10^5 at planetary
+            # coverage), not by the row count — driver-safe at 100 TB.
+            stats = (
+                df.groupBy(key.alias("partition"))
+                .agg(
+                    F.count(F.lit(1)).alias("row_count"),
+                    F.expr("bit_xor(xxhash64(" + ", ".join(df.columns) + "))").alias("checksum"),
+                    F.array(F.min(rng), F.max(rng)).cast("array<string>").alias("cell_range"),
+                )
+                .collect()
             )
+            nulls = sum(s["row_count"] for s in stats if s["partition"] is None)
+            if nulls:
+                raise ValueError(f"partition column {pc!r} is null in {nulls} rows")
+            pending = sorted((s.asDict() for s in stats if s["partition"] not in done),
+                             key=lambda s: s["partition"])
+            step = batch_size or max(len(pending), 1)
+            batches = [pending[i : i + step] for i in range(0, len(pending), step)]
             written: list[dict] = []
             for bi, batch in enumerate(batches):
                 if fail_after_batches is not None and bi >= fail_after_batches:
                     raise RuntimeError(f"injected failure before batch {bi}")
                 t0 = time.monotonic()
-                bdf = df.filter(F.col(pc).cast("string").isin(batch))
-                # per-partition stats ride the same cached data
-                range_col = "cell" if "cell" in df.columns else pc
-                hash_cols = [c for c in df.columns]
-                stats = (
-                    bdf.groupBy(F.col(pc).cast("string").alias("p"))
-                    .agg(
-                        F.count(F.lit(1)).alias("row_count"),
-                        F.expr(
-                            "bit_xor(" + "xxhash64(" + ", ".join(hash_cols) + "))"
-                        ).alias("checksum"),
-                        F.min(range_col).alias("range_lo"),
-                        F.max(range_col).alias("range_hi"),
-                    )
-                    .collect()
-                )
                 staging = os.path.join(self.path, f".staging-{run_id}-{bi}")
+                bdf = df.filter(key.isin([s["partition"] for s in batch]))
                 bdf.write.mode("overwrite").partitionBy(pc).parquet(staging)
                 elapsed = time.monotonic() - t0
-                total_rows = sum(s["row_count"] for s in stats)
+                total_rows = sum(s["row_count"] for s in batch)
                 os.makedirs(self.data_dir, exist_ok=True)
-                for s in stats:
-                    src = os.path.join(staging, f"{pc}={s['p']}")
-                    dst = os.path.join(self.data_dir, f"{pc}={s['p']}")
+                for s in batch:
+                    src = os.path.join(staging, f"{pc}={s['partition']}")
+                    dst = os.path.join(self.data_dir, f"{pc}={s['partition']}")
                     if os.path.exists(dst):
                         shutil.rmtree(dst)  # orphan from a crash between swap+commit
                     os.rename(src, dst)
                 shutil.rmtree(staging, ignore_errors=True)
+                rate = round(total_rows / elapsed, 2) if elapsed > 0 else None
+                rows = [
+                    {"run_id": run_id, **s,
+                     "elapsed_sec": round(elapsed * s["row_count"] / total_rows, 4),
+                     "rows_per_sec": rate, "status": "committed"}
+                    for s in batch
+                ]
                 with open(self.manifest_path, "a") as mf:
-                    for s in stats:
-                        share = elapsed * (s["row_count"] / total_rows) if total_rows else 0.0
-                        row = {
-                            "run_id": run_id,
-                            "partition": s["p"],
-                            "row_count": s["row_count"],
-                            "checksum": int(s["checksum"]) if s["checksum"] is not None else 0,
-                            "cell_range": [
-                                str(s["range_lo"]),
-                                str(s["range_hi"]),
-                            ],
-                            "elapsed_sec": round(share, 4),
-                            "rows_per_sec": round(s["row_count"] / share, 2) if share > 0 else None,
-                            "status": "committed",
-                        }
-                        mf.write(json.dumps(row) + "\n")
-                        written.append(row)
+                    mf.write("".join(json.dumps(r) + "\n" for r in rows))
+                    mf.flush()
+                    os.fsync(mf.fileno())
+                written.extend(rows)
             return written
         finally:
             df.unpersist()

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,24 @@ from stac_to_geocore_spark.tables.lineage import LineageWriter, read_manifest
 @pytest.fixture()
 def encoded(spark):
     return encode_stage(images_df(spark, 3000, bytes_mode="none"))
+
+
+@pytest.fixture()
+def small(spark):
+    """400 rows over the 10 partitions "0".."9"."""
+    return spark.range(400).select("id", (F.col("id") % 10).cast("int").alias("cell_p5"))
+
+
+def _jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"lineage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lineage job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_write_commits_all_partitions(spark, tmp_path, encoded):
@@ -78,3 +97,57 @@ def test_idempotent_rerun_is_noop(spark, tmp_path, encoded):
     w = LineageWriter(str(tmp_path / "t5"))
     w.write(encoded, run_id="r1")
     assert w.write(encoded, run_id="r2") == []
+
+
+def test_one_stats_pass_then_one_write_per_batch(spark, tmp_path, small):
+    w = LineageWriter(str(tmp_path / "jobs"))
+    rows, jobs = _jobs(spark, lambda: w.write(small, run_id="r1", batch_size=3))
+    # 10 partitions in batches of 3 -> k = 4 commit batches; the stats pass
+    # and the persist add at most 3 jobs (a per-batch stats collect adds k)
+    assert jobs <= 4 + 3
+    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(10)]
+    assert [m["partition"] for m in rows] == [str(i) for i in range(10)]
+    assert sum(m["row_count"] for m in rows) == 400
+    again, jobs = _jobs(spark, lambda: w.write(small, run_id="r2", batch_size=3))
+    assert again == [] and jobs <= 3
+
+
+def test_null_partition_key_raises_before_any_write(spark, tmp_path):
+    df = spark.range(100).select(
+        "id", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id") % 7).alias("cell_p5")
+    )
+    w = LineageWriter(str(tmp_path / "nulls"))
+    with pytest.raises(ValueError, match=r"'cell_p5' is null in 10 rows"):
+        w.write(df, run_id="r1", batch_size=2)
+    assert read_manifest(w.path) == []
+    assert not os.path.exists(w.data_dir)
+
+
+def test_torn_manifest_tail_is_recommitted(spark, tmp_path, small):
+    w = LineageWriter(str(tmp_path / "torn"))
+    w.write(small, run_id="r1", batch_size=4)
+    # a kill mid-append: the last line is cut short, with no newline
+    with open(w.manifest_path, "rb+") as f:
+        f.truncate(len(f.read()) - 10)
+    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(9)]
+    rows = w.write(small, run_id="r2", batch_size=4)
+    assert [(m["partition"], m["run_id"]) for m in rows] == [("9", "r2")]
+    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(10)]
+    assert w.read(spark).count() == 400
+    # a malformed line that does end in a newline is corruption, not a torn tail
+    with open(w.manifest_path, "a") as f:
+        f.write("{not json\n")
+    with pytest.raises(ValueError):
+        read_manifest(w.path)
+
+
+def test_stale_staging_dirs_are_removed(spark, tmp_path, small):
+    path = tmp_path / "stale"
+    stale = path / ".staging-killed-0" / "cell_p5=3"
+    stale.mkdir(parents=True)
+    (stale / "part-00000.parquet").write_bytes(b"left by a killed run")
+    w = LineageWriter(str(path))
+    w.write(small, run_id="r1")
+    assert not (path / ".staging-killed-0").exists()
+    assert sorted(os.listdir(path)) == ["_lineage", "data"]
+    assert w.read(spark).count() == 400

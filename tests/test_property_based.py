@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from stac_to_geocore_spark.cells import h3x
 from stac_to_geocore_spark.cells.s2 import s2_encode_np, s2_parent_np
@@ -80,6 +80,7 @@ _ts0 = 1_600_000_000  # fixed epoch base; offsets in seconds
     st.lists(st.tuples(st.integers(0, 4), st.integers(0, 500_000)), min_size=1, max_size=40),
     st.lists(st.tuples(st.integers(0, 4), st.integers(0, 500_000)), min_size=1, max_size=25),
 )
+@example([(0, 0)], [(0, 0)])  # a once-failing case: one left and one right row, equal ts
 def test_asof_join_matches_brute_force(left_rows, right_rows):
     """Both as-of plans vs a brute-force per-row argmax over random keys
     and timestamps (including equal-ts ties and id tie-breaks)."""
