@@ -110,8 +110,8 @@ def main() -> None:
         "top_customers_window", "events_hourly", "events_sessions",
         "tile_assign", "pip_assign", "knn_ring",
         # the 100x-scale code paths, not just the dim/broadcast routes
-        # (round-3 VERDICT #6): salted-shuffle PIP and distributed-covers
-        # region join — a regression in either now moves a committed number
+        # (round-3 VERDICT #6): salted-shuffle PIP and the both-big
+        # sort-merge region join — a regression in either moves a committed number
         "pip_salted", "bbox_overlap_distributed",
         "dedup_exact", "doc_stats", "stopword_score", "ann_topk",
         # true-BPE counting under the 2000-merge frozen vocab: a committed

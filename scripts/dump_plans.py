@@ -1,8 +1,11 @@
 """Regenerate docs/PLANS.md plan dumps for the audited queries.
 
 Usage: python scripts/dump_plans.py <section> ...
-Sections: flagship, q5, q1, pip_assign, minhash, asof
-Prints each as '=== <name> ===' + explain('formatted') output.
+Sections: flagship, q5, q1, pip_assign, minhash, asof, range_join,
+bbox_overlap
+Prints each as '=== <name> ===' + explain('formatted') output. A section
+suffixed ':final' (e.g. bbox_overlap:final) runs the query instead and
+prints its final adaptive plan, where AQE's exchange reuse shows.
 """
 
 import contextlib
@@ -30,10 +33,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as m
 
-    qs = m.queries()
+    qs = {**m.queries(), **m.extra_queries()}
     targets = sys.argv[1:] or ["flagship", "q5", "q1", "pip_assign", "minhash", "asof"]
     for t in targets:
-        if t == "flagship":
+        name, _, final = t.partition(":")
+        if name == "flagship":
             from bench_scaling import ensure_images_table
             from stac_to_geocore_spark.fixtures import polygons_df
             from stac_to_geocore_spark.pipeline import flagship
@@ -45,10 +49,15 @@ def main() -> None:
                 "q5": "q5_local_supplier", "q1": "q1_pricing_summary",
                 "pip_assign": "pip_assign", "minhash": "minhash_near_dup",
                 "asof": "asof_latest_order", "range_join": "range_join_events",
-            }[t]
+                "bbox_overlap": "bbox_overlap_distributed",
+            }[name]
             df = qs[name](spark, "/root/testdata/sf0.01")
         print(f"=== {t} ===")
-        print(fmt(df))
+        if final:
+            df.collect()
+            print(df._jdf.queryExecution().executedPlan().toString())
+        else:
+            print(fmt(df))
 
 
 if __name__ == "__main__":

@@ -17,9 +17,10 @@ boundary, no driver-side cover planning, no padding ring.
 
 Cell size is a pure performance knob (outputs are exact at ANY step, which
 the tests check): one narrow pure-JVM aggregation measures the boxes (count
-plus mean/max extents — five scalars) and grid_steps sizes the cells from
-those. H3/S2 cells are not join keys anywhere; they are output payload
-(the flagship's h3/cell_p5/s2 columns, sql_functions, the cover UDTF).
+plus mean/max extents) and rejects the ones no cell range can cover, and
+grid_steps sizes the cells from those. H3/S2 cells are not join keys
+anywhere; they are output payload (the flagship's h3/cell_p5/s2 columns,
+sql_functions, the cover UDTF).
 """
 
 from __future__ import annotations
@@ -41,29 +42,42 @@ DRIVER_DIM_MAX = 10_000
 def grid_side_stats(df: DataFrame) -> tuple[int, float, float, float, float]:
     """(row_count, mean_w, max_w, mean_h, max_h) of a box table
     (west, south, east, north) in ONE narrow pure-JVM aggregation — the
-    count doubles as the broadcast-routing probe, so nothing but five
-    scalars reaches the driver."""
+    count doubles as the broadcast-routing probe, so nothing but six
+    scalars reaches the driver.
+
+    The same aggregation counts the boxes the grid cannot cover: west >
+    east, south > north, or a null, NaN or infinite bound. Any such row
+    raises ValueError, where it would otherwise drop out of a join
+    silently or blow up the cell explosion."""
+    bad = (F.col("west") > F.col("east")) | (F.col("south") > F.col("north"))
+    for c in ("west", "south", "east", "north"):
+        bad = bad | F.col(c).isNull() | F.isnan(c) | (F.abs(c) == float("inf"))
     row = df.select(
         F.count(F.lit(1)).alias("n"),
         F.avg(F.col("east") - F.col("west")).alias("mw"),
         F.max(F.col("east") - F.col("west")).alias("xw"),
         F.avg(F.col("north") - F.col("south")).alias("mh"),
         F.max(F.col("north") - F.col("south")).alias("xh"),
+        F.count_if(bad).alias("bad"),
     ).collect()[0]
+    if row["bad"]:
+        raise ValueError(
+            f"{row['bad']} box row(s) have west > east, south > north, or a "
+            f"null or non-finite bound; a dateline-crossing box (west > east) "
+            f"must be split at 180 degrees into two boxes with the same id for now"
+        )
     return (int(row["n"]),) + tuple(
         float(v) if v is not None else 0.0
         for v in (row["mw"], row["xw"], row["mh"], row["xh"]))
 
 
 def grid_steps(mean_w: float, max_w: float, mean_h: float, max_h: float,
-               max_cells: int = MAX_CELLS,
-               target_cells_per_box: float = 0.5) -> tuple[float, float]:
+               target_cells_per_box: float,
+               max_cells: int = MAX_CELLS) -> tuple[float, float]:
     """Grid steps (dx, dy) in degrees. Sized so the MEAN box covers about
-    target_cells_per_box cells (cover rows = shuffle/broadcast volume;
-    measured at sf1.0 on the orders-bbox self-join: targets 0.25-1.0 are
-    flat within noise, 2.0 costs +25%, 4.0 +60%, 16.0 3x — so overlap
-    defaults to 0.5), floored so the LARGEST box never explodes past
-    ~max_cells cells."""
+    target_cells_per_box cells (cover rows = shuffle/broadcast volume; each
+    join picks its own target), floored so the LARGEST box never explodes
+    past ~max_cells cells."""
     k = 2.0 / math.sqrt(max(0.01, target_cells_per_box))
     lim = max(2.0, math.sqrt(max(1, max_cells)) - 1.0)
     dx = max(k * mean_w, max_w / lim, 1e-12)

@@ -80,7 +80,8 @@ def pip_join(
     side must shuffle).
 
     One narrow stats job over the boxes sizes the grid and doubles as the
-    routing probe.
+    routing probe; a box with west > east, south > north or a null or
+    non-finite bound raises ValueError there (grid_side_stats).
     """
     rest = [c for c in points.columns if c != point_id]
     n, mean_w, max_w, mean_h, max_h = grid_side_stats(polygons)

@@ -1,14 +1,11 @@
-"""Skew planning: measure the cell histogram, salt only the hot cells.
+"""Skew planning: measure a sampled cell histogram, find the hot cells.
 
-BASELINE.json north_rule: "salted keys for skewed coastal/urban cells". The
-uniform salt of pip_join (which the flagship runs) replicates the whole box
-side; this module does the targeted version from SURVEY.md §4.3: a sampled
-groupBy(cell).count() finds hot cells, only those get per-row salts, and
-only their cell rows replicate — the replication cost is proportional to
-the skew, not the table.
-
-Deterministic: the salt is a hash of the point id (not rand()), so retries
-and resume produce identical assignments.
+plan_salts is the histogram half of targeted salting (SURVEY.md §4.3): a
+sampled groupBy(cell).count() finds the cells whose count is far above the
+mean. No join salts by it any more — bbox_overlap_join runs one plan and
+leaves cell skew to AQE's skew-join split, and pip_join's salt_factor is a
+uniform salt — so its one caller is the benchmark's traced probe
+(perfbench/workloads.py), which times it as a per-layer figure.
 """
 
 from __future__ import annotations
@@ -74,28 +71,3 @@ def plan_salts(
             out[int(r["cell"])] = int(min(max_salt, max(2, round(r["count"] / mean / hot_multiplier * 4))))
     return out
 
-
-def salted_cell_join(
-    points: DataFrame,
-    covers: DataFrame,
-    salts: dict[int, int],
-    cell_col: str = "cell",
-    point_id: str = "image_id",
-) -> DataFrame:
-    """Equi-join points⋈covers on cell with per-hot-cell salting.
-
-    points gain salt = hash(point_id) % salt_factor(cell) (0 for cold cells);
-    covers explode to one row per salt value for hot cells only. The join key
-    becomes (cell, salt) — hot cells split across salt_factor reducers, cold
-    cells pay nothing.
-    """
-    if not salts:
-        return points.join(covers, cell_col)
-    salt_map = F.create_map(*[F.lit(x) for kv in salts.items() for x in kv])
-    factor_p = F.coalesce(salt_map[F.col(cell_col)], F.lit(1))
-    pts = points.withColumn("salt", F.pmod(F.xxhash64(point_id), factor_p).cast("int"))
-    cov = covers.withColumn(
-        "salt",
-        F.explode(F.sequence(F.lit(0), F.coalesce(salt_map[F.col(cell_col)], F.lit(1)) - 1)),
-    )
-    return pts.join(cov, [cell_col, "salt"])

@@ -12,18 +12,10 @@ REF_DIR = "/root/reference/stac-to-geocore"
 if REF_DIR not in sys.path:
     sys.path.insert(0, REF_DIR)
 
-from stac_to_geocore_spark.fixtures import (
-    API_ROOT,
-    POLYGONS_SCHEMA,
-    gen_polygons_pdf,
-    image_centroids,
-    images_df,
-    make_fake_stac_fetch,
-)
+from stac_to_geocore_spark.fixtures import API_ROOT, images_df, make_fake_stac_fetch
 from stac_to_geocore_spark.job import run_harvest
 from stac_to_geocore_spark.sources.sinks import LocalObjectStore
-from stac_to_geocore_spark.spatial.cover import covers_pdf
-from stac_to_geocore_spark.spatial.skew import plan_salts, salted_cell_join
+from stac_to_geocore_spark.spatial.skew import plan_salts
 
 
 def test_run_harvest_end_to_end(spark, tmp_path):
@@ -122,53 +114,3 @@ def test_plan_salts_finds_hot_cells(spark):
     assert salts, "clustered fixture must produce hot cells"
     assert all(2 <= v <= 32 for v in salts.values())
 
-
-def test_salted_cell_join_matches_plain(spark):
-    from stac_to_geocore_spark.cells.h3x import h3_encode
-
-    imgs = images_df(spark, 20_000, bytes_mode="none")
-    pts = imgs.withColumn("cell", h3_encode(F.col("lat"), F.col("lon"), 5)).select("image_id", "lon", "lat", "cell")
-    covers = spark.createDataFrame(
-        covers_pdf(gen_polygons_pdf(24), fixed_res=5),
-        "poly_id string, res int, cell long, fully_inside boolean, west double, south double, east double, north double",
-    )
-    salts = plan_salts(pts, sample_fraction=0.5)
-    plain = {(r.image_id, r.poly_id) for r in pts.join(covers, "cell").select("image_id", "poly_id").collect()}
-    salted = {
-        (r.image_id, r.poly_id)
-        for r in salted_cell_join(pts, covers, salts).select("image_id", "poly_id").collect()
-    }
-    assert plain == salted
-
-
-def test_salting_balances_hot_cell_across_subkeys(spark):
-    """The point of salting is load balance: a hot cell's rows must spread
-    ~evenly across its salt_factor sub-keys (the join reducers), not just
-    produce the same result. Structural check — no timing, host-independent."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    # one pathological cell holding 90% of the rows (coastal-city skew)
-    n_hot, n_cold = 9000, 1000
-    pdf = pd.DataFrame({
-        "image_id": [f"p{i:05d}" for i in range(n_hot + n_cold)],
-        "cell": [7777] * n_hot + [100 + i % 50 for i in range(n_cold)],
-    })
-    pts = spark.createDataFrame(pdf)
-    salts = plan_salts(pts, sample_fraction=1.0)
-    assert 7777 in salts and salts[7777] >= 2, salts
-    factor = salts[7777]
-
-    covers = spark.createDataFrame(
-        pd.DataFrame({"cell": [7777] + [100 + i for i in range(50)],
-                      "poly_id": ["hot"] + [f"c{i}" for i in range(50)]})
-    )
-    joined = salted_cell_join(pts, covers, salts)
-    shares = (
-        joined.filter(F.col("cell") == 7777)
-        .groupBy("salt").count().toPandas().set_index("salt")["count"]
-    )
-    assert len(shares) == factor, f"hot cell used {len(shares)} of {factor} salts"
-    # deterministic-hash split: every sub-key within 30% of the even share
-    even = n_hot / factor
-    assert shares.max() <= 1.3 * even and shares.min() >= 0.7 * even, shares.to_dict()

@@ -89,15 +89,15 @@ def test_dim_joins_broadcast(spark):
     assert "BroadcastHashJoin" in p  # nation/region dims
 
 
-def test_bbox_overlap_both_big_sort_merges_never_broadcasts(spark):
-    """Both sides above driver_plan_max: the cover equi-join must be a
+def test_bbox_overlap_both_big_sort_merges_never_broadcasts(spark, monkeypatch):
+    """Both sides above DRIVER_DIM_MAX: the cell equi-join must be a
     SortMergeJoin on the cell key — a broadcast of a multi-million-row
     cover side OOMs real drivers (observed in a vanilla 1g session) and is
     never the 100 TB plan."""
     import numpy as np
     import pandas as pd
 
-    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
+    import stac_to_geocore_spark.spatial.overlap as ov
 
     rng = np.random.default_rng(23)
     n = 200
@@ -107,9 +107,24 @@ def test_bbox_overlap_both_big_sort_merges_never_broadcasts(spark):
         "poly_id": [f"b{i}" for i in range(n)],
         "west": w, "south": s, "east": w + 0.5, "north": s + 0.4,
     }))
-    p = _plan(bbox_overlap_join(df, df, driver_plan_max=50))
+    monkeypatch.setattr(ov, "DRIVER_DIM_MAX", 50)
+    p = _plan(ov.bbox_overlap_join(df, df))
     assert "SortMergeJoin" in p, p.splitlines()[:25]
     assert "BroadcastHashJoin" not in p
+
+
+def test_bbox_overlap_small_side_broadcasts(spark, monkeypatch):
+    """One side dim-sized: the smaller side's cells are the broadcast build
+    side, whichever argument it is — never the big side."""
+    import stac_to_geocore_spark.spatial.overlap as ov
+
+    big = polygons_df(spark, 120)
+    small = polygons_df(spark, 30, seed=5)
+    monkeypatch.setattr(ov, "DRIVER_DIM_MAX", 50)
+    for a, b, build in ((small, big, "BuildLeft"), (big, small, "BuildRight")):
+        p = _plan(ov.bbox_overlap_join(a, b))
+        assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p, p.splitlines()[:25]
+        assert build in p, p.splitlines()[:25]
 
 
 _PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")

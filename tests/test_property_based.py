@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from stac_to_geocore_spark.cells import h3x
@@ -217,6 +218,50 @@ def test_pip_join_matches_brute_force(boxes, pts, salt):
         got = {(r.image_id, r.poly_id) for r in join(
             points, polys, broadcast_covers=salt == 0, salt_factor=salt).collect()}
         assert got == want, join.__name__
+
+
+@settings(max_examples=8, deadline=None)
+@given(boxes=st.lists(_box_st, min_size=1, max_size=5),
+       side_b=st.sampled_from(["self", "same_rows", "every_other_row"]))
+def test_bbox_overlap_join_matches_brute_force(boxes, side_b):
+    """bbox_overlap_join vs the closed-intersection predicate, compared as a
+    multiset of pairs (a pair emitted twice fails), on both routes (the
+    broadcast join, and the sort-merge forced by DRIVER_DIM_MAX = 0), as a
+    self-join and as a two-table join. Every random box also gets a
+    neighbour touching its east edge, one touching its north-east corner,
+    a box contained in it, and a copy moved onto the join's grid lines —
+    copies keep the widths and heights, so the grid the join derives stays
+    (to within rounding) the one the copies were placed on."""
+    import math
+    from collections import Counter
+
+    import stac_to_geocore_spark.spatial.overlap as ov
+    from stac_to_geocore_spark.session import get_spark
+    from stac_to_geocore_spark.spatial.grid import grid_side_stats, grid_steps
+
+    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    schema = "poly_id string, west double, south double, east double, north double"
+    base = []
+    for x, y, w, h in boxes:
+        base += [(x, y, x + w, y + h), (x + w, y, x + 2 * w, y + h),
+                 (x + w, y + h, x + 1.5 * w, y + 1.5 * h),
+                 (x + w / 4, y + h / 4, x + w / 2, y + h / 2)]
+    _n, *ext = grid_side_stats(spark.createDataFrame(
+        [(f"b{i}",) + b for i, b in enumerate(base)], schema))
+    dx, dy = grid_steps(*ext, ov.CELLS_PER_BOX, ov.MAX_CELLS)
+    on_grid = [(math.floor(w / dx) * dx, math.floor(s / dy) * dy) for w, s, _e, _n in base]
+    rows = [(f"b{i}",) + b for i, b in enumerate(
+        base + [(gx, gy, gx + (e - w), gy + (n - s)) for (gx, gy), (w, s, e, n) in zip(on_grid, base)])]
+    rows_b = {"self": rows, "same_rows": rows, "every_other_row": rows[::2]}[side_b]
+    polys_a = spark.createDataFrame(rows, schema)
+    polys_b = polys_a if side_b == "self" else spark.createDataFrame(rows_b, schema)
+    want = Counter((a[0], b[0]) for a in rows for b in rows_b
+                   if a[1] <= b[3] and a[3] >= b[1] and a[2] <= b[4] and a[4] >= b[2])
+    for dim_max in (ov.DRIVER_DIM_MAX, 0):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(ov, "DRIVER_DIM_MAX", dim_max)
+            got = Counter((r.id_a, r.id_b) for r in ov.bbox_overlap_join(polys_a, polys_b).collect())
+        assert got == want, f"DRIVER_DIM_MAX={dim_max}"
 
 
 def _ray_cast_np(px, py, rx, ry):

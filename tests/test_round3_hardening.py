@@ -2,7 +2,7 @@
 
 - knn_join raises on non-convergence (no silent partial results) and stays
   exact with many queries per round.
-- bbox_overlap_join routes sides above driver_plan_max through the
+- bbox_overlap_join routes sides above DRIVER_DIM_MAX through the
   distributed cell-join path.
 - merge_manifest_parts survives a mid-merge crash with the old manifest and
   every part file intact (re-run merges cleanly).
@@ -88,8 +88,8 @@ def test_knn_k_exceeds_point_count_ranks_all_points(spark):
 
 # ------------------------------------------------------- bbox_overlap_join
 
-def test_bbox_overlap_distributed_path_no_driver_collect(spark):
-    """Both sides above driver_plan_max: the join runs distributed (a
+def test_bbox_overlap_distributed_path_no_driver_collect(spark, monkeypatch):
+    """Both sides above DRIVER_DIM_MAX: the join runs distributed (a
     cell equi-join, nothing but stats scalars reaches the driver), and the
     pair set must match the analytic neighbor structure of a grid."""
     import stac_to_geocore_spark.spatial.overlap as ov
@@ -105,8 +105,9 @@ def test_bbox_overlap_distributed_path_no_driver_collect(spark):
         "north": [11.0] * n,
     }))
 
+    monkeypatch.setattr(ov, "DRIVER_DIM_MAX", 50)
     pairs = (
-        ov.bbox_overlap_join(big, big, driver_plan_max=50)
+        ov.bbox_overlap_join(big, big)
         .filter(F.col("id_a") < F.col("id_b"))
         .toPandas()
     )
@@ -115,15 +116,16 @@ def test_bbox_overlap_distributed_path_no_driver_collect(spark):
     assert got == want, f"missing={want - got} extra={got - want}"
 
 
-def test_bbox_overlap_mixed_small_big_matches_small_small(spark):
+def test_bbox_overlap_mixed_small_big_matches_small_small(spark, monkeypatch):
     """Big x small must produce the same pairs as the all-driver-side plan."""
+    import stac_to_geocore_spark.spatial.overlap as ov
     from stac_to_geocore_spark.fixtures import POLYGONS_SCHEMA, gen_polygons_pdf
-    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
     pa = spark.createDataFrame(gen_polygons_pdf(40, seed=3), POLYGONS_SCHEMA)
     pb = spark.createDataFrame(gen_polygons_pdf(25, seed=9), POLYGONS_SCHEMA)
-    small = bbox_overlap_join(pa, pb).toPandas()
-    forced = bbox_overlap_join(pa, pb, driver_plan_max=10).toPandas()
+    small = ov.bbox_overlap_join(pa, pb).toPandas()
+    monkeypatch.setattr(ov, "DRIVER_DIM_MAX", 10)
+    forced = ov.bbox_overlap_join(pa, pb).toPandas()
     key = lambda df: set(zip(df.id_a, df.id_b))  # noqa: E731
     assert key(small) == key(forced)
 
@@ -259,11 +261,11 @@ def test_snapshot_commit_is_compare_and_swap(spark, tmp_path):
 # ------------------------------------------- overlap grid-step invariance
 
 
-def test_overlap_join_output_invariant_under_res_choice(spark):
+def test_overlap_join_output_invariant_under_res_choice(spark, monkeypatch):
     """Same exact pair set at the default grid resolution (step), a much
     finer one, and a much coarser one — the refine predicate makes the
     step a pure performance knob."""
-    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
+    import stac_to_geocore_spark.spatial.overlap as ov
 
     rows = []
     import numpy as np
@@ -275,14 +277,17 @@ def test_overlap_join_output_invariant_under_res_choice(spark):
         rows.append((f"b{i}", float(w), float(s), float(w + 0.4), float(s + 0.3)))
     df = spark.createDataFrame(rows, "poly_id string, west double, south double, east double, north double")
 
-    def pairs(**kw):
-        return {
-            (r.id_a, r.id_b)
-            for r in bbox_overlap_join(df, df, **kw).filter("id_a < id_b").collect()
-        }
+    def pairs(cells_per_box=ov.CELLS_PER_BOX, max_cells=ov.MAX_CELLS):
+        with monkeypatch.context() as m:
+            m.setattr(ov, "CELLS_PER_BOX", cells_per_box)
+            m.setattr(ov, "MAX_CELLS", max_cells)
+            return {
+                (r.id_a, r.id_b)
+                for r in ov.bbox_overlap_join(df, df).filter("id_a < id_b").collect()
+            }
 
     tuned = pairs()
-    assert tuned == pairs(target_cells_per_box=64.0)
-    assert tuned == pairs(target_cells_per_box=0.01)
-    assert tuned == pairs(target_cells_per_box=64.0, max_cells=4)
+    assert tuned == pairs(cells_per_box=64.0)
+    assert tuned == pairs(cells_per_box=0.01)
+    assert tuned == pairs(cells_per_box=64.0, max_cells=4)
     assert len(tuned) > 0

@@ -221,55 +221,104 @@ def test_bbox_overlap_self_join_reuses_exchange(spark):
     assert "HashAggregate" not in final and "SortAggregate" not in final, final[:2000]
 
 
-def test_bbox_overlap_salted_hot_cells_same_result(spark):
-    """A stacked 'city' of boxes must trigger hot-cell salting on the
-    both-big path, and the salted join must return EXACTLY the plain rows."""
+def _overlap(polys_a, polys_b):
+    """bbox_overlap_join's (id_a, id_b) rows as a sorted list (a multiset,
+    so a duplicated pair shows) and its physical plan."""
     from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
+    out = bbox_overlap_join(polys_a, polys_b)
+    rows = sorted((r.id_a, r.id_b) for r in out.collect())
+    return rows, out._jdf.queryExecution().executedPlan().toString()
+
+
+def _overlap_broadcast(monkeypatch, polys_a, polys_b):
+    """_overlap routed through the broadcast join: DRIVER_DIM_MAX above
+    both sides' row counts."""
+    import stac_to_geocore_spark.spatial.overlap as ov
+
+    with monkeypatch.context() as m:
+        m.setattr(ov, "DRIVER_DIM_MAX", 10**6)
+        rows, plan = _overlap(polys_a, polys_b)
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+    return rows
+
+
+def test_bbox_overlap_salted_hot_cells_same_result(spark, monkeypatch):
+    """A stacked 'city' of boxes (the fixture that once triggered hot-cell
+    salting): the both-big sort-merge self-join must return EXACTLY the
+    broadcast route's rows, hot cells and all."""
     polys = _scatter_boxes(spark, 10500, hot_fraction=0.02)
-    # hot_fraction puts ~210 near-identical boxes on one spot: their covers
-    # land on the same handful of cells, far above 8x the mean cell count
-    salted = bbox_overlap_join(polys, polys, salt_hot_cells=True)
-    plain = bbox_overlap_join(polys, polys, salt_hot_cells=False)
-    s_plan = salted._jdf.queryExecution().optimizedPlan().toString()
-    assert "salt" in s_plan  # the salted join shape was actually planned
-    got_s = {(r.id_a, r.id_b) for r in salted.collect()}
-    got_p = {(r.id_a, r.id_b) for r in plain.collect()}
-    assert got_s == got_p and len(got_s) > 0
+    # hot_fraction puts ~210 near-identical boxes on one spot: their cells
+    # pile up far above the mean cell count
+    got, plan = _overlap(polys, polys)
+    assert "SortMergeJoin" in plan
+    assert got == _overlap_broadcast(monkeypatch, polys, polys) and len(got) > 0
 
 
-def test_bbox_overlap_non_self_paths_match_self_join(spark):
-    """The both-big NON-self branches (symmetric tagged join, and salted)
-    must return exactly what the self-join path returns on the same data —
-    a second DataFrame over identical rows is NOT `is`-identical, so it
-    exercises the code path real two-table joins take."""
-    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
-
+def test_bbox_overlap_non_self_paths_match_self_join(spark, monkeypatch):
+    """A two-table join over identical rows must return exactly what the
+    self-join returns — a second DataFrame over the same rows is NOT
+    `is`-identical, so it takes the path real two-table joins take (two
+    stats probes, two cell plans) — on both routes."""
     polys = _scatter_boxes(spark, 10500, hot_fraction=0.02)
     other = polys.select("*")  # same rows, different plan object
     assert other is not polys
-    ref = {(r.id_a, r.id_b)
-           for r in bbox_overlap_join(polys, polys, salt_hot_cells=False).collect()}
-    sym = {(r.id_a, r.id_b)
-           for r in bbox_overlap_join(polys, other, salt_hot_cells=False).collect()}
-    salted = {(r.id_a, r.id_b)
-              for r in bbox_overlap_join(polys, other, salt_hot_cells=True).collect()}
-    assert sym == ref and salted == ref and len(ref) > 0
+    ref, _ = _overlap(polys, polys)
+    sym, plan = _overlap(polys, other)
+    assert "SortMergeJoin" in plan
+    assert sym == ref and len(ref) > 0
+    assert _overlap_broadcast(monkeypatch, polys, other) == ref
 
 
-def test_bbox_overlap_salts_hot_cells_on_side_b_only(spark):
-    """Round-5 blind spot, closed in round 6: the salt histogram samples
-    BOTH sides of a two-table join, so a 'dense city' present ONLY on side
-    B (sparse AOIs joined against a dense footprint table) must still take
-    the salted plan — and must return exactly the unsalted join's rows."""
-    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
-
+def test_bbox_overlap_salts_hot_cells_on_side_b_only(spark, monkeypatch):
+    """A 'dense city' present ONLY on side B (sparse AOIs joined against a
+    dense footprint table): the sort-merge join must return exactly the
+    broadcast route's rows."""
     polys_a = _scatter_boxes(spark, 10500)                       # uniform
     polys_b = _scatter_boxes(spark, 10500, hot_fraction=0.02)    # hot stack
-    salted = bbox_overlap_join(polys_a, polys_b, salt_hot_cells=True)
-    s_plan = salted._jdf.queryExecution().optimizedPlan().toString()
-    assert "salt" in s_plan, "B-side-only hot cells must trigger salting"
-    plain = bbox_overlap_join(polys_a, polys_b, salt_hot_cells=False)
-    got_s = {(r.id_a, r.id_b) for r in salted.collect()}
-    got_p = {(r.id_a, r.id_b) for r in plain.collect()}
-    assert got_s == got_p and len(got_s) > 0
+    got, plan = _overlap(polys_a, polys_b)
+    assert "SortMergeJoin" in plan
+    assert got == _overlap_broadcast(monkeypatch, polys_a, polys_b) and len(got) > 0
+
+
+def test_bbox_overlap_self_join_builds_with_one_stats_probe(spark):
+    """BUILDING a both-big self-join (before any action) runs only the one
+    stats aggregation over its one input, which AQE runs as at most 2
+    jobs: no histogram probe, no second measurement of the same input."""
+    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
+
+    polys = _scatter_boxes(spark, 11000)
+    sc = spark.sparkContext
+    group = "overlap-build-jobs"
+    sc.setJobGroup(group, "bbox_overlap_join build")
+    try:
+        bbox_overlap_join(polys, polys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+@pytest.mark.parametrize("bad", [
+    ("dateline", 170.0, -10.0, -170.0, 10.0),
+    ("upside-down", 10.0, 5.0, 11.0, 4.0),
+    ("nan", float("nan"), 0.0, 1.0, 1.0),
+    ("inf", 0.0, 0.0, float("inf"), 1.0),
+    ("null", 0.0, None, 1.0, 1.0),
+], ids=lambda b: b[0])
+def test_spatial_joins_reject_bad_boxes(spark, bad):
+    """A box the grid cannot cover must fail loudly in both box joins: a
+    dateline box (west > east) used to drop its true overlaps silently
+    from bbox_overlap_join and crash pip_join inside sequence(), and a
+    NaN box vanished from both."""
+    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
+
+    rows = [bad] + [(f"b{x}", float(x), -1.0, x + 0.5, 1.0) for x in (175, 176, 177, 178, -179, -178)]
+    schema = "poly_id string, west double, south double, east double, north double"  # nullable
+    boxes = spark.createDataFrame(rows, schema)
+    good = spark.createDataFrame(rows[1:], schema)
+    pts = spark.createDataFrame([("p0", 175.2, 0.0)], "image_id string, lon double, lat double")
+    for run in (lambda: bbox_overlap_join(boxes, boxes),
+                lambda: bbox_overlap_join(good, boxes),
+                lambda: pip_join(pts, boxes)):
+        with pytest.raises(ValueError, match=r"^1 box row\(s\) .* must be split"):
+            run()
