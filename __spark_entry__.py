@@ -1326,9 +1326,9 @@ def _q_stac_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_geocore_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_to_geocore_spark.compat import translate_items
-    from stac_to_geocore_spark.fixtures import stac_collections_df, stac_items_df
+    from stac_to_geocore_spark.fixtures import stac_collections_fixture, stac_items_df
 
-    return translate_items(stac_items_df(spark, 120), stac_collections_df(spark)).select(
+    return translate_items(stac_items_df(spark, 120), stac_collections_fixture()).select(
         "key", F.length("json").alias("json_len"), F.md5("json").alias("json_md5")
     )
 
@@ -1337,9 +1337,10 @@ def _q_geocore_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collection translation (ref app.py:118-135, stac_to_geocore.py:374-454):
     covers SURVEY §2 M2/R2/P2/P5/P6 through the driver gate."""
     from stac_to_geocore_spark.compat import translate_collections
-    from stac_to_geocore_spark.fixtures import stac_collections_df
+    from stac_to_geocore_spark.fixtures import stac_collections_fixture
 
-    return translate_collections(stac_collections_df(spark)).select(
+    docs = translate_collections(stac_collections_fixture())
+    return spark.createDataFrame(docs, "key string, json string").select(
         "key", F.length("json").alias("json_len"), F.md5("json").alias("json_md5")
     )
 
@@ -1347,11 +1348,10 @@ def _q_geocore_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_geocore_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Root-catalog translation (ref app.py:72-116): single driver-side record
     (the reference translates exactly one root per run); covers M1/R1/J4."""
-    from stac_to_geocore_spark.compat.translate import _coll_dict, translate_root
-    from stac_to_geocore_spark.fixtures import stac_collections_df, stac_root_fixture
+    from stac_to_geocore_spark.compat.translate import translate_root
+    from stac_to_geocore_spark.fixtures import stac_collections_fixture, stac_root_fixture
 
-    colls = [_coll_dict(r) for r in stac_collections_df(spark).toPandas().to_dict("records")]
-    key, doc = translate_root(stac_root_fixture(), colls)
+    key, doc = translate_root(stac_root_fixture(), stac_collections_fixture())
     return spark.createDataFrame([(key, doc)], "key string, json string").select(
         "key", F.length("json").alias("json_len"), F.md5("json").alias("json_md5")
     )

@@ -211,7 +211,9 @@ def asset_options(assets) -> list[dict]:
     for a in (assets or {}).values():
         href = a.get("href")
         media = a.get("type", "")
-        name = a.get("title", "Unknown/Inconnu")
+        name = a.get("title")
+        if name is None:  # explicit null reads as absent; the ref crashes on it
+            name = "Unknown/Inconnu"
         role_key = ", ".join(a.get("roles"))  # None roles crash in the ref too
         name_en, name_fr = name.split("/") if "/" in name else (name, name)
         fmt = MEDIA_FORMAT.get(media, "Other")

@@ -2,33 +2,34 @@
 
 Reference lifecycle (app.py:36-170) is a single-threaded loop: per record it
 re-fetches the null template from S3, mutates it, uploads one JSON. Here the
-same semantics run as a distributed dataflow:
+same per-record functions run on the raw STAC JSON dicts, as the reference's
+do, and only the loop is distributed:
 
-  collections_df (small dim)  --driver build--> broadcast coll-meta dict
-        (the reference's create_coll_dict, stac_to_geocore.py:553-566)
-  items_df --mapInPandas(batch translate)--> (key, json) rows
-        J1 broadcast probe happens inside the batch against the broadcast
-        meta (equivalent to items ⟕ broadcast(colls) since the probe is
-        get(coll_id, {}) — ref :589)
-  collections_df --mapInPandas--> (key, json) rows
-  root --driver (1 record)--> (key, json)
+  colls (one /collections body) --driver--> coll-meta dict
+        (the reference's create_coll_dict, stac_to_geocore.py:553-566),
+        shipped with the item task closure
+  items --mapInPandas(item_doc per record)--> (key, json) rows
+        J1 probe happens per record against the meta dict (equivalent to
+        items ⟕ broadcast(colls) since the probe is get(coll_id, {}) — ref :589)
+  colls --driver (collection_doc per record)--> [(key, json)]
+  root  --driver (1 record)--> (key, json)
 
 Byte parity: per-record assembly + json.dumps(indent=4, ensure_ascii=False)
-happens in Python inside Arrow batches (F.to_json cannot produce the
-reference's serialization — SURVEY.md §1.4). Null-vs-absent normalization:
-Spark rows cannot distinguish a JSON key that is absent from one that is
-null, so None-valued optional keys are dropped when rebuilding dicts
-(documented deviation; the reference crashes on several explicit-null cases
-the engine therefore handles totally).
+happens in Python (F.to_json cannot produce the reference's serialization —
+SURVEY.md §1.4). The records are never typed into Spark structs, so integer
+coordinates, explicit nulls and extra keys reach the rules exactly as the
+reference sees them. The one null rule the engine adds is in
+`rules.asset_options`: an explicit-null asset title reads as an absent one
+('Unknown/Inconnu'), where the reference crashes.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame
 
 from stac_to_geocore_spark.compat import rules
 
@@ -37,99 +38,12 @@ OUT_SCHEMA = "key string, json string"
 DEFAULT_SOURCE = "ccmeo"
 DEFAULT_ROOT_NAME = "CCMEO Datacube/ CCCOT Cube de données"
 DEFAULT_SOURCE_SYSTEM = "ccmeo-datacube"
-
-
-def _plain(v):
-    """Arrow/pandas value -> plain Python (lists, dicts, scalars).
-
-    toPandas() yields struct columns as plain dicts under Arrow but as
-    pyspark Row objects in a vanilla (non-Arrow) session; Row is a tuple
-    subclass, so it must be unwrapped BEFORE the list/tuple branch or the
-    keys are silently dropped."""
-    if isinstance(v, Row):
-        return {k: _plain(x) for k, x in v.asDict().items()}
-    if isinstance(v, np.ndarray):
-        return [_plain(x) for x in v]
-    if isinstance(v, (list, tuple)):
-        return [_plain(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _plain(x) for k, x in v.items()}
-    if isinstance(v, np.generic):
-        return v.item()
-    if v is pd.NA or (v is None):
-        return None
-    if isinstance(v, float) and np.isnan(v):
-        return None
-    return v
-
-
-def _mapping(v) -> dict:
-    """Struct value -> dict, whether Arrow (dict), vanilla session (Row), or
-    a list of (k, v) pairs (MapType under Arrow)."""
-    if isinstance(v, Row):
-        return v.asDict()
-    return dict(v)
-
-
-def _assets_dict(v):
-    """MapType arrives as list[(k, struct)] from Arrow, dict[str, Row] from a
-    vanilla session; None-title values are dropped so 'absent' semantics hold
-    (ref .get('title', default))."""
-    if v is None:
-        return None
-    items = v.items() if isinstance(v, dict) else v
-    out = {}
-    for k, a in items:
-        a = {kk: _plain(vv) for kk, vv in _mapping(a).items()}
-        if a.get("title") is None:
-            a.pop("title", None)
-        out[k] = a
-    return out if out else None
-
-
-def _links_list(v):
-    if v is None:
-        return None
-    return [dict(x) for x in _plain(v)]
-
-
-def _item_dict(row: pd.Series) -> dict:
-    props = _mapping(row["properties"]) if row["properties"] is not None else {}
-    props = {k: _plain(v) for k, v in props.items() if _plain(v) is not None or k == "datetime"}
-    return {
-        "id": row["id"],
-        "bbox": _plain(row["bbox"]),
-        "links": _links_list(row["links"]),
-        "assets": _assets_dict(row["assets"]),
-        "properties": props,
-        "collection": row["collection"],
-    }
-
-
-def _coll_dict(row: pd.Series) -> dict:
-    ext = row["extent"]
-    extent = None
-    if ext is not None:
-        ext = _mapping(ext)
-        extent = {
-            "spatial": {"bbox": _plain(_mapping(ext["spatial"])["bbox"])} if ext.get("spatial") is not None else None,
-            "temporal": {"interval": _plain(_mapping(ext["temporal"])["interval"])} if ext.get("temporal") is not None else None,
-        }
-        extent = {k: v for k, v in extent.items() if v is not None}
-    return {
-        "id": row["id"],
-        "title": row["title"],
-        "description": row["description"],
-        "keywords": _plain(row["keywords"]),
-        "extent": extent,
-        "links": _links_list(row["links"]),
-        "assets": _assets_dict(row["assets"]),
-    }
+DEFAULT_ROOT_ID = "CCMEO-Datacube"
 
 
 def build_coll_meta(colls: list[dict]) -> dict:
     """The reference's create_coll_dict (stac_to_geocore.py:553-566): the
-    broadcast build side of the item ⟕ collection join."""
+    build side of the item ⟕ collection join."""
     meta = {}
     for c in colls:
         f = rules.collection_fields(c)
@@ -141,59 +55,63 @@ def build_coll_meta(colls: list[dict]) -> dict:
     return meta
 
 
+def item_doc(
+    item: dict,
+    meta: dict,
+    source: str = DEFAULT_SOURCE,
+    root_name: str = DEFAULT_ROOT_NAME,
+    source_system: str = DEFAULT_SOURCE_SYSTEM,
+) -> tuple[str, str]:
+    """One raw STAC item -> (key, GeoCore json); meta is build_coll_meta's dict."""
+    coll_id = item["collection"]
+    props = rules.item_properties(item, meta.get(coll_id, {}), source, root_name, source_system)
+    doc = rules.assemble_doc(props, rules.bbox_geometry(item["bbox"]))
+    return f"{source}-{coll_id}-{item['id']}.geojson", rules.serialize(doc)
+
+
+def collection_doc(
+    coll: dict,
+    source: str = DEFAULT_SOURCE,
+    root_id: str = DEFAULT_ROOT_ID,
+    root_name: str = DEFAULT_ROOT_NAME,
+    source_system: str = DEFAULT_SOURCE_SYSTEM,
+) -> tuple[str, str]:
+    """One raw STAC collection -> (key, GeoCore json)."""
+    props = rules.coll_properties(coll, source, root_id, root_name, source_system)
+    bbox = (coll.get("extent") or {}).get("spatial", {}).get("bbox", [None])[0]
+    doc = rules.assemble_doc(props, rules.bbox_geometry(bbox))
+    return f"{source}-{coll['id']}.geojson", rules.serialize(doc)
+
+
 def translate_items(
     items_df: DataFrame,
-    colls_df: DataFrame,
+    colls: list[dict],
     source: str = DEFAULT_SOURCE,
     root_name: str = DEFAULT_ROOT_NAME,
     source_system: str = DEFAULT_SOURCE_SYSTEM,
 ) -> DataFrame:
-    """items -> (key, json) GeoCore docs. Collections are a small dim by
-    contract (one HTTP GET in the reference), collected once and broadcast."""
-    spark = items_df.sparkSession
-    colls = [_coll_dict(r) for r in colls_df.toPandas().to_dict("records")]
-    meta_bc = spark.sparkContext.broadcast(build_coll_meta(colls))
+    """Raw `item` JSON rows -> (key, json) GeoCore docs. Collections are a
+    small dim by contract (one HTTP GET in the reference)."""
+    meta = build_coll_meta(colls)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        meta = meta_bc.value
         for b in batches:
-            keys, docs = [], []
-            for _, row in b.iterrows():
-                item = _item_dict(row)
-                coll_id = item["collection"]
-                props = rules.item_properties(
-                    item, meta.get(coll_id, {}), source, root_name, source_system
-                )
-                geom = rules.bbox_geometry(item["bbox"])
-                doc = rules.assemble_doc(props, geom)
-                keys.append(f"{source}-{coll_id}-{item['id']}.geojson")
-                docs.append(rules.serialize(doc))
-            yield pd.DataFrame({"key": keys, "json": docs})
+            docs = [item_doc(json.loads(s), meta, source, root_name, source_system) for s in b["item"]]
+            yield pd.DataFrame(docs, columns=["key", "json"])
 
     return items_df.mapInPandas(run, OUT_SCHEMA)
 
 
 def translate_collections(
-    colls_df: DataFrame,
+    colls: list[dict],
     source: str = DEFAULT_SOURCE,
-    root_id: str = "CCMEO-Datacube",
+    root_id: str = DEFAULT_ROOT_ID,
     root_name: str = DEFAULT_ROOT_NAME,
     source_system: str = DEFAULT_SOURCE_SYSTEM,
-) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            keys, docs = [], []
-            for _, row in b.iterrows():
-                coll = _coll_dict(row)
-                props = rules.coll_properties(coll, source, root_id, root_name, source_system)
-                bbox = (coll.get("extent") or {}).get("spatial", {}).get("bbox", [None])[0]
-                geom = rules.bbox_geometry(bbox)
-                doc = rules.assemble_doc(props, geom)
-                keys.append(f"{source}-{coll['id']}.geojson")
-                docs.append(rules.serialize(doc))
-            yield pd.DataFrame({"key": keys, "json": docs})
-
-    return colls_df.mapInPandas(run, OUT_SCHEMA)
+) -> list[tuple[str, str]]:
+    """Driver-side collection translation (ref app.py:118-135): one
+    (key, json) pair per collection."""
+    return [collection_doc(c, source, root_id, root_name, source_system) for c in colls]
 
 
 def translate_root(

@@ -17,6 +17,7 @@ on purpose (SURVEY.md §7.2 hard part 4).
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import numpy as np
@@ -235,34 +236,6 @@ STAC_ASSET = StructType(
         StructField("roles", ArrayType(StringType()), True),
     ]
 )
-STAC_COLLECTION_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("title", StringType(), True),
-        StructField("description", StringType(), True),
-        StructField("keywords", ArrayType(StringType()), True),
-        StructField(
-            "extent",
-            StructType(
-                [
-                    StructField(
-                        "spatial",
-                        StructType([StructField("bbox", ArrayType(ArrayType(DoubleType())), True)]),
-                        True,
-                    ),
-                    StructField(
-                        "temporal",
-                        StructType([StructField("interval", ArrayType(ArrayType(StringType())), True)]),
-                        True,
-                    ),
-                ]
-            ),
-            True,
-        ),
-        StructField("links", ArrayType(STAC_LINK), True),
-        StructField("assets", MapType(StringType(), STAC_ASSET), True),
-    ]
-)
 STAC_ITEM_SCHEMA = StructType(
     [
         StructField("id", StringType(), False),
@@ -455,12 +428,9 @@ def make_fake_stac_fetch(n_items: int = 240, page_size: int = 30, seed: int = DE
     return fetch
 
 
-def stac_collections_df(spark: SparkSession, seed: int = DEFAULT_SEED) -> DataFrame:
-    return spark.createDataFrame(stac_collections_fixture(seed), STAC_COLLECTION_SCHEMA)
-
-
 def stac_items_df(spark: SparkSession, n: int = 240, seed: int = DEFAULT_SEED) -> DataFrame:
-    return spark.createDataFrame(stac_items_fixture(n, seed), STAC_ITEM_SCHEMA)
+    """The item fixture as the harvest fetches it: one raw `item` JSON row each."""
+    return spark.createDataFrame([(json.dumps(i),) for i in stac_items_fixture(n, seed)], "item string")
 
 
 def fake_fetch_factory(options: dict):

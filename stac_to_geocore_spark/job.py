@@ -5,10 +5,15 @@ run, harvests root/collections/items, translates each to GeoCore JSON, and
 uploads everything plus lastRun.txt. `run_harvest` is that job as one Spark
 application:
 
-    root, colls_df, items_df = harvest(spark, api_root, fetch)   # S1-S3
-    docs = root_doc ∪ translate_collections ∪ translate_items    # R1-R5
-    run_harvest_sink(docs, store)                                # K1-K3
+    root, colls, pages = read_catalog(fetch, api_root)            # S1-S3, driver
+    head  = root doc + collection docs, one createDataFrame      # R1-R2, driver
+    items = map_pages(pages: fetch -> item_doc)                   # S3 + R3-R5
+    run_harvest_sink(head ∪ items, store)                         # K1-K3
       (or snapshot_overwrite for atomic replace semantics)
+
+The item path is one mapInPandas from page URL to (key, json): each task
+fetches its pages and translates the raw item dicts, so the executed plan
+holds a single Python node.
 
 Differences from the reference, by design:
 - item fetch + translation are distributed (the reference is one thread);
@@ -25,12 +30,13 @@ from stac_to_geocore_spark.compat.translate import (
     DEFAULT_ROOT_NAME,
     DEFAULT_SOURCE,
     DEFAULT_SOURCE_SYSTEM,
-    _coll_dict,
+    OUT_SCHEMA,
+    build_coll_meta,
+    item_doc,
     translate_collections,
-    translate_items,
     translate_root,
 )
-from stac_to_geocore_spark.sources.harvest import Fetch, harvest, http_fetch
+from stac_to_geocore_spark.sources.harvest import Fetch, http_fetch, map_pages, read_catalog
 from stac_to_geocore_spark.sources.sinks import run_harvest_sink, snapshot_overwrite
 
 
@@ -45,16 +51,20 @@ def run_harvest(
     atomic: bool = False,
 ) -> list[str]:
     """Full harvest -> translate -> sink. Returns the manifest key list."""
-    root, colls_df, items_df = harvest(spark, api_root, fetch)
+    root, colls, pages = read_catalog(fetch, api_root)
 
-    colls = [_coll_dict(r) for r in colls_df.toPandas().to_dict("records")]
     root_key, root_json = translate_root(root, colls, source, root_name, source_system)
     root_id = root_key[len(source) + len("-root-") : -len(".geojson")]
+    coll_docs = translate_collections(colls, source, root_id, root_name, source_system)
+    head = spark.createDataFrame([(root_key, root_json)] + coll_docs, OUT_SCHEMA)
 
-    coll_docs = translate_collections(colls_df, source, root_id, root_name, source_system)
-    item_docs = translate_items(items_df, colls_df, source, root_name, source_system)
-    root_df = spark.createDataFrame([(root_key, root_json)], "key string, json string")
-    docs = root_df.unionByName(coll_docs).unionByName(item_docs)
+    meta = build_coll_meta(colls)
+    items = map_pages(
+        spark, pages, fetch,
+        lambda item: item_doc(item, meta, source, root_name, source_system),
+        ("key", "json"),
+    )
+    docs = head.unionByName(items)
 
     if atomic:
         return snapshot_overwrite(docs, store_root)

@@ -2,10 +2,11 @@
 
 The reference fetches everything sequentially on one thread: root GET
 (app.py:54), collections GET (app.py:80), then pages of /search walked one
-by one (pagination.py:5-61) with every item translated inline. Here the page
-walk stays on the driver — it IS partition planning, each page URL becomes a
-unit of parallel work — and the per-page item fetch + JSON parse fan out via
-mapInPandas.
+by one (pagination.py:5-61) with every item translated inline. Here the root,
+the /collections body and the page walk stay on the driver — the walk IS
+partition planning, each page URL becomes a unit of parallel work — and
+`map_pages` fans the pages out: one mapInPandas task fetches its pages and
+applies a per-feature function to the raw JSON dicts, as the reference does.
 
 The fetch function is injectable (signature url -> (status_code, json_dict))
 so tests run against a deterministic in-process fake API; `http_fetch` is
@@ -19,9 +20,6 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from stac_to_geocore_spark.fixtures import STAC_COLLECTION_SCHEMA, STAC_ITEM_SCHEMA
 
 Fetch = Callable[[str], tuple[int, dict]]
 
@@ -71,51 +69,56 @@ def plan_pages(fetch: Fetch, search_url: str, max_pages: int = 10_000) -> list[s
     return pages
 
 
-def fetch_items_df(
+def page_items(fetch: Fetch, url: str) -> Iterator[dict]:
+    """The features of one /search page; a non-200 page yields none (ref app P9)."""
+    status, body = fetch(url)
+    if status == 200:
+        yield from body.get("features", [])
+
+
+def map_pages(
     spark: SparkSession,
     pages: list[str],
     fetch: Fetch,
-    partitions: int | None = None,
+    per_feature: Callable[[dict], tuple],
+    columns: tuple[str, ...],
 ) -> DataFrame:
-    """Distributed page fetch: one row per STAC item.
-
-    Page URLs become a tiny DataFrame, repartitioned so each executor pulls
-    its own pages; item JSON is parsed JVM-side via from_json with the
-    explicit item schema (no schema inference in production paths).
-    """
-    if not pages:
-        return spark.createDataFrame([], STAC_ITEM_SCHEMA)
-    n = partitions or min(len(pages), spark.sparkContext.defaultParallelism * 2)
+    """Page fan-out: page URLs become a tiny DataFrame, repartitioned so each
+    task pulls its own pages, and one mapInPandas emits per_feature(item) —
+    a tuple of strings named by `columns` — for every feature of every page."""
+    n = max(1, min(len(pages), spark.sparkContext.defaultParallelism * 2))
     pages_df = spark.createDataFrame([(u,) for u in pages], "url string").repartition(n)
 
-    def pull(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = []
-            for url in b["url"]:
-                status, body = fetch(url)
-                if status != 200:  # non-200 pages yield 0 rows (ref app P9)
-                    continue
-                for feat in body.get("features", []):
-                    rows.append(json.dumps(feat))
-            yield pd.DataFrame({"raw": rows})
+            rows = [per_feature(feat) for url in b["url"] for feat in page_items(fetch, url)]
+            yield pd.DataFrame(rows, columns=list(columns))
 
-    raw = pages_df.mapInPandas(pull, "raw string")
-    return raw.select(F.from_json("raw", STAC_ITEM_SCHEMA).alias("item")).select("item.*")
+    return pages_df.mapInPandas(run, ", ".join(f"{c} string" for c in columns))
 
 
-def harvest(
-    spark: SparkSession, api_root: str, fetch: Fetch = http_fetch
-) -> tuple[dict, DataFrame, DataFrame]:
-    """Full harvest (ref lambda_handler app.py:36-170 minus the sinks):
-    returns (root_dict, collections_df, items_df)."""
+def fetch_items_df(spark: SparkSession, pages: list[str], fetch: Fetch) -> DataFrame:
+    """Distributed page fetch: one `item` row per STAC item, holding the
+    item's raw JSON text."""
+    return map_pages(spark, pages, fetch, lambda feat: (json.dumps(feat),), ("item",))
+
+
+def read_catalog(fetch: Fetch, api_root: str) -> tuple[dict, list[dict], list[str]]:
+    """Driver side of the harvest (ref lambda_handler app.py:36-170): the
+    root document, the raw /collections body (one HTTP response) and the
+    planned /search page URLs."""
     status, root = fetch(api_root)
     if status != 200:
         raise ConnectionError(f"root api returned {status} for {api_root}")
     status, colls_body = fetch(f"{api_root}/collections/")
     colls = colls_body.get("collections", []) if status == 200 else []
-    colls_df = spark.createDataFrame(
-        [json.dumps(c) for c in colls], "string"
-    ).select(F.from_json("value", STAC_COLLECTION_SCHEMA).alias("c")).select("c.*")
-    pages = plan_pages(fetch, f"{api_root}/search")
-    items_df = fetch_items_df(spark, pages, fetch)
-    return root, colls_df, items_df
+    return root, colls, plan_pages(fetch, f"{api_root}/search")
+
+
+def harvest(
+    spark: SparkSession, api_root: str, fetch: Fetch = http_fetch
+) -> tuple[dict, list[dict], DataFrame]:
+    """Full harvest (ref lambda_handler app.py:36-170 minus the sinks):
+    returns (root_dict, collection dicts, items_df of raw `item` JSON)."""
+    root, colls, pages = read_catalog(fetch, api_root)
+    return root, colls, fetch_items_df(spark, pages, fetch)

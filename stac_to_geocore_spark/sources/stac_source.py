@@ -10,9 +10,11 @@ The reference walks /search pages serially inline with translation
 once on the driver inside `partitions()` (same rules as
 sources/harvest.plan_pages: non-200 stops, empty pages dropped, Franklin's
 trailing-next quirk handled via returned>=matched), and every page URL
-becomes one InputPartition, so the fetch+parse fans out across executors
-and composes with the whole DataFrame surface (pushdown-ready projections,
-joins, writes) without any bespoke driver code.
+becomes one InputPartition, read through the same harvest.page_items as the
+harvest's own fan-out. This is the engine's one typed STAC reader: rows
+follow fixtures.STAC_ITEM_SCHEMA, so the scan composes with the whole
+DataFrame surface (pushdown-ready projections, joins, writes). The harvest
+job itself never types items; it translates the raw JSON dicts.
 
 Options:
   api_root   (required) STAC API root; pages planned from <api_root>/search
@@ -80,11 +82,9 @@ class _StacItemsReader(DataSourceReader):
         return [_StacPage(u) for u in plan_pages(fetch, f"{root}/search", max_pages)]
 
     def read(self, partition: _StacPage) -> Iterator[tuple]:
-        fetch = _resolve_fetch(self._options)
-        status, body = fetch(partition.url)
-        if status != 200:  # non-200 pages contribute 0 rows (ref app.py P9)
-            return
-        for feat in body.get("features", []):
+        from stac_to_geocore_spark.sources.harvest import page_items
+
+        for feat in page_items(_resolve_fetch(self._options), partition.url):
             yield _conv(feat, self._schema)
 
 
@@ -161,12 +161,8 @@ class _StacStreamReader(SimpleDataSourceStreamReader):
         return iter(self._rows(int(start["pages_done"]), int(end["pages_done"])))
 
     def _rows(self, lo: int, hi: int) -> list[tuple]:
+        from stac_to_geocore_spark.sources.harvest import page_items
+
         fetch = _resolve_fetch(self._options)
-        out = []
-        for url in self._page_list()[lo:hi]:
-            status, body = fetch(url)
-            if status != 200:
-                continue
-            for feat in body.get("features", []):
-                out.append(_conv(feat, self._schema))
-        return out
+        return [_conv(feat, self._schema)
+                for url in self._page_list()[lo:hi] for feat in page_items(fetch, url)]

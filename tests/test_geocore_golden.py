@@ -36,7 +36,6 @@ from stac_to_geocore_spark.compat.translate import (
     translate_root,
 )
 from stac_to_geocore_spark.fixtures import (
-    stac_collections_df,
     stac_collections_fixture,
     stac_items_df,
     stac_items_fixture,
@@ -106,15 +105,10 @@ def test_root_byte_identical(corpus):
     assert got == expected
 
 
-def test_collections_byte_identical(spark, corpus):
+def test_collections_byte_identical(corpus):
     root, colls, _ = corpus
     params = _params(root)
-    out = {
-        r["key"]: r["json"]
-        for r in translate_collections(
-            stac_collections_df(spark), SOURCE, params["root_id"], ROOT_NAME, SSN
-        ).collect()
-    }
+    out = dict(translate_collections(colls, SOURCE, params["root_id"], ROOT_NAME, SSN))
     assert len(out) == len(colls)
     for coll in colls:
         bbox = coll["extent"]["spatial"]["bbox"][0]
@@ -132,7 +126,7 @@ def test_items_byte_identical(spark, corpus):
     out = {
         r["key"]: r["json"]
         for r in translate_items(
-            stac_items_df(spark, 60), stac_collections_df(spark), SOURCE, ROOT_NAME, SSN
+            stac_items_df(spark, 60), colls, SOURCE, ROOT_NAME, SSN
         ).collect()
     }
     assert len(out) == len(items)

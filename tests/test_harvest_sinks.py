@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 from stac_to_geocore_spark.compat import translate_items
@@ -37,16 +38,19 @@ def test_distributed_fetch_items(spark):
     fetch = make_fake_stac_fetch(n_items=95, page_size=30)
     pages = plan_pages(fetch, f"{API_ROOT}/search")
     df = fetch_items_df(spark, pages, fetch)
-    assert df.count() == 95
-    assert set(df.columns) == {"id", "bbox", "links", "assets", "properties", "collection"}
+    assert df.columns == ["item"]
+    items = [json.loads(r["item"]) for r in df.collect()]
+    assert len(items) == 95
+    assert all(set(i) == {"id", "bbox", "links", "assets", "properties", "collection"} for i in items)
+    assert fetch_items_df(spark, [], fetch).count() == 0  # an empty catalog plans no pages
 
 
 def test_full_harvest_to_sink_roundtrip(spark, tmp_path):
     fetch = make_fake_stac_fetch(n_items=60)
-    root, colls_df, items_df = harvest(spark, API_ROOT, fetch)
+    root, colls, items_df = harvest(spark, API_ROOT, fetch)
     assert root["id"] == "CCMEO Datacube"
-    assert colls_df.count() == 8
-    docs = translate_items(items_df, colls_df)
+    assert len(colls) == 8
+    docs = translate_items(items_df, colls)
     store_root = str(tmp_path / "run1")
     keys = run_harvest_sink(docs, store_root)
     store = LocalObjectStore(store_root)
@@ -68,8 +72,8 @@ def test_delete_previous_run_without_manifest(tmp_path):
 
 def test_snapshot_overwrite_atomic_swap(spark, tmp_path):
     fetch = make_fake_stac_fetch(n_items=30)
-    _, colls_df, items_df = harvest(spark, API_ROOT, fetch)
-    docs = translate_items(items_df, colls_df)
+    _, colls, items_df = harvest(spark, API_ROOT, fetch)
+    docs = translate_items(items_df, colls)
     store_root = str(tmp_path / "snap")
     keys = snapshot_overwrite(docs, store_root)
     assert len(LocalObjectStore(store_root).list()) == 31
@@ -90,7 +94,10 @@ def test_export_csv(spark, tmp_path):
 
 def test_stac_python_data_source(spark):
     """The STAC Python Data Source must plan one partition per non-empty
-    page and produce exactly the rows the mapInPandas harvest path does."""
+    page and produce exactly the rows the harvest path fetches, typed."""
+    from pyspark.sql import functions as F
+
+    from stac_to_geocore_spark.fixtures import STAC_ITEM_SCHEMA
     from stac_to_geocore_spark.sources.stac_source import StacDataSource
 
     spark.dataSource.register(StacDataSource)
@@ -103,15 +110,15 @@ def test_stac_python_data_source(spark):
     )
     assert df.count() == 95
     assert set(df.columns) == {"id", "bbox", "links", "assets", "properties", "collection"}
-    # row-for-row identical to the harvest path (same fake API); MAP columns
-    # forbid exceptAll, so compare a deterministic JSON projection
+    # row-for-row identical to the harvest path's raw items typed with the
+    # same schema (same fake API); MAP columns forbid exceptAll, so compare
+    # a deterministic JSON projection
     fetch = make_fake_stac_fetch(n_items=95, page_size=30)
     pages = plan_pages(fetch, f"{API_ROOT}/search")
-    want = fetch_items_df(spark, pages, fetch)
+    want = fetch_items_df(spark, pages, fetch).select(
+        F.from_json("item", STAC_ITEM_SCHEMA).alias("i")).select("i.*")
 
     def canon(frame):
-        from pyspark.sql import functions as F
-
         return sorted(
             r[0]
             for r in frame.select(

@@ -173,3 +173,25 @@ def test_spatial_join_plans_have_no_python_node(spark, name):
     for plan in [final.split("== Initial Plan ==")[0]] + plans:
         for node in _PYTHON_NODES:
             assert node not in plan, f"{name}: {node} in\n{plan[:3000]}"
+
+
+def test_harvest_docs_plan_has_one_python_node(spark, monkeypatch):
+    """run_harvest hands its sink one Python node: the page fan-out that
+    fetches and translates raw item JSON in the same task. Root and
+    collection docs are driver rows, and no item is typed with from_json."""
+    from stac_to_geocore_spark import job
+    from stac_to_geocore_spark.fixtures import API_ROOT, make_fake_stac_fetch
+
+    seen = {}
+
+    def capture(docs, store_root):
+        seen["docs"] = docs
+        return []
+
+    monkeypatch.setattr(job, "run_harvest_sink", capture)
+    job.run_harvest(spark, API_ROOT, "unused-store", make_fake_stac_fetch(n_items=60))
+    plan = seen["docs"]._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"\b(?:%s)\b" % "|".join(_PYTHON_NODES + ("MapInArrow",)), plan)
+    assert nodes == ["MapInPandas"], plan
+    for parse in ("JsonToStructs", "from_json"):
+        assert parse not in plan, plan

@@ -1,14 +1,13 @@
-"""Regression for the round-1 driver-gate crash: the gate runs a vanilla
-SparkSession (no Arrow configs), where toPandas() returns struct columns as
-pyspark Row objects instead of dicts. dict(Row) raises ValueError, and Row is
-a tuple subclass so generic list handling silently drops keys. The translate
-layer must produce byte-identical output under both toPandas() modes.
+"""The gate runs a vanilla SparkSession (no Arrow configs). Round 1 crashed
+there because toPandas() returned struct columns as Row objects. The
+translate layer now reads raw JSON text and never sees a struct, but its
+output must stay byte-identical with the Arrow config on or off.
 """
 
 import pytest
 
 from stac_to_geocore_spark.compat.translate import translate_collections, translate_items
-from stac_to_geocore_spark.fixtures import stac_collections_df, stac_items_df
+from stac_to_geocore_spark.fixtures import stac_collections_fixture, stac_items_df
 
 ARROW_KEY = "spark.sql.execution.arrow.pyspark.enabled"
 
@@ -22,12 +21,9 @@ def no_arrow(spark):
 
 
 def _docs(spark):
-    items = stac_items_df(spark, 24)
-    colls = stac_collections_df(spark)
-    out = {}
-    for r in translate_items(items, colls).collect():
-        out[r["key"]] = r["json"]
-    for r in translate_collections(colls).collect():
+    colls = stac_collections_fixture()
+    out = dict(translate_collections(colls))
+    for r in translate_items(stac_items_df(spark, 24), colls).collect():
         out[r["key"]] = r["json"]
     return out
 
@@ -39,16 +35,6 @@ def test_translate_identical_with_and_without_arrow(spark, no_arrow):
     spark.conf.set(ARROW_KEY, "true")
     with_arrow = _docs(spark)
     assert without_arrow.keys() == with_arrow.keys()
-    assert len(without_arrow) == 24 + stac_collections_df(spark).count()
+    assert len(without_arrow) == 24 + len(stac_collections_fixture())
     for k in with_arrow:
         assert without_arrow[k] == with_arrow[k], k
-
-
-def test_coll_dict_handles_row_objects(spark, no_arrow):
-    # the exact round-1 crash site: _coll_dict over a vanilla toPandas()
-    from stac_to_geocore_spark.compat.translate import _coll_dict
-
-    colls = stac_collections_df(spark)
-    dicts = [_coll_dict(r) for r in colls.toPandas().to_dict("records")]
-    assert all(isinstance(d["extent"], dict) for d in dicts if d["extent"] is not None)
-    assert all(isinstance(d["links"][0], dict) for d in dicts if d["links"])
