@@ -242,12 +242,18 @@ def embedding_dedup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim >= threshold)
     via LSH self-join + exact verify. High-threshold near-dups collide with
     probability ~(1 - theta/pi)^n_planes per table, so a handful of tables
-    suffices at 0.95+ cosine."""
+    suffices at 0.95+ cosine. Each vector is signed once: both join sides
+    read one exchange on the key, below their renames. The join's own
+    exchanges would sit above the renames, not match, and sign per side."""
     from stac_to_geocore_spark.partitioning import fan_out
 
     sig = lsh_bucket_udf(dim, n_tables, n_planes, seed)
-    data = fan_out(emb).withColumn("_nrm", _norm(vec_col)).withColumn(
-        "bucket", F.explode(sig(F.col(vec_col)))).select(id_col, vec_col, "_nrm", "bucket")
+    data = (
+        fan_out(emb).withColumn("_nrm", _norm(vec_col))
+        .withColumn("bucket", F.explode(sig(F.col(vec_col))))
+        .select(id_col, vec_col, "_nrm", "bucket")
+        .repartition("bucket")
+    )
     a = data.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"),
                     F.col("_nrm").alias("na"), "bucket")
     b = data.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"),

@@ -11,8 +11,10 @@ for everything above it.
 
 The guard only ever RAISES parallelism: a 100 TB table arrives with
 thousands of splits and passes through untouched (no accidental
-down-partitioning, no extra exchange at scale). The partition-count probe
-is a driver-side plan analysis (~ms, no job).
+down-partitioning, no extra exchange at scale). The partition-count probe,
+`df.rdd.getNumPartitions()`, plans the query on the driver: a plain scan
+runs no job, but a plan holding a broadcast runs one to build it (0.5-1 s
+for a broadcast join at local[4]).
 """
 
 from __future__ import annotations

@@ -2,10 +2,11 @@
 n-gram Jaccard.
 
 Plan shapes (the 100 TB story):
-- Signatures are map-only Arrow-batched pandas UDFs (no shuffle).
+- Signatures are map-only Arrow-batched pandas UDFs, run once per row:
+  every consumer reads one exchange of the signed rows.
 - LSH banding turns near-dup search into an equi-join: explode signatures
-  into (band, band_hash) keys, self-join on the key — the only shuffle, and
-  it shuffles (id, band_key) pairs, never document text.
+  into (band, band_hash) keys, self-join on the key — it shuffles
+  (id, band_key) pairs, never document text.
 - Candidate pairs are verified with exact signature similarity (and
   optionally exact n-gram Jaccard on the pair subset, which is tiny).
 
@@ -22,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.window import Window
 
 _MERSENNE = (1 << 61) - 1
 
@@ -64,13 +66,45 @@ def minhash_signatures(
         return pd.Series(out)
 
     # the shingle+minhash kernel is heavy python work; a single-row-group
-    # documents scan would run it on one core — and minhash_lsh_pairs
-    # deliberately recomputes this map-only stage for each of its three
-    # consumers, tripling the starvation (fan_out no-ops on real
+    # documents scan would run it on one core (fan_out no-ops on real
     # many-split scans; see partitioning.py)
     from stac_to_geocore_spark.partitioning import fan_out
 
     return fan_out(df).withColumn("sig", _sig(F.col(text_col)))
+
+
+def _lsh_candidates(
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int, max_band_size: int | None
+) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of `sigs` rows that share a band bucket
+    of at most max_band_size rows. Both join sides and the cap's window
+    read one exchange on the join key; a groupBy cap joined back would not
+    match it and would run the signature UDF again."""
+    assert num_hashes % bands == 0
+    r = num_hashes // bands
+    band_keys = sigs.select(
+        id_col,
+        F.posexplode(
+            F.array(*[
+                F.xxhash64(F.lit(bi), *[F.col("sig")[bi * r + j] for j in range(r)])
+                for bi in range(bands)
+            ])
+        ).alias("band", "band_key"),
+    ).repartition("band", "band_key")
+    if max_band_size is not None:
+        band_keys = (
+            band_keys.withColumn("_bs", F.count(F.lit(1)).over(Window.partitionBy("band", "band_key")))
+            .filter(F.col("_bs") <= max_band_size)
+            .drop("_bs")
+        )
+    left = band_keys.alias("l")
+    right = band_keys.alias("r")
+    return (
+        left.join(right, (F.col("l.band") == F.col("r.band")) & (F.col("l.band_key") == F.col("r.band_key")))
+        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .distinct()
+    )
 
 
 def minhash_lsh_pairs(
@@ -83,18 +117,20 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
     seed: int = 42,
     max_band_size: int | None = None,
-    persist_signatures: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, est_jaccard >= threshold).
 
     banding: rows-per-band r = num_hashes/bands; a pair collides in a band
     iff that band's r minhashes all agree -> candidate. est_jaccard is the
-    fraction of agreeing minhashes over the full signature.
+    fraction of agreeing minhashes over the full signature. Rows with a
+    null id never pair: they are dropped before signing and do not count
+    toward a bucket's size.
 
     max_band_size caps hot buckets: a band bucket holding B docs yields
     B(B-1)/2 candidates, so one boilerplate cluster (every page sharing a
     footer) otherwise turns the self-join quadratic. Buckets above the cap
-    are dropped before the join. NOTE the deliberate recall trade: a
+    are dropped before the join; a pair still pairs through any other band
+    whose bucket is within the cap. NOTE the deliberate recall trade: a
     duplicate cluster LARGER than the cap collides into an over-cap bucket
     in EVERY band (identical signatures), so its pairwise output is
     suppressed entirely — that mass-duplicate blob is exactly what a 100 TB
@@ -103,58 +139,16 @@ def minhash_lsh_pairs(
     (default None = exact recall, quadratic hot buckets and all) so the
     recall trade is never silently applied to an unsuspecting caller; scale
     pipelines pass e.g. max_band_size=1024 explicitly.
-
-    persist_signatures caches the signature table across its three
-    consumers (band keys + both sides of the estimate join). OFF by
-    default: at 10^11 docs that cache is ~50 TB; recomputing the map-only
-    signature UDF is the scale-correct trade (see inline comment).
-    CALLER OWNS THE UNPERSIST: the cache must outlive this (lazy) plan, so
-    nothing here can unpersist it — a long-lived session that opts in must
-    call `result._cached_signatures.unpersist()` (the handle is attached to
-    the returned DataFrame) once the result is materialized, or the cached
-    blocks accumulate until the session dies. CAPTURE THE HANDLE BEFORE
-    ANY FURTHER TRANSFORMATION: select/filter/alias return a NEW DataFrame
-    without the attribute, so grab `result._cached_signatures` first (or
-    you lose the only reference and leak the cached blocks).
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, num_hashes, shingle_k, seed).select(id_col, "sig")
-    # NO unconditional full-corpus persist: (id, 64xlong sig) at 10^11 docs
-    # is a ~50 TB cache to save recomputing a map-only Arrow UDF across the
-    # three consumers (band keys + both sides of the estimate join) — the
-    # same trade knn.py rejects for its points table. Default: recompute
-    # (signatures are map-only, scans prune to (id, text)); callers on
-    # cache-sized corpora opt in with persist_signatures=True.
-    if persist_signatures:
-        sigs = sigs.persist()
-
-    band_keys = sigs.select(
-        id_col,
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.lit(bi), *[F.col("sig")[bi * r + j] for j in range(r)])
-                for bi in range(bands)
-            ])
-        ).alias("band", "band_key"),
+    # band keys and both estimate-join sides read one id-keyed exchange (the
+    # estimate joins' own partitioning at scale); the entry filter keeps them
+    # equal, as Spark pushes the joins' inferred isnotnull(id) below it
+    sigs = (
+        minhash_signatures(df.filter(F.col(id_col).isNotNull()), text_col, num_hashes, shingle_k, seed)
+        .select(id_col, "sig")
+        .repartition(id_col)
     )
-    if max_band_size is not None:
-        # shuffles on band_key — the same key as the self-join below, so the
-        # exchange is reused and this adds no extra fact-side shuffle
-        sizes = band_keys.groupBy("band", "band_key").agg(F.count(F.lit(1)).alias("_bs"))
-        band_keys = (
-            band_keys.join(sizes, ["band", "band_key"])
-            .filter(F.col("_bs") <= max_band_size)
-            .drop("_bs")
-        )
-    left = band_keys.alias("l")
-    right = band_keys.alias("r")
-    cand = (
-        left.join(right, (F.col("l.band") == F.col("r.band")) & (F.col("l.band_key") == F.col("r.band_key")))
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _lsh_candidates(sigs, id_col, num_hashes, bands, max_band_size)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
     est = F.aggregate(
@@ -162,16 +156,12 @@ def minhash_lsh_pairs(
         F.lit(0),
         lambda acc, x: acc + x,
     ) / F.lit(float(num_hashes))
-    out = (
+    return (
         cand.join(sa, "id_a").join(sb, "id_b")
         .withColumn("est_jaccard", F.round(est, 6))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    if persist_signatures:
-        # hand the cache to the caller (see docstring: caller owns unpersist)
-        out._cached_signatures = sigs
-    return out
 
 
 def simhash64(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
@@ -214,12 +204,12 @@ def ngram_jaccard_pairs(
     max_band_size: int | None = None,
 ) -> DataFrame:
     """Exact token-n-gram Jaccard for LSH-candidate pairs only (filter via
-    MinHash banding, verify exactly on the candidate subset). The hot-band
-    cap is opt-in (see minhash_lsh_pairs)."""
-    cand = minhash_lsh_pairs(
-        df, id_col, text_col, num_hashes=num_hashes, bands=lsh_bands,
-        threshold=0.0, seed=seed, max_band_size=max_band_size,
-    ).select("id_a", "id_b")
+    MinHash banding, verify exactly on the candidate subset). The grams
+    join onto the candidates directly; no MinHash estimate is computed.
+    The hot-band cap is opt-in and null ids never pair (see
+    minhash_lsh_pairs)."""
+    sigs = minhash_signatures(df.filter(F.col(id_col).isNotNull()), text_col, num_hashes, seed=seed)
+    cand = _lsh_candidates(sigs, id_col, num_hashes, lsh_bands, max_band_size)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _gram_hashes(texts: pd.Series) -> pd.Series:

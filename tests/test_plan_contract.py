@@ -195,3 +195,29 @@ def test_harvest_docs_plan_has_one_python_node(spark, monkeypatch):
     assert nodes == ["MapInPandas"], plan
     for parse in ("JsonToStructs", "from_json"):
         assert parse not in plan, plan
+
+
+_DEDUP_QUERY_UDFS = {
+    "minhash": ("minhash_near_dup", {"_sig": 1}),
+    "ngram": ("ngram_jaccard", {"_sig": 1, "_gram_hashes": 1}),
+    "embedding": ("embedding_dedup", {"_sig": 1}),
+}
+
+
+@pytest.mark.parametrize("name", list(_DEDUP_QUERY_UDFS))
+def test_dedup_plans_sign_each_row_once(spark, name):
+    """Each LSH dedup operator crosses into Python once per UDF: every
+    consumer of the signed rows reads one exchange (a ReusedExchange in the
+    final plan), so each UDF has exactly one ArrowEvalPython node in the
+    final adaptive plan. The MinHash query runs the hot-band cap, the
+    n-gram one does not."""
+    from collections import Counter
+
+    import __spark_entry__ as m
+
+    query, udfs = _DEDUP_QUERY_UDFS[name]
+    df = m.queries()[query](spark, "/root/testdata/sf0.01")
+    assert df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[", final)
+    assert Counter(u for node in nodes for u in re.findall(r"\b(_\w+)\(", node)) == udfs, final

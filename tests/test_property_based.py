@@ -342,3 +342,86 @@ def test_knn_join_matches_brute_force(pts, dup, qs, k):
         order = np.lexsort((np.arange(len(xy)), dx * dx + dy * dy))
         mine = got[got.query_id == q.query_id].sort_values("rank")["point_id"].tolist()
         assert mine == order[:kk].tolist(), q.query_id
+
+
+# --- MinHash LSH vs numpy banding ---
+
+_WORDS = ["the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog", "cat"]
+
+
+def _minhash_sigs_np(docs, num_hashes, seed, shingle_k=5):
+    """{id: signature} for the non-null ids, from the operator's own
+    shingle hashes and hash parameters."""
+    from stac_to_geocore_spark.text.dedup import _MERSENNE, _minhash_params, _shingle_hashes
+
+    a, b = _minhash_params(num_hashes, seed)
+    sigs = {}
+    for i, text in docs:
+        if i is not None:
+            sh = _shingle_hashes(text or "", shingle_k) % _MERSENNE
+            sigs[i] = ((a[:, None] * sh[None, :] + b[:, None]) % _MERSENNE).min(axis=1)
+    return sigs
+
+
+def _minhash_lsh_np(docs, num_hashes, bands, seed, threshold, cap):
+    """{(id_a, id_b): est_jaccard} by banding numpy signatures. A bucket is
+    a band's tuple of r minhashes; buckets above `cap` rows are dropped."""
+    from collections import defaultdict
+
+    sigs = _minhash_sigs_np(docs, num_hashes, seed)
+    r = num_hashes // bands
+    buckets = defaultdict(list)
+    for i, sig in sigs.items():
+        for band in range(bands):
+            buckets[band, tuple(sig[band * r:(band + 1) * r])].append(i)
+    cand = {(x, y) for ids in buckets.values() if cap is None or len(ids) <= cap
+            for x in ids for y in ids if x < y}
+    est = {p: round(float(np.mean(sigs[p[0]] == sigs[p[1]])), 6) for p in cand}
+    return {p: e for p, e in est.items() if e >= threshold}
+
+
+def _minhash_lsh_spark(docs, num_hashes, bands, seed, threshold, cap):
+    from stac_to_geocore_spark.session import get_spark
+    from stac_to_geocore_spark.text.dedup import minhash_lsh_pairs
+
+    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    out = minhash_lsh_pairs(df, num_hashes=num_hashes, bands=bands, seed=seed,
+                            threshold=threshold, max_band_size=cap).collect()
+    got = {(row.id_a, row.id_b): row.est_jaccard for row in out}
+    assert len(got) == len(out), "a pair was emitted twice"
+    return got
+
+
+@settings(max_examples=8, deadline=None)
+@given(texts=st.lists(st.one_of(st.none(), st.lists(st.sampled_from(_WORDS), min_size=1, max_size=8)
+                                .map(" ".join)), min_size=2, max_size=12),
+       dups=st.lists(st.integers(min_value=0, max_value=11), min_size=1, max_size=4),
+       shape=st.sampled_from([(16, 8), (32, 8), (64, 16)]),
+       threshold=st.sampled_from([0.0, 0.5, 0.9]), cap=st.sampled_from([None, 2, 3]))
+def test_minhash_lsh_pairs_matches_numpy_banding(texts, dups, shape, threshold, cap):
+    """minhash_lsh_pairs (pairs and est_jaccard) vs numpy banding, with and
+    without the hot-band cap, on short texts over a small vocabulary (so
+    buckets are shared) plus planted copies, which collide on the whole
+    signature. Uncapped, a null-id copy of a doc never pairs."""
+    texts = texts + [texts[d % len(texts)] for d in dups]
+    docs = [(i, t) for i, t in enumerate(texts)] + ([(None, texts[0])] if cap is None else [])
+    num_hashes, bands = shape
+    want = _minhash_lsh_np(docs, num_hashes, bands, 42, threshold, cap)
+    assert _minhash_lsh_spark(docs, num_hashes, bands, 42, threshold, cap) == want
+
+
+def test_minhash_cap_keeps_a_pair_through_a_later_band():
+    """Docs 0 and 1 are identical; doc 2 agrees with them in band 0 but not
+    in band 4. With max_band_size=2 the band-0 bucket (3 docs) is dropped,
+    and the pair (0, 1) must still come out of band 4's 2-doc bucket, with
+    est_jaccard 1.0, while 2 pairs with nobody."""
+    base = "the quick brown fox jumps over the lazy dog"
+    docs = [(0, base), (1, base), (2, base.replace("dog", "cat"))]
+    sig = _minhash_sigs_np(docs, 16, 0)
+    agree = [bool((sig[0][2 * band:2 * band + 2] == sig[2][2 * band:2 * band + 2]).all()) for band in range(8)]
+    assert agree[0] and not agree[4], agree  # the case this test pins
+    want = _minhash_lsh_np(docs, 16, 8, 0, 0.0, 2)
+    assert want == {(0, 1): 1.0}
+    assert _minhash_lsh_spark(docs, 16, 8, 0, 0.0, 2) == want
+    assert set(_minhash_lsh_spark(docs, 16, 8, 0, 0.0, None)) == {(0, 1), (0, 2), (1, 2)}

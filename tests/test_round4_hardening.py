@@ -46,21 +46,6 @@ def test_pip_ring_join_rejects_duplicate_poly_ids(spark):
         pip_ring_join(pts, rings)
 
 
-def test_minhash_pairs_identical_with_and_without_persist(spark):
-    from pyspark.sql import functions as F
-
-    from stac_to_geocore_spark.text.dedup import minhash_lsh_pairs
-
-    base = "the quick brown fox jumps over the lazy dog and runs away fast"
-    rows = [(i, base + f" tail{i % 3}") for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {(r.id_a, r.id_b, r.est_jaccard)
-         for r in minhash_lsh_pairs(docs, threshold=0.5).collect()}
-    b = {(r.id_a, r.id_b, r.est_jaccard)
-         for r in minhash_lsh_pairs(docs, threshold=0.5, persist_signatures=True).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_session_cache_key_is_stable_and_not_an_object_id(spark):
     from stac_to_geocore_spark.cells.h3x import _session_cache_key
 
