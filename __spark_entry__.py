@@ -431,10 +431,11 @@ def _q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pip_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General-polygon PIP: cell-cover filter + exact vectorized ray-cast
     refine on non-convex star rings (spatial/pip.pip_ring_join)."""
+    from stac_to_geocore_spark.session import local_df
     from stac_to_geocore_spark.spatial.pip import pip_ring_join
 
-    rings = spark.createDataFrame(
-        _ring_polys(), "poly_id string, ring_lon array<double>, ring_lat array<double>"
+    rings = local_df(
+        spark, _ring_polys(), "poly_id string, ring_lon array<double>, ring_lat array<double>"
     )
     return pip_ring_join(_points_df(spark, sf_dir), rings)
 

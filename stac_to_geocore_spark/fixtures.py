@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from stac_to_geocore_spark.images.codecs import encode_image, phash64
+from stac_to_geocore_spark.session import local_df
 
 LON_MIN, LON_MAX = -141.0, -52.0
 LAT_MIN, LAT_MAX = 41.0, 84.0
@@ -430,7 +431,7 @@ def make_fake_stac_fetch(n_items: int = 240, page_size: int = 30, seed: int = DE
 
 def stac_items_df(spark: SparkSession, n: int = 240, seed: int = DEFAULT_SEED) -> DataFrame:
     """The item fixture as the harvest fetches it: one raw `item` JSON row each."""
-    return spark.createDataFrame([(json.dumps(i),) for i in stac_items_fixture(n, seed)], "item string")
+    return local_df(spark, [(json.dumps(i),) for i in stac_items_fixture(n, seed)], "item string")
 
 
 def fake_fetch_factory(options: dict):

@@ -3,17 +3,19 @@
 A user of the reference runs one daily Lambda that: deletes the previous
 run, harvests root/collections/items, translates each to GeoCore JSON, and
 uploads everything plus lastRun.txt. `run_harvest` is that job as one Spark
-application:
+application that crosses into Python once:
 
     root, colls, pages = read_catalog(fetch, api_root)            # S1-S3, driver
-    head  = root doc + collection docs, one createDataFrame      # R1-R2, driver
-    items = map_pages(pages: fetch -> item_doc)                   # S3 + R3-R5
-    run_harvest_sink(head ∪ items, store)                         # K1-K3
-      (or snapshot_overwrite for atomic replace semantics)
+    run_root = open_run(store)                                    # K3, driver
+    put_part(root doc + collection docs) -> part 0              # R1-R2 + K1, driver
+    map_pages(pages: fetch -> item_doc -> put_part) -> part/task  # S3 + R3-R5 + K1
+    close_run(store)                                              # K2, driver
+      (atomic=True: open/close a staging dir and swap it in)
 
-The item path is one mapInPandas from page URL to (key, json): each task
-fetches its pages and translates the raw item dicts, so the executed plan
-holds a single Python node.
+Each page task fetches its pages, translates the raw item dicts, puts each
+object and writes its manifest part; only a per-task key count returns to
+the JVM. The driver's part sorts first, so lastRun.txt lists the root and
+collections before the items.
 
 Differences from the reference, by design:
 - item fetch + translation are distributed (the reference is one thread);
@@ -24,20 +26,21 @@ Outputs are byte-identical either way (golden tests).
 
 from __future__ import annotations
 
+from typing import Iterator
+
 from pyspark.sql import SparkSession
 
 from stac_to_geocore_spark.compat.translate import (
     DEFAULT_ROOT_NAME,
     DEFAULT_SOURCE,
     DEFAULT_SOURCE_SYSTEM,
-    OUT_SCHEMA,
     build_coll_meta,
     item_doc,
     translate_collections,
     translate_root,
 )
 from stac_to_geocore_spark.sources.harvest import Fetch, http_fetch, map_pages, read_catalog
-from stac_to_geocore_spark.sources.sinks import run_harvest_sink, snapshot_overwrite
+from stac_to_geocore_spark.sources.sinks import close_run, open_run, put_part
 
 
 def run_harvest(
@@ -56,16 +59,14 @@ def run_harvest(
     root_key, root_json = translate_root(root, colls, source, root_name, source_system)
     root_id = root_key[len(source) + len("-root-") : -len(".geojson")]
     coll_docs = translate_collections(colls, source, root_id, root_name, source_system)
-    head = spark.createDataFrame([(root_key, root_json)] + coll_docs, OUT_SCHEMA)
+    run_root = open_run(store_root, atomic)
+    put_part(run_root, [(root_key, root_json)] + coll_docs)  # the driver's part 0
 
     meta = build_coll_meta(colls)
-    items = map_pages(
-        spark, pages, fetch,
-        lambda item: item_doc(item, meta, source, root_name, source_system),
-        ("key", "json"),
-    )
-    docs = head.unionByName(items)
 
-    if atomic:
-        return snapshot_overwrite(docs, store_root)
-    return run_harvest_sink(docs, store_root)
+    def put_items(feats: Iterator[dict]) -> list[tuple[int]]:
+        docs = (item_doc(f, meta, source, root_name, source_system) for f in feats)
+        return [(put_part(run_root, docs),)]
+
+    map_pages(spark, pages, fetch, put_items, "keys long").collect()
+    return close_run(store_root, atomic)

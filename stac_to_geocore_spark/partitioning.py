@@ -40,11 +40,17 @@ def pack_waves(df: DataFrame, max_factor: int = 4) -> DataFrame:
     Python-boundary map stage: coalesce down to defaultParallelism when the
     partition count is above it but within max_factor of it.
 
-    Why: each Arrow task pays a fixed serialize/worker round-trip cost
-    (~4-5 ms measured), so a scan that lands at a small multiple of the
-    slot count runs 2-4 ragged waves of half-empty tasks — measured on the
-    2 M-row flagship encode at local[32]: 64 partitions 0.64 s -> 0.40 s,
-    128 partitions 0.98 s -> 0.39 s (interleaved min-of-5, identical rows).
+    Why: each Python task pays a fixed cost before it reads a row, about
+    0.27 CPU-s on a 4-core host with PySpark 4.1 / Python 3.11 (24 runs of
+    an identity mapInPandas over 8 one-row partitions: 6.3 CPU-s of worker
+    time). Most of it, about 0.2 CPU-s, is the `importlib.invalidate_caches()`
+    in `pyspark.worker_util.setup_spark_files`: on Python 3.11 it makes
+    each of the worker's 14-16 zipimporters re-read its zip's index, and
+    `pyspark.zip` alone has 1,328 entries. So a scan that lands at a small
+    multiple of the slot count runs 2-4 ragged waves of half-empty tasks —
+    measured on the 2 M-row flagship encode at local[32]: 64 partitions
+    0.64 s -> 0.40 s, 128 partitions 0.98 s -> 0.39 s (interleaved
+    min-of-5, identical rows).
     coalesce() merges adjacent splits with NO exchange, so this never adds
     a shuffle.
 

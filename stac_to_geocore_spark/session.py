@@ -9,8 +9,12 @@ UDFs, and shuffle partition count scales with parallelism.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -73,3 +77,20 @@ def _core_count(master: str) -> int:
             return 8
     return os.cpu_count() or 8
 
+
+def local_df(spark: SparkSession, rows: Sequence[tuple], schema: str | StructType) -> DataFrame:
+    """Driver-side rows as a DataFrame that runs no Python when executed.
+
+    `createDataFrame(<list>)` plans `Scan ExistingRDD` over a pickled RDD:
+    every execution runs an identity Python map on defaultParallelism
+    partitions (4 Python tasks at local[4], 32 at local[32]). The same rows
+    handed over as a `pyarrow.Table` typed by `schema` plan as a
+    `LocalTableScan`, JVM rows only, whether or not the Arrow conf is on.
+    Schema, nullability and values equal `createDataFrame(rows, schema)`'s.
+    """
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

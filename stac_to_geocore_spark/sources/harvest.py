@@ -6,7 +6,8 @@ by one (pagination.py:5-61) with every item translated inline. Here the root,
 the /collections body and the page walk stay on the driver — the walk IS
 partition planning, each page URL becomes a unit of parallel work — and
 `map_pages` fans the pages out: one mapInPandas task fetches its pages and
-applies a per-feature function to the raw JSON dicts, as the reference does.
+hands their raw JSON dicts to one per-task function, which is where
+run_harvest translates and puts every record in the same task.
 
 The fetch function is injectable (signature url -> (status_code, json_dict))
 so tests run against a deterministic in-process fake API; `http_fetch` is
@@ -16,10 +17,13 @@ the requests-backed implementation for real clusters.
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
+
+from stac_to_geocore_spark.session import local_df
 
 Fetch = Callable[[str], tuple[int, dict]]
 
@@ -80,27 +84,31 @@ def map_pages(
     spark: SparkSession,
     pages: list[str],
     fetch: Fetch,
-    per_feature: Callable[[dict], tuple],
-    columns: tuple[str, ...],
+    per_task: Callable[[Iterator[dict]], Iterable[tuple]],
+    schema: str,
 ) -> DataFrame:
-    """Page fan-out: page URLs become a tiny DataFrame, repartitioned so each
-    task pulls its own pages, and one mapInPandas emits per_feature(item) —
-    a tuple of strings named by `columns` — for every feature of every page."""
-    n = max(1, min(len(pages), spark.sparkContext.defaultParallelism * 2))
-    pages_df = spark.createDataFrame([(u,) for u in pages], "url string").repartition(n)
+    """Page fan-out: one mapInPandas over the page URLs as a driver-side
+    LocalTableScan, which splits them into min(pages, defaultParallelism)
+    runs of consecutive pages, one per task. per_task is called once per
+    task on the features of all its pages and returns the task's rows,
+    typed by `schema`; it may also act on the features itself (run_harvest
+    puts each record and its manifest part there). Task order is page
+    order, so parts named by partition id list the items in page order."""
+    pages_df = local_df(spark, [(u,) for u in pages], "url string")
+    columns = DataType.fromDDL(schema).names
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [per_feature(feat) for url in b["url"] for feat in page_items(fetch, url)]
-            yield pd.DataFrame(rows, columns=list(columns))
+        feats = (feat for b in batches for url in b["url"] for feat in page_items(fetch, url))
+        yield pd.DataFrame(list(per_task(feats)), columns=columns)
 
-    return pages_df.mapInPandas(run, ", ".join(f"{c} string" for c in columns))
+    return pages_df.mapInPandas(run, schema)
 
 
 def fetch_items_df(spark: SparkSession, pages: list[str], fetch: Fetch) -> DataFrame:
     """Distributed page fetch: one `item` row per STAC item, holding the
     item's raw JSON text."""
-    return map_pages(spark, pages, fetch, lambda feat: (json.dumps(feat),), ("item",))
+    return map_pages(spark, pages, fetch, lambda feats: [(json.dumps(f),) for f in feats],
+                     "item string")
 
 
 def read_catalog(fetch: Fetch, api_root: str) -> tuple[dict, list[dict], list[str]]:

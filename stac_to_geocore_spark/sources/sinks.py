@@ -5,8 +5,18 @@ The reference writes one JSON object per record to S3 (s3_operations.py:
 92-119), logs every key to lastRun.txt (app.py:69,116,135,162,164), and next
 run deletes everything listed before re-writing (s3_operations.py:31-43) —
 a non-atomic delete-then-write window. The engine keeps the manifest
-protocol (for reference parity) but adds `snapshot_overwrite`, which stages
-the new run and swaps it in atomically — the Iceberg-style replace.
+protocol (for reference parity) and adds an atomic variant, which stages
+the new run and swaps it in — the Iceberg-style replace. Every writer
+shares the same three steps:
+
+  open_run   delete the previous run, or start a fresh staging dir; clear
+             stale manifest parts                                (driver)
+  put_part   put each record, list its keys in one part file    (per task)
+  close_run  merge the parts into lastRun.txt; swap if atomic     (driver)
+
+run_harvest calls put_part inside its page tasks, so each record is
+fetched, translated and put in one Python pass; run_harvest_sink and
+snapshot_overwrite are the same steps around a (key, json) DataFrame.
 
 ObjectStore is a minimal injectable interface: LocalObjectStore for this
 sandbox, an S3 client drop-in on a real cluster.
@@ -16,7 +26,9 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Iterable
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_KEY = "lastRun.txt"
@@ -59,43 +71,91 @@ class LocalObjectStore:
 
 
 PARTS_PREFIX = "_manifest_parts"
+CONSUMED_SUFFIX = ".consumed"
 
 
-def write_objects(df: DataFrame, store_root: str, manifest_parts: bool = False) -> int:
-    """K1: per-record put. df must be (key, json). Distributed: each
+def _staging(store_root: str) -> str:
+    return store_root.rstrip("/") + ".staging"
+
+
+def open_run(store_root: str, atomic: bool = False) -> str:
+    """Sink step 1: open a run and return the directory its objects and
+    manifest parts go to. Reference semantics delete the previous run's
+    keys through its manifest (K3) and write in place; `atomic` starts a
+    fresh staging dir instead. Either way, part files or a half-consumed
+    merge dir left by a run that crashed between its puts and its merge
+    are cleared: merged into THIS run's manifest, they would list keys
+    this run never wrote."""
+    if atomic:
+        run_root = _staging(store_root)
+        shutil.rmtree(run_root, ignore_errors=True)
+    else:
+        run_root = store_root
+        delete_previous_run(LocalObjectStore(store_root))
+    parts_dir = LocalObjectStore(run_root)._path(PARTS_PREFIX)
+    shutil.rmtree(parts_dir, ignore_errors=True)
+    shutil.rmtree(parts_dir + CONSUMED_SUFFIX, ignore_errors=True)
+    return run_root
+
+
+def put_part(run_root: str, docs: Iterable[tuple[str, str]]) -> int:
+    """Sink step 2 (K1): put each (key, json) doc as one object, then list
+    the keys in one manifest part file, so the manifest is built in the
+    same pass with nothing collected to the driver. Returns the key count.
+
+    A Spark task writes part <partition id + 1>, so a retried task
+    rewrites the same objects and the same part file. The driver writes
+    part 0 (run_harvest's root and collection docs), so its keys lead
+    lastRun.txt."""
+    store = LocalObjectStore(run_root)
+    keys = []
+    for key, text in docs:
+        store.put(key, text)
+        keys.append(key)
+    if keys:
+        task = TaskContext.get()
+        part = task.partitionId() + 1 if task else 0
+        store.put(f"{PARTS_PREFIX}/part-{part:05d}.txt", "".join(f"{k}\n" for k in keys))
+    return len(keys)
+
+
+def close_run(store_root: str, atomic: bool = False) -> list[str]:
+    """Sink step 3: merge the run's parts into lastRun.txt (K2) and, if
+    atomic, swap the staged run in for the old one (local rename; an
+    Iceberg snapshot commit on a cluster), so readers never observe a
+    half-written run. Returns the manifest key list."""
+    run_root = _staging(store_root) if atomic else store_root
+    store = LocalObjectStore(run_root)
+    merge_manifest_parts(store)
+    keys = _manifest_keys(store)
+    if atomic:
+        old = store_root.rstrip("/") + ".old"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(store_root):
+            os.rename(store_root, old)
+        os.rename(run_root, store_root)
+        shutil.rmtree(old, ignore_errors=True)
+    return keys
+
+
+def write_objects(df: DataFrame, store_root: str, manifest_parts: bool = False):
+    """K1 over a DataFrame: df must be (key, json). Distributed: each
     partition writes its own objects (the reference uploads serially,
-    app.py:113/131/158). With manifest_parts=True each partition also logs
-    its keys to one part file — the manifest is built in the same pass with
-    nothing collected to the driver."""
-    from pyspark import TaskContext
-
-    if manifest_parts:
-        # a previous crashed run (died between write and merge) may have
-        # left part files or a half-consumed merge staging dir; stale parts
-        # would otherwise be merged into THIS run's manifest, listing keys
-        # this run never wrote
-        store = LocalObjectStore(store_root)
-        for stale in store.list():
-            if stale.startswith(PARTS_PREFIX + "/"):
-                store.delete(stale)
-        shutil.rmtree(store._path(PARTS_PREFIX) + CONSUMED_SUFFIX, ignore_errors=True)
+    app.py:113/131/158); with manifest_parts=True each partition also logs
+    its keys to one part file (`put_part`). `foreachPartition` pickles
+    every row into a Python worker; run_harvest puts inside its page tasks
+    instead."""
 
     def put_batch(rows) -> None:
-        store = LocalObjectStore(store_root)
-        keys = []
-        for row in rows:
-            store.put(row["key"], row["json"])
-            if manifest_parts:
-                keys.append(row["key"])
-        if keys:
-            pid = TaskContext.get().partitionId()
-            store.put(f"{PARTS_PREFIX}/part-{pid:05d}.txt", "".join(f"{k}\n" for k in keys))
+        docs = ((row["key"], row["json"]) for row in rows)
+        if manifest_parts:
+            put_part(store_root, docs)
+        else:
+            store = LocalObjectStore(store_root)
+            for key, text in docs:
+                store.put(key, text)
 
     df.foreachPartition(put_batch)
-    return 0
-
-
-CONSUMED_SUFFIX = ".consumed"
 
 
 def merge_manifest_parts(store: LocalObjectStore) -> int:
@@ -171,33 +231,21 @@ def _manifest_keys(store: LocalObjectStore) -> list[str]:
 
 
 def run_harvest_sink(df: DataFrame, store_root: str) -> list[str]:
-    """The reference's full sink protocol: delete previous run, write all
-    records + per-partition manifest parts in ONE distributed pass, then
-    stream-merge the parts into lastRun.txt."""
-    store = LocalObjectStore(store_root)
-    delete_previous_run(store)
-    write_objects(df, store_root, manifest_parts=True)
-    merge_manifest_parts(store)
-    return _manifest_keys(store)
+    """The reference's full sink protocol over a (key, json) DataFrame:
+    delete the previous run, write all records + per-partition manifest
+    parts in ONE distributed pass, then stream-merge the parts into
+    lastRun.txt."""
+    run_root = open_run(store_root)
+    write_objects(df, run_root, manifest_parts=True)
+    return close_run(store_root)
 
 
 def snapshot_overwrite(df: DataFrame, store_root: str) -> list[str]:
     """Engine-native replacement for delete-then-write: stage the run in a
-    sibling dir, then atomically swap (local rename; Iceberg snapshot commit
-    on a cluster). Readers never observe a half-written run."""
-    staging = store_root.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    write_objects(df, staging, manifest_parts=True)
-    staging_store = LocalObjectStore(staging)
-    merge_manifest_parts(staging_store)
-    keys = _manifest_keys(staging_store)
-    old = store_root.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(store_root):
-        os.rename(store_root, old)
-    os.rename(staging, store_root)
-    shutil.rmtree(old, ignore_errors=True)
-    return keys
+    sibling dir, then atomically swap it in (`close_run`)."""
+    run_root = open_run(store_root, atomic=True)
+    write_objects(df, run_root, manifest_parts=True)
+    return close_run(store_root, atomic=True)
 
 
 def export_csv(spark: SparkSession, parquet_path: str, csv_path: str) -> None:

@@ -15,7 +15,9 @@ the true top-k (every point within R lies inside its query's bbox, and the
 bbox's grid cells cover it exactly), so the final window is EXACT. The
 "cell ring" is the block of grid cells around each query: the one grid
 generator every spatial join shares (spatial/grid.py), so the whole round
-is JVM column math with no Python boundary.
+is JVM column math with no Python boundary. Each round's query bboxes and
+the certified result are driver rows; they go back to Spark as
+LocalTableScans (session.local_df), never as a pickled Python RDD.
 
 Distance metric: squared equirectangular "scaled degrees"
 (dx = dlon * cos(mid_lat), dy = dlat) — monotone in true distance at these
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stac_to_geocore_spark.session import local_df
 from stac_to_geocore_spark.spatial.grid import box_cells, point_cell
 
 
@@ -59,10 +62,7 @@ def knn_join(
     qlat = queries["lat"].to_numpy(np.float64)
     qids = queries["query_id"].tolist()
     if not qids:
-        pid_type = points.schema[point_id].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"query_id string, point_id {pid_type}, rank int, dist2 double"
-        )
+        return _empty(points, point_id)
 
     # NO unbounded persist of the points table: at 10^12 rows a full-table
     # cache is a multi-TB liability. Each round re-scans and probes the
@@ -79,10 +79,7 @@ def knn_join(
     ).collect()[0]
     n_pts = ext["n"]
     if n_pts == 0:
-        pid_type = points.schema[point_id].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"query_id string, point_id {pid_type}, rank int, dist2 double"
-        )
+        return _empty(points, point_id)
     # fewer points than k: the exact answer ranks ALL n_pts points per query
     # (never a silent partial result — expansion continues until every
     # query's k_eff-th candidate is certified, or it raises)
@@ -105,9 +102,9 @@ def knn_join(
         # (dy <= R; dx <= R implies dlon <= R/cos), and the bbox's grid
         # cells at step R cover it exactly — so the candidates are a
         # superset of the in-radius points, which the <=0.98R check needs
-        cells = F.broadcast(box_cells(spark.createDataFrame(
-            qrows, "query_id string, q_lon double, q_lat double, "
-                   "west double, south double, east double, north double",
+        cells = F.broadcast(box_cells(local_df(
+            spark, qrows, "query_id string, q_lon double, q_lat double, "
+                          "west double, south double, east double, north double",
         ), R, R).select("query_id", "q_lon", "q_lat", "gx", "gy"))
         gx, gy = point_cell(F.col("p_lon"), F.col("p_lat"), R, R)
         pts = base.select("point_id", "p_lon", "p_lat", gx.alias("gx"), gy.alias("gy"))
@@ -138,9 +135,16 @@ def knn_join(
                 (row["query_id"], row["point_id"], row["rank"], round(row["dist2"], 9))
                 for row in rows
             ]
-            return spark.createDataFrame(result, schema=topk.schema)
+            return local_df(spark, result, topk.schema)
         R *= 2.0
     raise RuntimeError(
         f"knn_join did not converge after {max_iter} radius doublings "
         f"(final R={R}); raise max_iter"
     )
+
+
+def _empty(points: DataFrame, point_id: str) -> DataFrame:
+    """The typed empty result (no queries, or no points)."""
+    pid_type = points.schema[point_id].dataType.simpleString()
+    return local_df(points.sparkSession, [],
+                    f"query_id string, point_id {pid_type}, rank int, dist2 double")

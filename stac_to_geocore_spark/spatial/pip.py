@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from stac_to_geocore_spark.session import local_df
 from stac_to_geocore_spark.spatial.grid import (
     DRIVER_DIM_MAX,
     box_cells,
@@ -86,7 +87,7 @@ def pip_join(
     rest = [c for c in points.columns if c != point_id]
     n, mean_w, max_w, mean_h, max_h = grid_side_stats(polygons)
     if n == 0:  # no polygons -> empty result with the contract schema
-        return points.sparkSession.createDataFrame([], StructType(
+        return local_df(points.sparkSession, [], StructType(
             [points.schema[point_id], polygons.schema["poly_id"]]
             + [points.schema[c] for c in rest]))
     dx, dy = grid_steps(mean_w, max_w, mean_h, max_h,
@@ -127,7 +128,9 @@ def pip_ring_join(
     their bboxes size the grid on the driver (no extra Spark job), and each
     ring's edge array is built ONCE there and broadcast once per polygon
     (joined by poly_id after the cell join), never replicated across cell
-    rows. The refine is F.aggregate over that array in JVM column math,
+    rows. The ring cells and edges go back to Spark as driver-row
+    LocalTableScans (session.local_df), so executing the join runs no
+    Python. The refine is F.aggregate over that array in JVM column math,
     with numpy's operation order — (x2 - x1) * (Y - y1) / (y2 - y1) + x1 —
     so containment is bit-identical to a numpy ray cast; the division sits
     inside F.when, where the edge straddles Y and so is never horizontal
@@ -164,12 +167,13 @@ def pip_ring_join(
                         target_cells_per_box=POINT_CELLS_PER_BOX)
     pid = rings_pdf["poly_id"].tolist()
     cells = F.broadcast(box_cells(
-        spark.createDataFrame(
-            [(p,) + b for p, b in zip(pid, bbox)],
+        local_df(
+            spark, [(p,) + b for p, b in zip(pid, bbox)],
             "poly_id string, west double, south double, east double, north double",
         ), dx, dy,
     ).select("poly_id", "gx", "gy"))
-    edges = F.broadcast(spark.createDataFrame(
+    edges = F.broadcast(local_df(
+        spark,
         [(p, [(x[i], y[i], x[(i + 1) % len(x)], y[(i + 1) % len(x)]) for i in range(len(x))])
          for p, x, y in zip(pid, xs, ys)],
         "poly_id string, edges array<struct<x1:double,y1:double,x2:double,y2:double>>",

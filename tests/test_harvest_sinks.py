@@ -168,13 +168,32 @@ def test_stac_streaming_source_available_now(spark, tmp_path):
 
 
 def test_stale_manifest_parts_not_merged(spark, tmp_path):
-    """Part files left by a crashed previous run must not leak into the new
-    run's manifest (they would list keys this run never wrote)."""
-    from stac_to_geocore_spark.sources.sinks import PARTS_PREFIX
+    """Part files, or a half-consumed merge dir, left by a crashed previous
+    run must not leak into the new run's manifest (they would list keys
+    this run never wrote) — through every writer of the sink protocol: the
+    DataFrame form and run_harvest, in place and atomic."""
+    from stac_to_geocore_spark.job import run_harvest
+    from stac_to_geocore_spark.sources.sinks import CONSUMED_SUFFIX, PARTS_PREFIX
+
+    def plant_ghosts(store_root):
+        for root in (store_root, store_root + ".staging"):
+            store = LocalObjectStore(root)
+            store.put(f"{PARTS_PREFIX}/part-99999.txt", "ghost-key.geojson\n")
+            store.put(f"{PARTS_PREFIX}{CONSUMED_SUFFIX}/part-00000.txt", "ghost-consumed.geojson\n")
 
     store_root = str(tmp_path / "stale")
-    store = LocalObjectStore(store_root)
-    store.put(f"{PARTS_PREFIX}/part-99999.txt", "ghost-key.geojson\n")
+    plant_ghosts(store_root)
     docs = spark.createDataFrame([("a.geojson", "{}"), ("b.geojson", "{}")], "key string, json string")
     keys = run_harvest_sink(docs, store_root)
     assert sorted(keys) == ["a.geojson", "b.geojson"]  # no ghost-key
+
+    fetch = make_fake_stac_fetch(n_items=30)
+    for atomic in (False, True):
+        store_root = str(tmp_path / f"stale_harvest_{atomic}")
+        plant_ghosts(store_root)
+        keys = run_harvest(spark, API_ROOT, store_root, fetch, atomic=atomic)
+        assert len(keys) == 1 + 8 + 30, atomic
+        assert not [k for k in keys if k.startswith("ghost")], atomic
+        store = LocalObjectStore(store_root)
+        assert not os.path.exists(store._path(PARTS_PREFIX))
+        assert not os.path.exists(store._path(PARTS_PREFIX) + CONSUMED_SUFFIX)

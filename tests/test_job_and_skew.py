@@ -39,24 +39,21 @@ def test_run_harvest_matches_reference_bytes(spark, tmp_path):
     """A 60-item harvest store must equal the frozen harvest_sink_job rows
     (key, byte length, md5) — rows verified byte-equal to the reference
     flow when they were frozen, so this gates reference byte parity without
-    the reference checkout. lastRun.txt lists its keys in partition order,
-    which follows the core count, so it is compared as a key set."""
+    the reference checkout. lastRun.txt lists the root and collections,
+    then the items in page order, whatever the core count, so it is
+    compared byte for byte too."""
     import hashlib
 
     from stac_to_geocore_spark.known_answers import KNOWN
-    from stac_to_geocore_spark.sources.sinks import MANIFEST_KEY
 
     store_root = str(tmp_path / "frozen")
     run_harvest(spark, API_ROOT, store_root, make_fake_stac_fetch(n_items=60))
     store = LocalObjectStore(store_root)
-    keys = [k for k in store.list() if k != MANIFEST_KEY]
     got = sorted(
         (k, len(store.get(k)), hashlib.md5(store.get(k).encode("utf-8")).hexdigest())
-        for k in keys
+        for k in store.list()
     )
-    want = sorted(tuple(r) for r in KNOWN["harvest_sink_job"]["rows"] if r[0] != MANIFEST_KEY)
-    assert got == want
-    assert sorted(store.get(MANIFEST_KEY).splitlines()) == sorted(keys)
+    assert got == sorted(tuple(r) for r in KNOWN["harvest_sink_job"]["rows"])
 
 
 def test_run_harvest_matches_live_reference(spark, tmp_path):

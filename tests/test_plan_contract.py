@@ -127,7 +127,9 @@ def test_bbox_overlap_small_side_broadcasts(spark, monkeypatch):
         assert build in p, p.splitlines()[:25]
 
 
-_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+# ExistingRDD is a DataFrame built from a Python list: every execution runs
+# an identity Python map over its pickled rows (session.local_df avoids it)
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "ExistingRDD")
 
 
 def _sql_plans_of(spark, run) -> list[str]:
@@ -175,26 +177,31 @@ def test_spatial_join_plans_have_no_python_node(spark, name):
             assert node not in plan, f"{name}: {node} in\n{plan[:3000]}"
 
 
-def test_harvest_docs_plan_has_one_python_node(spark, monkeypatch):
-    """run_harvest hands its sink one Python node: the page fan-out that
-    fetches and translates raw item JSON in the same task. Root and
-    collection docs are driver rows, and no item is typed with from_json."""
+def test_harvest_plans_have_one_python_node(spark, tmp_path, monkeypatch):
+    """run_harvest crosses into Python once: over every SQL execution it
+    issues there is one MapInPandas, the page tasks that fetch, translate
+    and put each record. Root and collection docs are put by the driver, no
+    driver rows are pickled (ExistingRDD), no item is typed with from_json,
+    and no sink re-reads the docs through DataFrame.foreachPartition."""
+    from pyspark.sql import DataFrame
+
     from stac_to_geocore_spark import job
     from stac_to_geocore_spark.fixtures import API_ROOT, make_fake_stac_fetch
 
-    seen = {}
+    def no_foreach(self, f):
+        raise AssertionError("run_harvest called DataFrame.foreachPartition")
 
-    def capture(docs, store_root):
-        seen["docs"] = docs
-        return []
-
-    monkeypatch.setattr(job, "run_harvest_sink", capture)
-    job.run_harvest(spark, API_ROOT, "unused-store", make_fake_stac_fetch(n_items=60))
-    plan = seen["docs"]._jdf.queryExecution().executedPlan().toString()
-    nodes = re.findall(r"\b(?:%s)\b" % "|".join(_PYTHON_NODES + ("MapInArrow",)), plan)
-    assert nodes == ["MapInPandas"], plan
-    for parse in ("JsonToStructs", "from_json"):
-        assert parse not in plan, plan
+    monkeypatch.setattr(DataFrame, "foreachPartition", no_foreach)
+    plans = _sql_plans_of(spark, lambda: job.run_harvest(
+        spark, API_ROOT, str(tmp_path / "store"), make_fake_stac_fetch(n_items=60)))
+    assert plans
+    executed = [p.split("== Initial Plan ==")[0] for p in plans]
+    nodes = [n for p in executed for n in re.findall(
+        r"^\(\d+\) (%s)\b" % "|".join(_PYTHON_NODES + ("MapInArrow",)), p, re.M)]
+    assert nodes == ["MapInPandas"], plans
+    for plan in plans:
+        for parse in ("ExistingRDD", "JsonToStructs", "from_json"):
+            assert parse not in plan, plan
 
 
 _DEDUP_QUERY_UDFS = {
