@@ -322,11 +322,11 @@ def _q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_to_geocore_spark.fixtures import POLYGONS_SCHEMA
+    from stac_to_geocore_spark.fixtures import boxes_df
     from stac_to_geocore_spark.spatial.pip import pip_join
 
     pts = _points_df(spark, sf_dir)
-    polys = spark.createDataFrame(_fixture_polygons_pdf(), POLYGONS_SCHEMA)
+    polys = boxes_df(spark, _fixture_polygons_pdf())
     return pip_join(pts, polys, point_id="point_id").select("point_id", "poly_id")
 
 
@@ -356,10 +356,10 @@ def _q_bbox_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Region-region spatial join (spatial/overlap.py): fixture polygons
     self-joined for bbox intersection via shared cell covers; oracle is the
     brute-force pairwise intersection predicate."""
-    from stac_to_geocore_spark.fixtures import POLYGONS_SCHEMA
+    from stac_to_geocore_spark.fixtures import boxes_df
     from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
-    polys = spark.createDataFrame(_fixture_polygons_pdf(), POLYGONS_SCHEMA)
+    polys = boxes_df(spark, _fixture_polygons_pdf())
     return bbox_overlap_join(polys, polys).filter(F.col("id_a") < F.col("id_b"))
 
 
@@ -444,11 +444,10 @@ def _q_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew path of the PIP join: forced shuffle join with salted cell
     keys (salt_factor=4) — must produce the identical assignment set as the
     broadcast path, checked against the same SQL containment oracle."""
+    from stac_to_geocore_spark.fixtures import boxes_df
     from stac_to_geocore_spark.spatial.pip import pip_join
 
-    from stac_to_geocore_spark.fixtures import POLYGONS_SCHEMA
-
-    polys = spark.createDataFrame(_fixture_polygons_pdf(), POLYGONS_SCHEMA)
+    polys = boxes_df(spark, _fixture_polygons_pdf())
     pts = _points_df(spark, sf_dir)
     return pip_join(
         pts, polys, point_id="point_id", broadcast_covers=False, salt_factor=4

@@ -217,7 +217,13 @@ def gen_polygons_pdf(m: int, seed: int = DEFAULT_SEED) -> pd.DataFrame:
 
 
 def polygons_df(spark: SparkSession, m: int, seed: int = DEFAULT_SEED) -> DataFrame:
-    return spark.createDataFrame(gen_polygons_pdf(m, seed), POLYGONS_SCHEMA)
+    return boxes_df(spark, gen_polygons_pdf(m, seed))
+
+
+def boxes_df(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """A POLYGONS_SCHEMA pandas frame as a LocalTableScan (session.local_df),
+    which runs no Python whether or not the Arrow conf is on."""
+    return local_df(spark, list(pdf.itertuples(index=False, name=None)), POLYGONS_SCHEMA)
 
 
 # --- STAC fixtures (FIXTURES.md §2-4): inputs to the compat layer ---

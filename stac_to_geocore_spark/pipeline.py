@@ -106,6 +106,23 @@ def flagship(
                     broadcast_covers=broadcast_covers, salt_factor=salt_factor)
 
 
+def _input_fingerprint(images: DataFrame, polygons: DataFrame, flagship_kwargs: dict) -> dict:
+    """What the flagship's output depends on, summarized by JVM aggregates:
+    row count and sum(xxhash64) of images(image_id, lon, lat) and of
+    polygons(poly_id, west, south, east, north), plus the flagship kwargs.
+    A sum, not bit_xor: duplicate rows would cancel out under XOR."""
+    def summary(name, df, cols):
+        return df.select(F.lit(name).alias("side"), F.count(F.lit(1)).alias("n"),
+                         F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"))
+
+    rows = (summary("images", images, ["image_id", "lon", "lat"])
+            .unionByName(summary("polygons", polygons, ["poly_id", "west", "south", "east", "north"]))
+            .collect())
+    fp = {r["side"]: [r["n"], str(r["h"])] for r in rows}
+    fp["flagship"] = dict(flagship_kwargs)
+    return fp
+
+
 def materialize_assignments(
     images: DataFrame,
     polygons: DataFrame,
@@ -118,12 +135,25 @@ def materialize_assignments(
     flagship -> LineageWriter partitioned by cell_p5. A killed job resumes by
     skipping committed partitions (BASELINE.json north_rule); the manifest
     carries (cell range, row count, checksum, rows/sec) per partition.
-    Returns the manifest rows written this invocation."""
+    Returns the manifest rows written this invocation.
+
+    Each call first fingerprints its inputs (_input_fingerprint: one pass of
+    JVM aggregates, no Python). When the path's completion record names the
+    same fingerprint and every partition it lists is still committed, the
+    run already finished: return [] without planning the flagship. Any
+    other case (no record, other inputs or kwargs, a killed run, which
+    leaves no record) takes the full path, which records the fingerprint
+    once its write returns."""
     from stac_to_geocore_spark.tables.lineage import LineageWriter
 
+    writer = LineageWriter(path, partition_col="cell_p5")
+    fingerprint = _input_fingerprint(images, polygons, flagship_kwargs)
+    if writer.is_complete(fingerprint):
+        return []
     out = flagship(images, polygons, **flagship_kwargs)
     # range stats use the finest cell column; partitioning uses cell_p5
     res = flagship_kwargs.get("res", 7)
     out = out.withColumn("cell", F.col(f"h3_r{res}"))
-    writer = LineageWriter(path, partition_col="cell_p5")
-    return writer.write(out, run_id=run_id, batch_size=batch_size)
+    written = writer.write(out, run_id=run_id, batch_size=batch_size)
+    writer.mark_complete(fingerprint)
+    return written

@@ -9,9 +9,15 @@ rows/sec), so a killed job resumes by skipping committed partitions —
 BASELINE.json north_rule: "resumable from checkpoint with per-partition
 lineage + metrics".
 
-One stats aggregation over the persisted input lists and measures every
-partition. The pending ones commit in sorted-key batches, each one write and
-a two-phase commit (local-fs rename as the atomic swap; on a real cluster the
+The input is clustered by the partition key once, then persisted. One stats
+aggregation over the cache lists and measures every partition; it needs no
+Exchange of its own, since the cache is already clustered by its key. The
+clustering is a rebalance hint, not repartition: at Spark's default
+(spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false) AQE keeps
+a cached plan's partitioning as planned, so the two are the same; a session
+that allows the change lets AQE coalesce small cells and split a hot one.
+The pending partitions commit in sorted-key batches, each one write and a
+two-phase commit (local-fs rename as the atomic swap; on a real cluster the
 same protocol rides Iceberg's snapshot commit via iceberg-spark-runtime):
 
   1. stage:  write the batch of partitions to  <path>/.staging-<run>-<batch>/
@@ -24,8 +30,23 @@ idempotent per partition), so resume is exactly-once per partition. A crash
 in (3) can leave a last line with no newline: not a commit, so readers skip
 it; the next write truncates it and removes a killed run's staging dirs.
 
+Because each batch task holds whole partitions, a batch write opens one
+writer, so one data file, per partition; unclustered, it opened one per
+(task, partition). Files are the cost that counts on the local FS: without
+the native Hadoop library every file or directory it creates forks
+`jspawnhelper` + `chmod`. At the north_star checkpoint (17,802 rows in 80
+partitions, local[4], 4 batches) that is 80 files and about 615 forks,
+against 308 files and about 1,950 forks unclustered.
+
 The checksum is an order-independent XOR of xxhash64 over the row's columns,
 computed by the JVM (F.xxhash64 + bit_xor) — no Python in the data path.
+
+Completion record: `_lineage/complete.json` names the input (a fingerprint
+the caller computes) of a write that returned, and the partitions committed
+then, written tmp + fsync + os.replace. `is_complete` lets a caller skip
+computing its input when that record matches and every partition it lists
+is still committed (pipeline.materialize_assignments). A killed write leaves
+no record, and an older record only ever lists committed partitions.
 """
 
 from __future__ import annotations
@@ -58,9 +79,32 @@ class LineageWriter:
         self.partition_col = partition_col
         self.data_dir = os.path.join(path, "data")
         self.manifest_path = os.path.join(path, "_lineage", "manifest.jsonl")
+        self.record_path = os.path.join(path, "_lineage", "complete.json")
 
     def completed_partitions(self) -> set:
         return {m["partition"] for m in read_manifest(self.path) if m.get("status") == "committed"}
+
+    def is_complete(self, fingerprint: dict) -> bool:
+        """True when the completion record names `fingerprint` and every
+        partition it lists is still committed in the manifest."""
+        try:
+            with open(self.record_path) as f:
+                rec = json.load(f)
+        except FileNotFoundError:
+            return False
+        return (rec["fingerprint"] == fingerprint
+                and set(rec["partitions"]) <= self.completed_partitions())
+
+    def mark_complete(self, fingerprint: dict) -> None:
+        """Record that a write of the input named by `fingerprint` returned,
+        with the committed partitions: tmp file, fsync, atomic replace."""
+        rec = {"fingerprint": fingerprint, "partitions": sorted(self.completed_partitions())}
+        tmp = self.record_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(rec, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self.record_path)
 
     def write(
         self,
@@ -85,7 +129,10 @@ class LineageWriter:
                 mf.truncate(mf.read().rfind(b"\n") + 1)
         done = self.completed_partitions()
 
-        df = df.persist()
+        # clustered by the key: each batch task holds whole partitions, so a
+        # batch write opens one writer (one file) per partition, and the stats
+        # aggregate below reads the cache with no Exchange of its own
+        df = df.hint("rebalance", pc).persist()
         try:
             key = F.col(pc).cast("string")
             rng = F.col("cell" if "cell" in df.columns else pc)
@@ -93,12 +140,13 @@ class LineageWriter:
             # by design, bounded by the cell vocabulary (~10^4-10^5 at planetary
             # coverage), not by the row count — driver-safe at 100 TB.
             stats = (
-                df.groupBy(key.alias("partition"))
+                df.groupBy(pc)
                 .agg(
                     F.count(F.lit(1)).alias("row_count"),
                     F.expr("bit_xor(xxhash64(" + ", ".join(df.columns) + "))").alias("checksum"),
                     F.array(F.min(rng), F.max(rng)).cast("array<string>").alias("cell_range"),
                 )
+                .select(key.alias("partition"), "row_count", "checksum", "cell_range")
                 .collect()
             )
             nulls = sum(s["row_count"] for s in stats if s["partition"] is None)

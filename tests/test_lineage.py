@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 import uuid
 
@@ -151,3 +152,38 @@ def test_stale_staging_dirs_are_removed(spark, tmp_path, small):
     assert not (path / ".staging-killed-0").exists()
     assert sorted(os.listdir(path)) == ["_lineage", "data"]
     assert w.read(spark).count() == 400
+
+
+@pytest.fixture()
+def spread(spark):
+    """2,000 rows over 37 partitions, spread over 8 input partitions."""
+    return spark.range(0, 2000, 1, 8).select(
+        "id", (F.col("id") % 37).cast("int").alias("cell_p5"), (F.col("id") * 7919).alias("cell"))
+
+
+def test_clustered_write_leaves_one_file_per_partition(spark, tmp_path, spread):
+    w = LineageWriter(str(tmp_path / "files"))
+    w.write(spread, run_id="r1", batch_size=10)
+    dirs = sorted(os.listdir(w.data_dir))
+    assert len(dirs) == 37
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(w.data_dir, d)) if f.startswith("part-")]
+        assert len(files) == 1, (d, files)
+    assert w.read(spark).count() == 2000
+
+
+def test_clustered_manifest_equals_unclustered(spark, tmp_path, spread, monkeypatch):
+    """Clustering moves rows between tasks, not between partitions: the
+    manifest's stats equal those of a write with the rebalance hint off."""
+    def stats(path):
+        return [(m["partition"], m["row_count"], m["checksum"], m["cell_range"])
+                for m in read_manifest(path)]
+
+    LineageWriter(str(tmp_path / "clustered")).write(spread, run_id="r1", batch_size=10)
+    monkeypatch.setattr(type(spread), "hint", lambda self, name, *params: self)
+    LineageWriter(str(tmp_path / "plain")).write(spread, run_id="r1", batch_size=10)
+    assert stats(str(tmp_path / "clustered")) == stats(str(tmp_path / "plain"))
+    assert len(stats(str(tmp_path / "plain"))) == 37
+    # the unclustered write is the one that scatters each partition
+    plain = glob.glob(str(tmp_path / "plain" / "data" / "*" / "part-*"))
+    assert len(plain) > 37

@@ -74,3 +74,16 @@ def test_local_df_is_a_jvm_scan_equal_to_list_rows(no_arrow, rows, schema):
     want = spark.createDataFrame(rows, schema)
     assert df.schema == want.schema
     assert df.collect() == want.collect()
+
+
+@pytest.mark.parametrize("name", ["pip_assign", "bbox_overlap"])
+def test_fixture_boxes_plan_no_existing_rdd(no_arrow, name):
+    """With the Arrow conf off, createDataFrame(<pandas>) takes the list
+    path and plans a pickled ExistingRDD; the contract's fixture boxes go
+    through session.local_df, so the executed plan holds none."""
+    import __spark_entry__ as m
+
+    df = m.queries()[name](no_arrow, m.SF_SMOKE)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
