@@ -132,7 +132,7 @@ def materialize_assignments(
     **flagship_kwargs,
 ):
     """The north-star pipeline with per-partition lineage checkpointing:
-    flagship -> LineageWriter partitioned by cell_p5. A killed job resumes by
+    flagship -> LineageWriter keyed by cell_p5. A killed job resumes by
     skipping committed partitions (BASELINE.json north_rule); the manifest
     carries (cell range, row count, checksum, rows/sec) per partition.
     Returns the manifest rows written this invocation.

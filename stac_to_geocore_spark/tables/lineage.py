@@ -4,39 +4,50 @@ Generalizes the reference's run manifest: stac-to-geocore appends every
 written key to lastRun.txt (app.py:69,116,135,162,164) and deletes the
 previous run's keys before writing (s3_operations.py:31-43) — a crude,
 non-atomic lineage mechanism. Here each *partition* (a cell-prefix bucket)
-commits independently with (cell_range, row_count, checksum, elapsed,
-rows/sec), so a killed job resumes by skipping committed partitions —
-BASELINE.json north_rule: "resumable from checkpoint with per-partition
-lineage + metrics".
+is listed with (cell_range, row_count, checksum, elapsed, rows/sec), so a
+killed job resumes by skipping committed partitions — BASELINE.json
+north_rule: "resumable from checkpoint with per-partition lineage + metrics".
 
-The input is clustered by the partition key once, then persisted. One stats
-aggregation over the cache lists and measures every partition; it needs no
-Exchange of its own, since the cache is already clustered by its key. The
-clustering is a rebalance hint, not repartition: at Spark's default
-(spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false) AQE keeps
-a cached plan's partitioning as planned, so the two are the same; a session
-that allows the change lets AQE coalesce small cells and split a hot one.
-The pending partitions commit in sorted-key batches, each one write and a
-two-phase commit (local-fs rename as the atomic swap; on a real cluster the
-same protocol rides Iceberg's snapshot commit via iceberg-spark-runtime):
+The input is persisted as it comes. One stats aggregation over the cache
+lists and measures every partition. The pending partitions, sorted by key,
+commit in batches of `batch_size`; the batch is the atomic unit. Layout:
 
-  1. stage:  write the batch of partitions to  <path>/.staging-<run>-<batch>/
-  2. swap:   os.rename each partition dir into <path>/data/<part>=<v>/
-  3. commit: append the batch's manifest JSON lines in one fsynced write
+  <path>/data/<name>/part-*.parquet      one directory per committed batch
+  <path>/_lineage/manifest.jsonl         one line per batch: {"dir", "partitions"}
 
-A crash between (2) and (3) leaves renamed data without a manifest row; the
-next run detects the orphan dir and re-swaps/overwrites it (write is
-idempotent per partition), so resume is exactly-once per partition. A crash
+Each batch is one write and a two-phase commit (local-fs rename as the
+atomic swap; on a real cluster the same protocol rides Iceberg's snapshot
+commit via iceberg-spark-runtime, as tables/snapshots.py lays out):
+
+  1. stage:  write filter(key in batch).coalesce(n_b) to <path>/.staging-<name>/
+  2. swap:   os.rename it to <path>/data/<name>/
+  3. commit: append the batch's manifest line in one fsynced write
+
+<name> is b<the number of the batch's manifest line>: unique among
+committed batches (run ids repeat) and in commit order. n_b = ceil(P *
+batch rows / pending rows), P the cache's partition count: each write task
+writes about a cache partition's rows, and a batch of at most 1/P of the
+rows is one file. The filter runs inside those n_b tasks, so each scans
+P / n_b cache partitions: every batch scans the whole cache, as a filter
+over it must, on fewer tasks than P when the batch is small. Files are the
+cost that counts on the local FS: without the native Hadoop library every
+file or directory it creates forks `jspawnhelper` + `chmod`. At the
+north_star checkpoint (17,802 rows in 80 partitions, local[4], 4 batches)
+that is 6 files, against 80 with one directory per partition.
+
+The table has no partition columns, so a cell-targeted read prunes nothing
+at plan time: its filter is pushed to Parquet, which skips the files whose
+key min/max misses the cell. A batch holds a contiguous key range, so the
+read skips every other batch; the batch's own files each hold rows from
+across its range and are read. Written in one batch, a table is read about
+whole by any cell inside its key range.
+
+Only directories that a committed line names are data. A crash between (2)
+and (3) leaves a directory no line names: `read` skips it and the next
+`write` deletes it, with any staging dir, and rewrites the batch. A crash
 in (3) can leave a last line with no newline: not a commit, so readers skip
-it; the next write truncates it and removes a killed run's staging dirs.
-
-Because each batch task holds whole partitions, a batch write opens one
-writer, so one data file, per partition; unclustered, it opened one per
-(task, partition). Files are the cost that counts on the local FS: without
-the native Hadoop library every file or directory it creates forks
-`jspawnhelper` + `chmod`. At the north_star checkpoint (17,802 rows in 80
-partitions, local[4], 4 batches) that is 80 files and about 615 forks,
-against 308 files and about 1,950 forks unclustered.
+it and the next write truncates it. A torn line drops its whole batch, so
+no row is ever in two committed directories.
 
 The checksum is an order-independent XOR of xxhash64 over the row's columns,
 computed by the JVM (F.xxhash64 + bit_xor) — no Python in the data path.
@@ -62,17 +73,24 @@ from pyspark.sql import functions as F
 
 
 def read_manifest(path: str) -> list[dict]:
+    """One dict per committed partition, in commit order, with the `dir`
+    of the batch directory under data/ that holds its rows."""
     mf = os.path.join(path, "_lineage", "manifest.jsonl")
     if not os.path.exists(mf):
         return []
     with open(mf) as f:
         lines = f.read().split("\n")[:-1]  # the last piece is "" or the torn tail
-    return [json.loads(line) for line in lines if line.strip()]
+    out = []
+    for line in lines:
+        if line.strip():
+            batch = json.loads(line)
+            out.extend({**m, "dir": batch["dir"]} for m in batch["partitions"])
+    return out
 
 
 class LineageWriter:
-    """Writes a DataFrame partitioned by `partition_col` with per-partition
-    lineage rows and resume-on-restart."""
+    """Writes a DataFrame in sorted-key batches of `partition_col` values,
+    with per-partition lineage rows and resume-on-restart."""
 
     def __init__(self, path: str, partition_col: str = "cell_p5"):
         self.path = path
@@ -117,8 +135,8 @@ class LineageWriter:
         manifest rows in key order: stats from one aggregation, then one
         staged write per batch of `batch_size` partitions (None = all).
         Raises ValueError before any write if the partition column has nulls.
-        elapsed_sec and rows_per_sec are apportioned, not measured: the batch's
-        write time split by row share. fail_after_batches: test hook — raise
+        elapsed_sec is the batch's write time apportioned by row share;
+        rows_per_sec is the batch's. fail_after_batches: test hook — raise
         after N committed batches to simulate a kill."""
         pc = self.partition_col
         for d in glob.glob(os.path.join(self.path, ".staging-*")):
@@ -127,12 +145,14 @@ class LineageWriter:
         if os.path.exists(self.manifest_path):
             with open(self.manifest_path, "rb+") as mf:  # drop a torn tail
                 mf.truncate(mf.read().rfind(b"\n") + 1)
-        done = self.completed_partitions()
+        committed = read_manifest(self.path)
+        named = {m["dir"] for m in committed}
+        for d in glob.glob(os.path.join(self.data_dir, "*")):
+            if os.path.basename(d) not in named:  # swapped in by a killed run
+                shutil.rmtree(d)
+        done = {m["partition"] for m in committed}
 
-        # clustered by the key: each batch task holds whole partitions, so a
-        # batch write opens one writer (one file) per partition, and the stats
-        # aggregate below reads the cache with no Exchange of its own
-        df = df.hint("rebalance", pc).persist()
+        df = df.persist()
         try:
             key = F.col(pc).cast("string")
             rng = F.col("cell" if "cell" in df.columns else pc)
@@ -154,6 +174,8 @@ class LineageWriter:
                 raise ValueError(f"partition column {pc!r} is null in {nulls} rows")
             pending = sorted((s.asDict() for s in stats if s["partition"] not in done),
                              key=lambda s: s["partition"])
+            pending_rows = sum(s["row_count"] for s in pending)
+            cache_parts = df.rdd.getNumPartitions()  # the cache is built: no job
             step = batch_size or max(len(pending), 1)
             batches = [pending[i : i + step] for i in range(0, len(pending), step)]
             written: list[dict] = []
@@ -161,19 +183,15 @@ class LineageWriter:
                 if fail_after_batches is not None and bi >= fail_after_batches:
                     raise RuntimeError(f"injected failure before batch {bi}")
                 t0 = time.monotonic()
-                staging = os.path.join(self.path, f".staging-{run_id}-{bi}")
-                bdf = df.filter(key.isin([s["partition"] for s in batch]))
-                bdf.write.mode("overwrite").partitionBy(pc).parquet(staging)
-                elapsed = time.monotonic() - t0
+                name = f"b{len(named) + bi:06d}"  # the batch's line number
+                staging = os.path.join(self.path, f".staging-{name}")
                 total_rows = sum(s["row_count"] for s in batch)
+                files = -(-cache_parts * total_rows // pending_rows)
+                bdf = df.filter(key.isin([s["partition"] for s in batch])).coalesce(files)
+                bdf.write.mode("overwrite").parquet(staging)
+                elapsed = time.monotonic() - t0
                 os.makedirs(self.data_dir, exist_ok=True)
-                for s in batch:
-                    src = os.path.join(staging, f"{pc}={s['partition']}")
-                    dst = os.path.join(self.data_dir, f"{pc}={s['partition']}")
-                    if os.path.exists(dst):
-                        shutil.rmtree(dst)  # orphan from a crash between swap+commit
-                    os.rename(src, dst)
-                shutil.rmtree(staging, ignore_errors=True)
+                os.rename(staging, os.path.join(self.data_dir, name))
                 rate = round(total_rows / elapsed, 2) if elapsed > 0 else None
                 rows = [
                     {"run_id": run_id, **s,
@@ -182,13 +200,15 @@ class LineageWriter:
                     for s in batch
                 ]
                 with open(self.manifest_path, "a") as mf:
-                    mf.write("".join(json.dumps(r) + "\n" for r in rows))
+                    mf.write(json.dumps({"dir": name, "partitions": rows}) + "\n")
                     mf.flush()
                     os.fsync(mf.fileno())
-                written.extend(rows)
+                written.extend({**r, "dir": name} for r in rows)
             return written
         finally:
             df.unpersist()
 
     def read(self, spark) -> DataFrame:
-        return spark.read.option("basePath", self.data_dir).parquet(self.data_dir)
+        """The committed rows: only the batch directories the manifest names."""
+        dirs = dict.fromkeys(m["dir"] for m in read_manifest(self.path))
+        return spark.read.parquet(*(os.path.join(self.data_dir, d) for d in dirs))

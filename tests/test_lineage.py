@@ -3,8 +3,8 @@
 
 from __future__ import annotations
 
-import glob
 import os
+import shutil
 import uuid
 
 import pytest
@@ -58,15 +58,14 @@ def test_kill_resume_without_recompute(spark, tmp_path, encoded):
     first = read_manifest(path)
     committed_first = {m["partition"] for m in first}
     assert 0 < len(committed_first) < encoded.select("cell_p5").distinct().count()
-    # record mtimes of committed partition dirs — resume must not rewrite them
+    # record mtimes of committed batch dirs — resume must not rewrite them
     mtimes = {
-        p: os.path.getmtime(os.path.join(w.data_dir, f"cell_p5={p}"))
-        for p in committed_first
+        d: os.path.getmtime(os.path.join(w.data_dir, d)) for d in {m["dir"] for m in first}
     }
     rows2 = w.write(encoded, run_id="r2", batch_size=3)
     assert {m["partition"] for m in rows2}.isdisjoint(committed_first)
-    for p, t in mtimes.items():
-        assert os.path.getmtime(os.path.join(w.data_dir, f"cell_p5={p}")) == t
+    for d, t in mtimes.items():
+        assert os.path.getmtime(os.path.join(w.data_dir, d)) == t
     # complete + identical to a clean one-shot write
     clean = LineageWriter(str(tmp_path / "t3"))
     clean.write(encoded, run_id="clean")
@@ -130,9 +129,10 @@ def test_torn_manifest_tail_is_recommitted(spark, tmp_path, small):
     # a kill mid-append: the last line is cut short, with no newline
     with open(w.manifest_path, "rb+") as f:
         f.truncate(len(f.read()) - 10)
-    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(9)]
+    # the torn line is the last batch's: its partitions are not committed
+    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(8)]
     rows = w.write(small, run_id="r2", batch_size=4)
-    assert [(m["partition"], m["run_id"]) for m in rows] == [("9", "r2")]
+    assert [(m["partition"], m["run_id"]) for m in rows] == [("8", "r2"), ("9", "r2")]
     assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(10)]
     assert w.read(spark).count() == 400
     # a malformed line that does end in a newline is corruption, not a torn tail
@@ -161,29 +161,44 @@ def spread(spark):
         "id", (F.col("id") % 37).cast("int").alias("cell_p5"), (F.col("id") * 7919).alias("cell"))
 
 
-def test_clustered_write_leaves_one_file_per_partition(spark, tmp_path, spread):
+def test_one_directory_per_batch(spark, tmp_path, spread):
+    """37 partitions in batches of 10 are 4 batch directories; each holds
+    n_b = ceil(P * batch rows / pending rows) files, P = 8 cache partitions."""
     w = LineageWriter(str(tmp_path / "files"))
     w.write(spread, run_id="r1", batch_size=10)
-    dirs = sorted(os.listdir(w.data_dir))
-    assert len(dirs) == 37
-    for d in dirs:
+    batch_rows: dict[str, int] = {}
+    for m in read_manifest(w.path):
+        batch_rows[m["dir"]] = batch_rows.get(m["dir"], 0) + m["row_count"]
+    assert len(batch_rows) == 4
+    assert sorted(os.listdir(w.data_dir)) == sorted(batch_rows)
+    for d, rows in batch_rows.items():
         files = [f for f in os.listdir(os.path.join(w.data_dir, d)) if f.startswith("part-")]
-        assert len(files) == 1, (d, files)
+        assert len(files) == -(-8 * rows // 2000), (d, rows, files)
     assert w.read(spark).count() == 2000
 
 
-def test_clustered_manifest_equals_unclustered(spark, tmp_path, spread, monkeypatch):
-    """Clustering moves rows between tasks, not between partitions: the
-    manifest's stats equal those of a write with the rebalance hint off."""
-    def stats(path):
-        return [(m["partition"], m["row_count"], m["checksum"], m["cell_range"])
-                for m in read_manifest(path)]
-
-    LineageWriter(str(tmp_path / "clustered")).write(spread, run_id="r1", batch_size=10)
-    monkeypatch.setattr(type(spread), "hint", lambda self, name, *params: self)
-    LineageWriter(str(tmp_path / "plain")).write(spread, run_id="r1", batch_size=10)
-    assert stats(str(tmp_path / "clustered")) == stats(str(tmp_path / "plain"))
-    assert len(stats(str(tmp_path / "plain"))) == 37
-    # the unclustered write is the one that scatters each partition
-    plain = glob.glob(str(tmp_path / "plain" / "data" / "*" / "part-*"))
-    assert len(plain) > 37
+@pytest.mark.parametrize("fault", ["orphan_dir", "torn_tail"])
+def test_uncommitted_batch_dir_is_not_read_and_is_removed(spark, tmp_path, small, fault):
+    """A batch directory that no committed manifest line names holds no
+    committed rows: read() skips it and the next write() deletes it, so a
+    rewritten batch never stores its rows twice."""
+    w = LineageWriter(str(tmp_path / fault))
+    w.write(small, run_id="r1", batch_size=4)
+    if fault == "orphan_dir":
+        # killed between swap and commit: a batch dir with no manifest line
+        src = os.path.join(w.data_dir, read_manifest(w.path)[0]["dir"])
+        shutil.copytree(src, os.path.join(w.data_dir, "killed-0-0123abcd"))
+    else:
+        # killed mid-append: the last batch's line is torn, its dir is swapped in
+        with open(w.manifest_path, "rb+") as f:
+            f.truncate(len(f.read()) - 10)
+    manifest = read_manifest(w.path)
+    orphans = set(os.listdir(w.data_dir)) - {m["dir"] for m in manifest}
+    assert len(orphans) == 1
+    assert w.read(spark).count() == sum(m["row_count"] for m in manifest)
+    w.write(small, run_id="r2", batch_size=4)
+    manifest = read_manifest(w.path)
+    assert sorted(os.listdir(w.data_dir)) == sorted({m["dir"] for m in manifest})
+    if fault == "orphan_dir":  # a torn batch's rewrite takes its line number, so its name
+        assert orphans.isdisjoint(os.listdir(w.data_dir))
+    assert w.read(spark).count() == sum(m["row_count"] for m in manifest) == 400

@@ -204,27 +204,6 @@ def test_harvest_plans_have_one_python_node(spark, tmp_path, monkeypatch):
             assert parse not in plan, plan
 
 
-def test_lineage_stats_read_the_clustered_cache_without_exchange(spark, tmp_path):
-    """LineageWriter clusters its input by the partition key before
-    persisting it, so the stats aggregation reads the cache with no
-    Exchange of its own (AQE drops the initial plan's once the cache
-    reports its partitioning) and each batch write gets whole partitions."""
-    from pyspark.sql import functions as F
-
-    from stac_to_geocore_spark.tables.lineage import LineageWriter
-
-    df = spark.range(0, 2000, 1, 8).select("id", (F.col("id") % 37).cast("int").alias("cell_p5"))
-    plans = _sql_plans_of(spark, lambda: LineageWriter(str(tmp_path / "t")).write(
-        df, run_id="r1", batch_size=10))
-    stats = [p for p in plans if "HashAggregate" in p and "InMemoryTableScan" in p]
-    assert len(stats) == 1, plans
-    final = stats[0].split("== Initial Plan ==")[0]
-    above_cache = final.split("InMemoryTableScan")[0]
-    assert "HashAggregate" in above_cache and "Exchange" not in above_cache, final
-    # the one Exchange is the cached plan's clustering
-    assert "REBALANCE_PARTITIONS_BY_COL" in stats[0], stats[0]
-
-
 _DEDUP_QUERY_UDFS = {
     "minhash": ("minhash_near_dup", {"_sig": 1}),
     "ngram": ("ngram_jaccard", {"_sig": 1, "_gram_hashes": 1}),

@@ -1,9 +1,9 @@
-"""The 100TB storage story, evidenced: cell/IVF bucket keys are partition
-columns, so cell-targeted reads prune files at plan time instead of
-scanning. These tests assert PartitionFilters actually appear in the
-physical plan and that the pruned read touches fewer files."""
-
-import os
+"""The 100TB storage story, evidenced: cell-targeted reads skip the data of
+other cells instead of scanning it. IVF bucket keys are partition columns,
+so a probe's filter prunes files at plan time. The lineage table has no
+partition columns: it holds one directory per sorted-key commit batch, and
+a cell filter pushed to Parquet skips the files of every batch whose key
+range misses the cell. The unit skipped is the batch."""
 
 from pyspark.sql import functions as F
 
@@ -16,24 +16,46 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _scanned_rows(df) -> tuple[int, int]:
+    """(rows df returns, rows its Parquet scan read)."""
+    qe = df._jdf.queryExecution()
+    n = len(df.collect())
+    return n, qe.executedPlan().collectLeaves().head().metrics().apply("numOutputRows").value()
+
+
+def _rows_in_files_holding(table, cell: int) -> int:
+    """Rows of the files whose cell_p5 [min, max] holds `cell`: all that a
+    scan skipping by Parquet min/max reads (each file here is one row group)."""
+    per_file = table.groupBy(F.input_file_name()).agg(
+        F.min("cell_p5").alias("lo"), F.max("cell_p5").alias("hi"), F.count(F.lit(1)).alias("n")
+    ).collect()
+    return sum(r["n"] for r in per_file if r["lo"] <= cell <= r["hi"])
+
+
 def test_lineage_table_prunes_by_cell_partition(spark, tmp_path):
+    images, polys = images_df(spark, 3000, bytes_mode="none"), polygons_df(spark, 16)
     path = str(tmp_path / "assign")
-    manifest = materialize_assignments(
-        images_df(spark, 3000, bytes_mode="none"), polygons_df(spark, 16), path
-    )
+    manifest = materialize_assignments(images, polys, path)
     assert len(manifest) > 3  # several cell_p5 partitions committed
 
-    writer = LineageWriter(path)
-    table = writer.read(spark)
-    one_cell = manifest[0]["partition"]
-    pruned = table.filter(F.col("cell_p5") == int(one_cell))
+    table = LineageWriter(path).read(spark)
+    cell, rows = int(manifest[0]["partition"]), manifest[0]["row_count"]
+    pruned = table.filter(F.col("cell_p5") == cell)
+    assert "cell_p5" in _plan(pruned).split("PushedFilters", 1)[1][:200]
+    # one batch (the default): its files each span most cells, so the scan
+    # skips only the files whose key range misses this one
+    assert _scanned_rows(pruned) == (rows, _rows_in_files_holding(table, cell))
 
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "cell_p5" in plan.split("PartitionFilters", 1)[1][:200]
-    # the pruned scan must touch strictly fewer partition dirs than exist
-    n_dirs = len([d for d in os.listdir(writer.data_dir) if d.startswith("cell_p5=")])
-    assert n_dirs > 1
-    assert pruned.count() == manifest[0]["row_count"]
+    # in batches, the scan reads only the batch whose key range holds the
+    # cell: the files of every other batch are skipped by their min/max
+    path = str(tmp_path / "batched")
+    manifest = materialize_assignments(images, polys, path, batch_size=32)
+    table = LineageWriter(path).read(spark)
+    first = manifest[0]
+    pruned = table.filter(F.col("cell_p5") == int(first["partition"]))
+    batch_rows = sum(m["row_count"] for m in manifest if m["dir"] == first["dir"])
+    assert _scanned_rows(pruned) == (first["row_count"], batch_rows)
+    assert batch_rows < table.count()
 
 
 def test_ivf_bucketed_embeddings_prune(spark, tmp_path):
