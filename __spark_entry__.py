@@ -506,40 +506,12 @@ def _q_stopword_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_to_geocore_spark.partitioning import fan_out
-
-    def norm(col: str):
-        return F.sqrt(F.aggregate(
-            F.transform(col, lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x))
+    from stac_to_geocore_spark.ann import brute_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
-        # query norm computed ONCE per query row, below the join
-        norm("embedding").alias("na"),
-    )
-    # vector norms below the join too (identical expression, so identical
-    # doubles): the old plan re-evaluated the interpreted higher-order
-    # norm aggregates once per (query, vector) PAIR — 3x the array work —
-    # and the single-row-group embeddings scan ran it all on one core
-    # (fan_out raises the scan to cluster parallelism; no-op at scale)
-    emb = fan_out(emb).withColumn("nb", norm("embedding"))
-    dot = F.aggregate(
-        F.zip_with("q_emb", "embedding", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = F.round(dot / (F.col("na") * F.col("nb")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    return brute_topk(emb, q, k=10)
 
 
 def _q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:

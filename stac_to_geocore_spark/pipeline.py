@@ -138,12 +138,12 @@ def materialize_assignments(
     Returns the manifest rows written this invocation.
 
     Each call first fingerprints its inputs (_input_fingerprint: one pass of
-    JVM aggregates, no Python). When the path's completion record names the
-    same fingerprint and every partition it lists is still committed, the
-    run already finished: return [] without planning the flagship. Any
-    other case (no record, other inputs or kwargs, a killed run, which
-    leaves no record) takes the full path, which records the fingerprint
-    once its write returns."""
+    JVM aggregates, no Python). When the table's latest snapshot is a
+    completion record naming the same fingerprint, the run already
+    finished: return [] without planning the flagship. Any other case (no
+    record, other inputs or kwargs, a killed run, which leaves no record, a
+    batch committed after the record) takes the full path, which records
+    the fingerprint once its write returns."""
     from stac_to_geocore_spark.tables.lineage import LineageWriter
 
     writer = LineageWriter(path, partition_col="cell_p5")

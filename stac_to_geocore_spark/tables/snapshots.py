@@ -1,22 +1,23 @@
 """Iceberg-style snapshot table: versioned commits + time travel.
 
-Extends the lineage layer (tables/lineage.py) the way Iceberg extends a Hive
-table: data files are IMMUTABLE once written; each commit creates a new
-numbered snapshot whose metadata lists the data directories visible at that
+Data files are IMMUTABLE once written; each commit creates a new numbered
+snapshot whose metadata lists the data directories visible at that
 version. Readers pin a version (time travel) or take the latest; writers
-never mutate what a concurrent reader sees.
+never mutate what a concurrent reader sees. The lineage layer
+(tables/lineage.py) commits each of its batches here as one snapshot.
 
 Layout:
-  <path>/data/s<N>/part-*.parquet   immutable data written by commit N
-  <path>/_snapshots/v<N>.json       {"version", "op", "dirs", "ts"}
+  <path>/data/s<N>-<pid>/part-*.parquet   immutable data written for commit N
+  <path>/_snapshots/v<N>.json             {"version", "op", "dirs", "ts", <caller keys>}
 
-Commit protocol: write data -> write v<N>.json.tmp -> os.link exclusive-create
-(atomic compare-and-swap: a concurrent committer of the same version loses
-and retries). A crash before the publish leaves an orphan data dir that no snapshot
-references — invisible to every reader, reclaimed by `vacuum()`. On a real
-cluster the same metadata flow rides an Iceberg catalog
-(iceberg-spark-runtime); this is the sandbox-local implementation of the
-identical protocol.
+"dirs" holds names relative to data/, so the table can be moved or opened
+through another path. Commit protocol: write data -> write v<N>.json.tmp ->
+os.link exclusive-create (atomic compare-and-swap: a concurrent committer of
+the same version loses and retries). A crash before the publish leaves an
+orphan data dir that no snapshot references — invisible to every reader,
+reclaimed by `vacuum()`. On a real cluster the same metadata flow rides an
+Iceberg catalog (iceberg-spark-runtime); this is the sandbox-local
+implementation of the identical protocol.
 
 The reference anchor is the lastRun.txt delete-then-rewrite cycle
 (s3_operations.py:31-43): its non-atomic replace window is exactly what a
@@ -66,8 +67,9 @@ class SnapshotTable:
         return sorted(out, key=lambda s: s["version"])
 
     def latest_version(self) -> int:
-        h = self.history()
-        return h[-1]["version"] if h else 0
+        """The highest published v<N>.json, from the file names alone."""
+        names = (re.fullmatch(r"v(\d+)\.json", fn) for fn in os.listdir(self.meta_dir))
+        return max((int(m.group(1)) for m in names if m), default=0)
 
     def _snapshot(self, version: int) -> dict:
         p = os.path.join(self.meta_dir, f"v{version}.json")
@@ -76,7 +78,7 @@ class SnapshotTable:
         with open(p) as f:
             return json.load(f)
 
-    def _commit(self, op: str, dirs_fn) -> int:
+    def commit(self, op: str, dirs_fn, **extra) -> int:
         """Compare-and-swap publish (Iceberg commit semantics): the metadata
         file is linked into place with an EXCLUSIVE create, so two writers
         that both read the same latest_version() cannot both publish v<N> —
@@ -87,14 +89,15 @@ class SnapshotTable:
         returns the dir list to publish. It is re-evaluated on every retry:
         an append that loses the race must recompute prev against the
         winner's commit, or the winner's data dirs would silently vanish
-        from the new latest (the lost-update this CAS exists to prevent)."""
+        from the new latest (the lost-update this CAS exists to prevent).
+        `extra` keys are stored in the snapshot next to the protocol's own."""
         for _attempt in range(100):
             latest = self.latest_version()
             prev_dirs = self._snapshot(latest)["dirs"] if latest else []
             version = latest + 1
             meta = {
                 "version": version, "op": op, "dirs": dirs_fn(prev_dirs),
-                "ts": round(time.time(), 3),
+                "ts": round(time.time(), 3), **extra,
             }
             tmp = os.path.join(self.meta_dir, f"v{version}.json.tmp.{os.getpid()}")
             with open(tmp, "w") as f:
@@ -143,25 +146,27 @@ class SnapshotTable:
                 m = re.fullmatch(r"s(\d+)(?:-\d+)?", fn)
                 if m:
                     used.add(int(m.group(1)))
-        return os.path.join(self.data_dir, f"s{max(used) + 1}-{os.getpid()}")
+        return f"s{max(used) + 1}-{os.getpid()}"
 
-    def _write_data(self, df: DataFrame) -> str:
+    def write_data(self, df: DataFrame) -> str:
+        """Write df to a new data dir that no snapshot names yet and return
+        its name under data/; `commit` makes it visible."""
         d = self._next_data_dir()
-        df.write.mode("errorifexists").parquet(d)
+        df.write.mode("errorifexists").parquet(os.path.join(self.data_dir, d))
         return d
 
     def append(self, df: DataFrame) -> int:
         """New snapshot = previous dirs + the new files (Iceberg append).
-        prev is resolved INSIDE the CAS loop (see _commit) so a retry after
+        prev is resolved INSIDE the CAS loop (see commit) so a retry after
         losing a commit race includes the winner's dirs."""
-        d = self._write_data(df)
-        return self._commit("append", lambda prev: prev + [d])
+        d = self.write_data(df)
+        return self.commit("append", lambda prev: prev + [d])
 
     def overwrite(self, df: DataFrame) -> int:
         """New snapshot sees only the new files; older versions still read
         the old data (this is what delete-then-write can never give)."""
-        d = self._write_data(df)
-        return self._commit("overwrite", lambda prev: [d])
+        d = self.write_data(df)
+        return self.commit("overwrite", lambda prev: [d])
 
     # ----- reads -----
 
@@ -172,25 +177,25 @@ class SnapshotTable:
         dirs = self._snapshot(v)["dirs"]
         if not dirs:
             raise ValueError("empty table")
-        return spark.read.parquet(*dirs)
+        return spark.read.parquet(*(os.path.join(self.data_dir, d) for d in dirs))
 
     def vacuum(self) -> list[str]:
         """Drop data dirs no live snapshot references (crash orphans or
         post-retention cleanup) and stale commit tmp files (a writer that
-        died between open() and unlink() in _commit leaves v<N>.json.tmp.<pid>
+        died between open() and unlink() in commit leaves v<N>.json.tmp.<pid>
         behind forever — nothing else reclaims meta_dir). Returns removed
         paths.
 
         The pid-liveness probe is HOST-local: on shared storage a vacuum
         running on another host can sweep a live remote writer's in-flight
-        tmp. That race is benign — _commit treats a vanished tmp as a
+        tmp. That race is benign — commit treats a vanished tmp as a
         retryable event and rewrites it — but multi-host deployments should
         still prefer vacuuming from the writer host."""
         import shutil
 
         live: set[str] = set()
         for s in self.history():
-            live.update(s["dirs"])
+            live.update(os.path.join(self.data_dir, d) for d in s["dirs"])
         removed = []
         if os.path.isdir(self.data_dir):
             for fn in sorted(os.listdir(self.data_dir)):

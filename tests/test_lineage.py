@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from stac_to_geocore_spark.fixtures import images_df
 from stac_to_geocore_spark.pipeline import encode_stage
 from stac_to_geocore_spark.tables.lineage import LineageWriter, read_manifest
+from stac_to_geocore_spark.tables.snapshots import SnapshotTable
 
 
 @pytest.fixture()
@@ -55,6 +56,7 @@ def test_kill_resume_without_recompute(spark, tmp_path, encoded):
     w = LineageWriter(path)
     with pytest.raises(RuntimeError, match="injected failure"):
         w.write(encoded, run_id="r1", batch_size=3, fail_after_batches=2)
+    assert [s["op"] for s in w.table.history()] == ["append", "append"]
     first = read_manifest(path)
     committed_first = {m["partition"] for m in first}
     assert 0 < len(committed_first) < encoded.select("cell_p5").distinct().count()
@@ -123,34 +125,47 @@ def test_null_partition_key_raises_before_any_write(spark, tmp_path):
     assert not os.path.exists(w.data_dir)
 
 
-def test_torn_manifest_tail_is_recommitted(spark, tmp_path, small):
-    w = LineageWriter(str(tmp_path / "torn"))
+def test_each_batch_is_a_snapshot_version(spark, tmp_path, small):
+    """Batch k commits snapshot version k, which reads exactly the rows of
+    batches 1..k. A commit file that is not JSON is an error, never a
+    shorter manifest."""
+    w = LineageWriter(str(tmp_path / "versions"))
     w.write(small, run_id="r1", batch_size=4)
-    # a kill mid-append: the last line is cut short, with no newline
-    with open(w.manifest_path, "rb+") as f:
-        f.truncate(len(f.read()) - 10)
-    # the torn line is the last batch's: its partitions are not committed
-    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(8)]
-    rows = w.write(small, run_id="r2", batch_size=4)
-    assert [(m["partition"], m["run_id"]) for m in rows] == [("8", "r2"), ("9", "r2")]
-    assert [m["partition"] for m in read_manifest(w.path)] == [str(i) for i in range(10)]
-    assert w.read(spark).count() == 400
-    # a malformed line that does end in a newline is corruption, not a torn tail
-    with open(w.manifest_path, "a") as f:
+    manifest = read_manifest(w.path)
+    dirs = list(dict.fromkeys(m["dir"] for m in manifest))
+    assert len(dirs) == 3
+    for v in (1, 2, 3):
+        got = SnapshotTable(w.path).read(spark, version=v).groupBy("cell_p5").count().collect()
+        assert {str(r["cell_p5"]): r["count"] for r in got} == {
+            m["partition"]: m["row_count"] for m in manifest if m["dir"] in dirs[:v]}
+    with open(os.path.join(w.table.meta_dir, "v4.json"), "w") as f:
         f.write("{not json\n")
     with pytest.raises(ValueError):
         read_manifest(w.path)
 
 
-def test_stale_staging_dirs_are_removed(spark, tmp_path, small):
+def test_stale_staging_dirs_are_removed(spark, tmp_path, small, monkeypatch):
+    """A write killed between its data-dir write and its commit leaves a
+    staged dir no snapshot names; a writer killed mid-commit leaves a
+    v<N>.json.tmp.<pid>. The next write() removes both."""
     path = tmp_path / "stale"
-    stale = path / ".staging-killed-0" / "cell_p5=3"
-    stale.mkdir(parents=True)
-    (stale / "part-00000.parquet").write_bytes(b"left by a killed run")
     w = LineageWriter(str(path))
-    w.write(small, run_id="r1")
-    assert not (path / ".staging-killed-0").exists()
-    assert sorted(os.listdir(path)) == ["_lineage", "data"]
+
+    def killed(*a, **k):
+        raise RuntimeError("killed before the commit")
+
+    monkeypatch.setattr(w.table, "commit", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        w.write(small, run_id="r1")
+    monkeypatch.undo()
+    assert len(os.listdir(w.data_dir)) == 1 and read_manifest(w.path) == []
+    # no process has this pid (pid_max is < 2^22 on linux)
+    with open(os.path.join(w.table.meta_dir, "v1.json.tmp.4999999"), "w") as f:
+        f.write("{")
+    w.write(small, run_id="r2")
+    assert sorted(os.listdir(path)) == ["_snapshots", "data"]
+    assert os.listdir(w.table.meta_dir) == ["v1.json"]
+    assert os.listdir(w.data_dir) == [read_manifest(w.path)[0]["dir"]]
     assert w.read(spark).count() == 400
 
 
@@ -177,21 +192,16 @@ def test_one_directory_per_batch(spark, tmp_path, spread):
     assert w.read(spark).count() == 2000
 
 
-@pytest.mark.parametrize("fault", ["orphan_dir", "torn_tail"])
+@pytest.mark.parametrize("fault", ["orphan_dir"])
 def test_uncommitted_batch_dir_is_not_read_and_is_removed(spark, tmp_path, small, fault):
-    """A batch directory that no committed manifest line names holds no
+    """A batch directory that no committed snapshot names holds no
     committed rows: read() skips it and the next write() deletes it, so a
     rewritten batch never stores its rows twice."""
     w = LineageWriter(str(tmp_path / fault))
     w.write(small, run_id="r1", batch_size=4)
-    if fault == "orphan_dir":
-        # killed between swap and commit: a batch dir with no manifest line
-        src = os.path.join(w.data_dir, read_manifest(w.path)[0]["dir"])
-        shutil.copytree(src, os.path.join(w.data_dir, "killed-0-0123abcd"))
-    else:
-        # killed mid-append: the last batch's line is torn, its dir is swapped in
-        with open(w.manifest_path, "rb+") as f:
-            f.truncate(len(f.read()) - 10)
+    # killed between data write and commit: a batch dir no snapshot names
+    src = os.path.join(w.data_dir, read_manifest(w.path)[0]["dir"])
+    shutil.copytree(src, os.path.join(w.data_dir, "killed-0-0123abcd"))
     manifest = read_manifest(w.path)
     orphans = set(os.listdir(w.data_dir)) - {m["dir"] for m in manifest}
     assert len(orphans) == 1
@@ -199,6 +209,5 @@ def test_uncommitted_batch_dir_is_not_read_and_is_removed(spark, tmp_path, small
     w.write(small, run_id="r2", batch_size=4)
     manifest = read_manifest(w.path)
     assert sorted(os.listdir(w.data_dir)) == sorted({m["dir"] for m in manifest})
-    if fault == "orphan_dir":  # a torn batch's rewrite takes its line number, so its name
-        assert orphans.isdisjoint(os.listdir(w.data_dir))
+    assert orphans.isdisjoint(os.listdir(w.data_dir))
     assert w.read(spark).count() == sum(m["row_count"] for m in manifest) == 400

@@ -5,7 +5,6 @@ the same inputs after a completed run returns without the flagship."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -109,30 +108,43 @@ def test_killed_run_leaves_no_record_and_resumes(spark, tmp_path, small_inputs, 
         materialize_assignments(imgs, polys, path, run_id="r1", batch_size=2)
     monkeypatch.undo()
     w = LineageWriter(path)
-    assert not os.path.exists(w.record_path)
+    assert "complete" not in [s["op"] for s in w.table.history()]
     committed = w.completed_partitions()
     assert len(committed) == 2
     rows = materialize_assignments(imgs, polys, path, run_id="r2", batch_size=2)
     assert {m["partition"] for m in rows}.isdisjoint(committed)
     assert {m["partition"] for m in rows} | committed == _partitions(imgs, polys)
-    assert os.path.exists(w.record_path)
+    assert w.table.history()[-1]["op"] == "complete"
 
 
-def test_record_naming_an_uncommitted_key_falls_through(spark, tmp_path, small_inputs, monkeypatch):
+def test_complete_that_is_not_latest_falls_through(spark, tmp_path, small_inputs, monkeypatch):
+    """A completion record counts only while it is the latest snapshot: a
+    commit after it sends the next call down the full path, which records
+    complete again."""
     imgs, pdf = small_inputs
     polys = boxes_df(spark, pdf.head(8))
     path = str(tmp_path / "t")
     materialize_assignments(imgs, polys, path, run_id="r1")
     w = LineageWriter(path)
-    with open(w.record_path) as f:
-        rec = json.load(f)
-    rec["partitions"].append("999999")
-    with open(w.record_path, "w") as f:
-        json.dump(rec, f)
+    record = w.table.history()[-1]
+    assert record["op"] == "complete"
+    w.table.commit("append", lambda prev: prev)  # a commit after the record
     calls = []
     encode = pipeline.encode_stage
     monkeypatch.setattr(pipeline, "encode_stage", lambda *a, **k: calls.append(1) or encode(*a, **k))
     assert materialize_assignments(imgs, polys, path, run_id="r2") == []
     assert calls == [1]
-    with open(w.record_path) as f:
-        assert "999999" not in json.load(f)["partitions"]
+    last = w.table.history()[-1]
+    assert last["op"] == "complete" and last["fingerprint"] == record["fingerprint"]
+
+
+def test_moved_table_reads_and_resumes(spark, tmp_path, small_inputs):
+    """Snapshots name data dirs relative to the table: a renamed root still
+    reads every row and still resumes from its completion record."""
+    imgs, pdf = small_inputs
+    polys = boxes_df(spark, pdf.head(8))
+    path, moved = str(tmp_path / "t"), str(tmp_path / "moved")
+    rows = materialize_assignments(imgs, polys, path, run_id="r1", batch_size=2)
+    os.rename(path, moved)
+    assert LineageWriter(moved).read(spark).count() == sum(m["row_count"] for m in rows)
+    assert materialize_assignments(imgs, polys, moved, run_id="r2") == []

@@ -230,7 +230,7 @@ def test_snapshot_commit_is_compare_and_swap(spark, tmp_path):
     assert v1 == 1
     # a concurrent writer publishes v2 while OUR writer still holds the
     # stale latest=1 read: simulate by making the first latest_version()
-    # call return the stale value, so _commit attempts v2, collides with
+    # call return the stale value, so commit attempts v2, collides with
     # the foreign file, and must retry (not clobber)
     foreign = {"version": 2, "op": "append", "dirs": ["/elsewhere"], "ts": 0.0}
     with open(os.path.join(t.meta_dir, "v2.json"), "w") as f:
@@ -247,7 +247,7 @@ def test_snapshot_commit_is_compare_and_swap(spark, tmp_path):
     t.latest_version = stale_then_real
     # first attempt targets v2 -> conflict -> retry recomputes prev from the
     # WINNER's v2, so the retried append must include the foreign dirs
-    v3 = t._commit("append", lambda prev: prev + ["/mine"])
+    v3 = t.commit("append", lambda prev: prev + ["/mine"])
     assert v3 == 3
     with open(os.path.join(t.meta_dir, "v2.json")) as f:
         assert json.load(f) == foreign  # the foreign commit survived intact

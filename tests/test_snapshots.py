@@ -62,6 +62,15 @@ def test_tmp_metadata_never_visible(spark, tmp_path):
     assert t.read(spark).count() == 10
 
 
+def test_latest_version_reads_names_not_files(tmp_path):
+    """latest_version() takes the highest v<N>.json name without parsing
+    any snapshot, so a commit costs no read of the history."""
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    with open(os.path.join(t.meta_dir, "v3.json"), "w") as f:
+        f.write("{not json")
+    assert t.latest_version() == 3
+
+
 def _sweeping_unlink(monkeypatch):
     """Patch os.unlink so commit-tmp cleanup hits the cross-host vacuum race:
     the file is gone by the time our unlink runs (another host swept it), so
