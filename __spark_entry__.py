@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stac_to_geocore_spark.session import local_df
+
 SF_SMOKE = "/root/testdata/sf0.001"
 
 # ---------------------------------------------------------------- helpers
@@ -431,7 +433,6 @@ def _q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pip_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General-polygon PIP: cell-cover filter + exact vectorized ray-cast
     refine on non-convex star rings (spatial/pip.pip_ring_join)."""
-    from stac_to_geocore_spark.session import local_df
     from stac_to_geocore_spark.spatial.pip import pip_ring_join
 
     rings = local_df(
@@ -1134,9 +1135,7 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation."""
     brute_rows = _q_ann_topk(spark, sf_dir).select("query_id", "vec_id").collect()
     brute = F.broadcast(
-        spark.createDataFrame(
-            [(r.query_id, r.vec_id) for r in brute_rows], "query_id bigint, vec_id bigint"
-        )
+        local_df(spark, [(r.query_id, r.vec_id) for r in brute_rows], "query_id bigint, vec_id bigint")
     )
     spine = sorted({r.query_id for r in brute_rows})
     methods = {"lsh": _q_ann_lsh, "ivf": _q_ann_ivf}
@@ -1149,7 +1148,7 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("_n"))
         )
         outs.append(
-            spark.createDataFrame([(q,) for q in spine], "query_id bigint")
+            local_df(spark, [(q,) for q in spine], "query_id bigint")
             .join(counts, "query_id", "left")
             .select(
                 F.lit(m).alias("method"),
@@ -1213,7 +1212,7 @@ def _q_csv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = back.collect()  # tiny dim; materialize before the dir vanishes
-        return spark.createDataFrame(rows, back.schema)
+        return local_df(spark, rows, back.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -1240,7 +1239,7 @@ def _q_harvest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         for key in store.list():
             text = store.get(key)
             rows.append((key, len(text), hashlib.md5(text.encode("utf-8")).hexdigest()))
-        return spark.createDataFrame(rows, "key string, n_bytes long, md5 string")
+        return local_df(spark, rows, "key string, n_bytes long, md5 string")
     finally:
         shutil.rmtree(store_root, ignore_errors=True)
 
@@ -1267,7 +1266,7 @@ def _q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_rows"), F.sum("doc_id").alias("sum_id")
             ).collect()[0]
             rows.append((v, agg["n_rows"], agg["sum_id"]))
-        return spark.createDataFrame(rows, "version int, n_rows long, sum_id long")
+        return local_df(spark, rows, "version int, n_rows long, sum_id long")
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1312,7 +1311,7 @@ def _q_geocore_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_to_geocore_spark.fixtures import stac_collections_fixture
 
     docs = translate_collections(stac_collections_fixture())
-    return spark.createDataFrame(docs, "key string, json string").select(
+    return local_df(spark, docs, "key string, json string").select(
         "key", F.length("json").alias("json_len"), F.md5("json").alias("json_md5")
     )
 
@@ -1324,7 +1323,7 @@ def _q_geocore_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_to_geocore_spark.fixtures import stac_collections_fixture, stac_root_fixture
 
     key, doc = translate_root(stac_root_fixture(), stac_collections_fixture())
-    return spark.createDataFrame([(key, doc)], "key string, json string").select(
+    return local_df(spark, [(key, doc)], "key string, json string").select(
         "key", F.length("json").alias("json_len"), F.md5("json").alias("json_md5")
     )
 
@@ -1410,8 +1409,8 @@ def _q_s2_known_answer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last SURVEY §2.10 operator without its own gate entry."""
     from stac_to_geocore_spark.cells.s2 import s2_encode
 
-    grid = spark.createDataFrame(
-        [(la, lo) for la, lo, lvl, _ in _S2_KNOWN if lvl == 8], "lat double, lon double"
+    grid = local_df(
+        spark, [(la, lo) for la, lo, lvl, _ in _S2_KNOWN if lvl == 8], "lat double, lon double"
     )
     parts = [
         grid.select(
@@ -1451,9 +1450,7 @@ def _q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             (m["partition"], m["row_count"], m["checksum"], m["run_id"])
             for m in read_manifest(tmp)
         ]
-        return spark.createDataFrame(
-            rows, "partition string, row_count long, checksum long, run_id string"
-        )
+        return local_df(spark, rows, "partition string, row_count long, checksum long, run_id string")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1466,8 +1463,8 @@ def _q_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_to_geocore_spark.sql_functions import register_spatial_sql
 
     register_spatial_sql(spark)
-    grid = spark.createDataFrame(
-        [(la, lo) for la, lo, lvl, _ in _S2_KNOWN if lvl == 8], "lat double, lon double"
+    grid = local_df(
+        spark, [(la, lo) for la, lo, lvl, _ in _S2_KNOWN if lvl == 8], "lat double, lon double"
     )
     grid.createOrReplaceTempView("_sqlsurface_grid")
     return spark.sql(

@@ -1,8 +1,8 @@
 """Regenerate docs/PLANS.md plan dumps for the audited queries.
 
 Usage: python scripts/dump_plans.py <section> ...
-Sections: flagship, q5, q1, pip_assign, minhash, asof, range_join,
-bbox_overlap
+Sections: flagship, q5, q1, pip_assign, minhash, ngram, embedding, asof,
+range_join, bbox_overlap
 Prints each as '=== <name> ===' + explain('formatted') output. A section
 suffixed ':final' (e.g. bbox_overlap:final) runs the query instead and
 prints its final adaptive plan, where AQE's exchange reuse shows.
@@ -48,6 +48,7 @@ def main() -> None:
             name = {
                 "q5": "q5_local_supplier", "q1": "q1_pricing_summary",
                 "pip_assign": "pip_assign", "minhash": "minhash_near_dup",
+                "ngram": "ngram_jaccard", "embedding": "embedding_dedup",
                 "asof": "asof_latest_order", "range_join": "range_join_events",
                 "bbox_overlap": "bbox_overlap_distributed",
             }[name]

@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same contract (query_id, vec_id, rank[, sim]):
+Three paths, same contract (query_id, vec_id, rank, sim), one exact cosine
+re-rank tail (`_rerank_topk`):
 
 - `brute_topk`: exact cosine top-k — broadcast the query set, JVM-side
   zip_with/aggregate dot products (no Python in the scan), window top-k.
@@ -9,6 +10,8 @@ Two paths, same contract (query_id, vec_id, rank[, sim]):
   candidates come from equi-joining bucket keys (multi-probe: the exact
   bucket plus all 1-bit-flip neighbors), exact cosine re-rank on candidates.
   The scale path: the 10^12-row side is never shuffled, only bucketed keys.
+- `ivf_topk`: the same shape with a k-means coarse quantizer's cells as
+  the buckets.
 
 Hyperplanes are generated counter-based from the seed, so signatures agree
 across executors without shipping the planes.
@@ -35,13 +38,27 @@ def _norm(col: str):
     return F.sqrt(F.aggregate(F.transform(col, lambda x: x.cast("double") * x.cast("double")), F.lit(0.0), lambda acc, x: acc + x))
 
 
-# Norms are attached per ROW below each join (columns "na"/"nb") and the
-# similarity divides by the precomputed columns: the old _cosine(a, b)
-# expression re-evaluated the interpreted higher-order norm aggregates once
-# per candidate PAIR — 3x the array work, and norms dominate it. Identical
-# doubles (same expression, same inputs), so every frozen oracle holds.
-def _sim_prenormed(q_vec: str, vec_col: str):
-    return F.round(_dot(q_vec, vec_col) / (F.col("na") * F.col("nb")), 6)
+# Norms are attached per ROW below each join and the similarity divides by
+# the precomputed columns: the old _cosine(a, b) expression re-evaluated the
+# interpreted higher-order norm aggregates once per candidate PAIR — 3x the
+# array work, and norms dominate it. Identical doubles (same expression, same
+# inputs), so every frozen oracle holds.
+def _sim_prenormed(a_vec: str, b_vec: str, a_norm: str = "na", b_norm: str = "nb"):
+    return F.round(_dot(a_vec, b_vec) / (F.col(a_norm) * F.col(b_norm)), 6)
+
+
+def _rerank_topk(cand: DataFrame, k: int, id_col: str, vec_col: str, q_id: str, q_vec: str) -> DataFrame:
+    """Exact cosine top-k per query over candidate (query, row) pairs that
+    carry both vectors and their norms "na" (query) and "nb" (row): the
+    query's own row is dropped, ties rank by ascending row id."""
+    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(id_col))
+    return (
+        cand.filter(F.col(id_col) != F.col(q_id))
+        .withColumn("sim", _sim_prenormed(q_vec, vec_col))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id, id_col, "rank", "sim")
+    )
 
 
 def brute_topk(
@@ -54,59 +71,35 @@ def brute_topk(
 
     emb = fan_out(emb).withColumn("nb", _norm(vec_col))
     queries = queries.withColumn("na", _norm(q_vec))
-    sim = _sim_prenormed(q_vec, vec_col)
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col(q_id))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "rank", "sim")
-    )
+    return _rerank_topk(emb.crossJoin(F.broadcast(queries)), k, id_col, vec_col, q_id, q_vec)
 
 
 def _planes(dim: int, n_tables: int, n_planes: int, seed: int) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_tables, n_planes, dim))
 
 
-def lsh_bucket_udf(dim: int, n_tables: int = 8, n_planes: int = 6, seed: int = 42):
+def lsh_bucket_udf(dim: int, n_tables: int = 8, n_planes: int = 6, seed: int = 42, probe: bool = False):
     """array<long> of per-table bucket keys (table index folded into the key
-    so keys never collide across tables)."""
+    so keys never collide across tables). probe=True is the QUERY side's
+    multi-probe: per table, the exact bucket plus every 1-bit-flip neighbor
+    (the n_planes buckets across the single nearest hyperplane), so only
+    the tiny query side fans out (1 + n_planes keys per table); data rows
+    keep one key per table."""
     planes = _planes(dim, n_tables, n_planes, seed)
     powers = (1 << np.arange(n_planes)).astype(np.int64)
+    # XOR masks: the exact bucket, then (probe) the 1-bit flips
+    flips = np.concatenate([[0], powers]) if probe else np.zeros(1, dtype=np.int64)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sig(vecs: pd.Series) -> pd.Series:
         m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        # (rows, tables, planes)
-        bits = np.einsum("rd,tpd->rtp", m, planes) > 0
-        keys = (bits * powers).sum(axis=2).astype(np.int64)
-        keys = keys + (np.arange(n_tables, dtype=np.int64) << np.int64(32))
-        return pd.Series(list(keys))
-
-    return _sig
-
-
-def lsh_probe_udf(dim: int, n_tables: int = 8, n_planes: int = 6, seed: int = 42):
-    """Multi-probe bucket keys for the QUERY side: per table, the exact
-    bucket plus every 1-bit-flip neighbor (the n_planes buckets across the
-    single nearest hyperplane). Only the tiny query side fans out
-    (1 + n_planes keys per table); data rows keep one key per table."""
-    planes = _planes(dim, n_tables, n_planes, seed)
-    powers = (1 << np.arange(n_planes)).astype(np.int64)
-    flips = np.concatenate([[0], powers])  # XOR masks: exact probe + 1-bit flips
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _probe(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
         bits = np.einsum("rd,tpd->rtp", m, planes) > 0
         keys = (bits * powers).sum(axis=2).astype(np.int64)        # (rows, tables)
-        probed = keys[:, :, None] ^ flips[None, None, :]           # (rows, tables, 1+planes)
+        probed = keys[:, :, None] ^ flips[None, None, :]           # (rows, tables, flips)
         probed = probed + (np.arange(n_tables, dtype=np.int64) << np.int64(32))[None, :, None]
         return pd.Series(list(probed.reshape(len(vecs), -1)))
 
-    return _probe
+    return _sig
 
 
 def lsh_topk(
@@ -114,20 +107,18 @@ def lsh_topk(
     n_tables: int = 8, n_planes: int = 6, seed: int = 42,
     id_col: str = "vec_id", vec_col: str = "embedding",
     q_id: str = "query_id", q_vec: str = "q_emb",
-    multi_probe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates = union of same-bucket rows over
     n_tables independent random-hyperplane tables, exact cosine re-rank.
     Recall/candidate-fraction trades off via (n_tables, n_planes): more
-    planes -> smaller buckets, more tables -> higher recall; multi_probe
-    additionally probes each 1-bit-flip neighbor bucket from the query
-    side. At warehouse scale the bucket keys are the table's
-    bucketing/partition columns, so the probe side prunes file reads
-    instead of scanning."""
+    planes -> smaller buckets, more tables -> higher recall; the query side
+    also probes each 1-bit-flip neighbor bucket. At warehouse scale the
+    bucket keys are the table's bucketing/partition columns, so the probe
+    side prunes file reads instead of scanning."""
     from stac_to_geocore_spark.partitioning import fan_out
 
     sig = lsh_bucket_udf(dim, n_tables, n_planes, seed)
-    q_sig = lsh_probe_udf(dim, n_tables, n_planes, seed) if multi_probe else sig
+    q_sig = lsh_bucket_udf(dim, n_tables, n_planes, seed, probe=True)
     data = fan_out(emb).withColumn("nb", _norm(vec_col)).withColumn(
         "bucket", F.explode(sig(F.col(vec_col))))
     q = (
@@ -137,18 +128,10 @@ def lsh_topk(
     )
     cand = (
         data.join(F.broadcast(q), "bucket")
-        .filter(F.col(id_col) != F.col(q_id))
         .select(q_id, q_vec, "na", id_col, vec_col, "nb")
         .distinct()
     )
-    sim = _sim_prenormed(q_vec, vec_col)
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "rank", "sim")
-    )
+    return _rerank_topk(cand, k, id_col, vec_col, q_id, q_vec)
 
 
 def _kmeans_np(sample: np.ndarray, n_centroids: int, seed: int, iters: int = 12) -> np.ndarray:
@@ -222,16 +205,7 @@ def ivf_topk(
         .withColumn("ivf_cell", F.explode(ivf_assign_udf(centroids, n_probe)(F.col(q_vec))))
         .select(q_id, q_vec, "na", "ivf_cell")
     )
-    sim = _sim_prenormed(q_vec, vec_col)
-    w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        data.join(F.broadcast(q), "ivf_cell")
-        .filter(F.col(id_col) != F.col(q_id))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "rank", "sim")
-    )
+    return _rerank_topk(data.join(F.broadcast(q), "ivf_cell"), k, id_col, vec_col, q_id, q_vec)
 
 
 def embedding_dedup_pairs(
@@ -242,27 +216,16 @@ def embedding_dedup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim >= threshold)
     via LSH self-join + exact verify. High-threshold near-dups collide with
     probability ~(1 - theta/pi)^n_planes per table, so a handful of tables
-    suffices at 0.95+ cosine. Each vector is signed once: both join sides
-    read one exchange on the key, below their renames. The join's own
-    exchanges would sit above the renames, not match, and sign per side."""
+    suffices at 0.95+ cosine. Each vector is signed once: both sides of the
+    shared bucket self-join (text.dedup._lsh_candidates) read one exchange."""
     from stac_to_geocore_spark.partitioning import fan_out
+    from stac_to_geocore_spark.text.dedup import _lsh_candidates
 
-    sig = lsh_bucket_udf(dim, n_tables, n_planes, seed)
-    data = (
-        fan_out(emb).withColumn("_nrm", _norm(vec_col))
-        .withColumn("bucket", F.explode(sig(F.col(vec_col))))
-        .select(id_col, vec_col, "_nrm", "bucket")
-        .repartition("bucket")
-    )
-    a = data.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"),
-                    F.col("_nrm").alias("na"), "bucket")
-    b = data.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"),
-                    F.col("_nrm").alias("nb"), "bucket")
-    sim = _sim_prenormed("v_a", "v_b")
+    rows = fan_out(emb).select(id_col, F.col(vec_col).alias("v"), _norm(vec_col).alias("n"))
+    keys = lsh_bucket_udf(dim, n_tables, n_planes, seed)(F.col("v"))
     return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", sim)
+        _lsh_candidates(rows, id_col, keys)
+        .withColumn("sim", _sim_prenormed("v_a", "v_b", "n_a", "n_b"))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
         .distinct()

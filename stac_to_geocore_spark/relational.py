@@ -39,7 +39,6 @@ def range_join(
     start_ts: Column,
     end_ts: Column,
     bucket_seconds: int = 86_400,
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Point-in-interval join: every (fact, interval) pair with
     start_ts <= fact_ts <= end_ts — the range join Spark would otherwise
@@ -51,9 +50,8 @@ def range_join(
     EQUI-join on bucket plus an exact refine. A fact's bucket is unique
     and an interval covers it at most once, so no dedup pass is needed.
 
-    Scale: the fact side computes one int column and never shuffles when
-    the (exploded) interval side broadcasts; with both sides bucketed on
-    the key the join co-locates. Interval explosion is len/bucket_seconds
+    Scale: the (exploded) interval side is broadcast, so the fact side
+    computes one int column and never shuffles. Interval explosion is len/bucket_seconds
     rows — pick bucket_seconds near the median interval length so typical
     intervals explode to ~2 rows. All pure JVM column math, no UDF."""
     b = F.lit(bucket_seconds)
@@ -66,13 +64,11 @@ def range_join(
             )
         ),
     ).withColumn("_lo", F.unix_timestamp(start_ts)).withColumn("_hi", F.unix_timestamp(end_ts))
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     f = facts.withColumn("_fts", F.unix_timestamp(fact_ts)).withColumn(
         "_bucket", F.floor(F.col("_fts") / b)
     )
     return (
-        f.join(iv, "_bucket")
+        f.join(F.broadcast(iv), "_bucket")
         .filter((F.col("_fts") >= F.col("_lo")) & (F.col("_fts") <= F.col("_hi")))
         .drop("_bucket", "_fts", "_lo", "_hi")
     )

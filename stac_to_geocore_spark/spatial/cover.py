@@ -202,8 +202,7 @@ def register_cover_udtf(spark: SparkSession, name: str = "cover_cells") -> None:
     covers_pdf). Output rows ride Arrow batches
     (useArrow) instead of pickled rows — a cover yields up to max_cells
     rows per input row, so the output serialization is the UDTF's hot
-    path; falls back to the pickling UDTF if the runtime lacks Arrow
-    UDTF support."""
+    path."""
     from pyspark.sql.functions import udtf
 
     class CoverCells:
@@ -213,8 +212,5 @@ def register_cover_udtf(spark: SparkSession, name: str = "cover_cells") -> None:
             for c, f in zip(cells.tolist(), full.tolist()):
                 yield int(c), bool(f)
 
-    try:
-        wrapped = udtf(CoverCells, returnType="cell bigint, fully_inside boolean", useArrow=True)
-    except TypeError:  # runtime without Arrow-UDTF support
-        wrapped = udtf(CoverCells, returnType="cell bigint, fully_inside boolean")
-    spark.udtf.register(name, wrapped)
+    spark.udtf.register(
+        name, udtf(CoverCells, returnType="cell bigint, fully_inside boolean", useArrow=True))

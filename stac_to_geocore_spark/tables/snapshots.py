@@ -53,13 +53,17 @@ class SnapshotTable:
         self.path = path
         self.meta_dir = os.path.join(path, "_snapshots")
         self.data_dir = os.path.join(path, "data")
-        os.makedirs(self.meta_dir, exist_ok=True)
 
     # ----- metadata -----
 
+    def _meta_names(self) -> list[str]:
+        """Names in _snapshots/; a table never committed to has none (reads
+        create nothing: the directory is made by the first commit)."""
+        return sorted(os.listdir(self.meta_dir)) if os.path.isdir(self.meta_dir) else []
+
     def history(self) -> list[dict]:
         out = []
-        for fn in sorted(os.listdir(self.meta_dir)):
+        for fn in self._meta_names():
             m = re.fullmatch(r"v(\d+)\.json", fn)
             if m:
                 with open(os.path.join(self.meta_dir, fn)) as f:
@@ -68,7 +72,7 @@ class SnapshotTable:
 
     def latest_version(self) -> int:
         """The highest published v<N>.json, from the file names alone."""
-        names = (re.fullmatch(r"v(\d+)\.json", fn) for fn in os.listdir(self.meta_dir))
+        names = (re.fullmatch(r"v(\d+)\.json", fn) for fn in self._meta_names())
         return max((int(m.group(1)) for m in names if m), default=0)
 
     def _snapshot(self, version: int) -> dict:
@@ -91,6 +95,7 @@ class SnapshotTable:
         winner's commit, or the winner's data dirs would silently vanish
         from the new latest (the lost-update this CAS exists to prevent).
         `extra` keys are stored in the snapshot next to the protocol's own."""
+        os.makedirs(self.meta_dir, exist_ok=True)
         for _attempt in range(100):
             latest = self.latest_version()
             prev_dirs = self._snapshot(latest)["dirs"] if latest else []
@@ -203,11 +208,10 @@ class SnapshotTable:
                 if d not in live:
                     shutil.rmtree(d)
                     removed.append(d)
-        if os.path.isdir(self.meta_dir):
-            for fn in sorted(os.listdir(self.meta_dir)):
-                m = re.fullmatch(r"v\d+\.json\.tmp\.(\d+)", fn)
-                if m and not _pid_alive(int(m.group(1))):
-                    p = os.path.join(self.meta_dir, fn)
-                    os.unlink(p)
-                    removed.append(p)
+        for fn in self._meta_names():
+            m = re.fullmatch(r"v\d+\.json\.tmp\.(\d+)", fn)
+            if m and not _pid_alive(int(m.group(1))):
+                p = os.path.join(self.meta_dir, fn)
+                os.unlink(p)
+                removed.append(p)
         return removed

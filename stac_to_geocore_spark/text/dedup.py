@@ -5,10 +5,11 @@ Plan shapes (the 100 TB story):
 - Signatures are map-only Arrow-batched pandas UDFs, run once per row:
   every consumer reads one exchange of the signed rows.
 - LSH banding turns near-dup search into an equi-join: explode signatures
-  into (band, band_hash) keys, self-join on the key — it shuffles
-  (id, band_key) pairs, never document text.
-- Candidate pairs are verified with exact signature similarity (and
-  optionally exact n-gram Jaccard on the pair subset, which is tiny).
+  into (band, band_hash) keys, self-join on the key (`_lsh_candidates`,
+  shared with ann.embedding_dedup_pairs) — it shuffles ids, keys and the
+  columns the verify step reads, never document text.
+- Candidate pairs are verified with exact signature similarity (or exact
+  n-gram Jaccard on the pair subset, which is tiny).
 
 Hashing is counter-based (splitmix64 over blake2b shingle digests), so
 signatures are identical on any executor / any partitioning.
@@ -20,7 +21,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
@@ -74,37 +75,51 @@ def minhash_signatures(
 
 
 def _lsh_candidates(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int, max_band_size: int | None
+    rows: DataFrame, id_col: str, keys: Column, max_band_size: int | None = None
 ) -> DataFrame:
-    """Distinct (id_a < id_b) pairs of `sigs` rows that share a band bucket
-    of at most max_band_size rows. Both join sides and the cap's window
-    read one exchange on the join key; a groupBy cap joined back would not
-    match it and would run the signature UDF again."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    band_keys = sigs.select(
-        id_col,
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.lit(bi), *[F.col("sig")[bi * r + j] for j in range(r)])
-                for bi in range(bands)
-            ])
-        ).alias("band", "band_key"),
-    ).repartition("band", "band_key")
+    """(id_a < id_b) pairs of `rows` that share a bucket, each other column
+    of `rows` as <c>_a and <c>_b. `keys` is an array column over `rows`, one
+    bucket key per band; a pair collides in band i iff its i-th keys agree,
+    and appears once per band it collides in (callers verify, then
+    distinct). Buckets of more than max_band_size rows are dropped.
+
+    Both join sides and the cap's window read one exchange on (band, key),
+    below the renaming selects: the join's own exchanges would sit above
+    them, not match, and re-run the UDFs that built `rows` once per side.
+    `keys` is a Column rather than a column of `rows`, as a key array
+    selected on its own ahead of the explode is planned as more UDF nodes."""
+    others = [c for c in rows.columns if c != id_col]
+    buckets = rows.select(
+        *rows.columns, F.posexplode(keys).alias("_band", "_key")
+    ).repartition("_band", "_key")
     if max_band_size is not None:
-        band_keys = (
-            band_keys.withColumn("_bs", F.count(F.lit(1)).over(Window.partitionBy("band", "band_key")))
+        buckets = (
+            buckets.withColumn("_bs", F.count(F.lit(1)).over(Window.partitionBy("_band", "_key")))
             .filter(F.col("_bs") <= max_band_size)
             .drop("_bs")
         )
-    left = band_keys.alias("l")
-    right = band_keys.alias("r")
+
+    def side(s: str) -> DataFrame:
+        return buckets.select(F.col(id_col).alias(f"id_{s}"),
+                              *[F.col(c).alias(f"{c}_{s}") for c in others], "_band", "_key")
+
     return (
-        left.join(right, (F.col("l.band") == F.col("r.band")) & (F.col("l.band_key") == F.col("r.band_key")))
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
+        side("a").join(side("b"), ["_band", "_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .drop("_band", "_key")
     )
+
+
+def _band_keys(num_hashes: int, bands: int) -> Column:
+    """One key per band of the `sig` column: band index and its r =
+    num_hashes / bands minhashes, hashed together."""
+    if num_hashes % bands:
+        raise ValueError(f"num_hashes={num_hashes} is not a multiple of bands={bands}")
+    r = num_hashes // bands
+    return F.array(*[
+        F.xxhash64(F.lit(bi), *[F.col("sig")[bi * r + j] for j in range(r)])
+        for bi in range(bands)
+    ])
 
 
 def minhash_lsh_pairs(
@@ -140,27 +155,20 @@ def minhash_lsh_pairs(
     recall trade is never silently applied to an unsuspecting caller; scale
     pipelines pass e.g. max_band_size=1024 explicitly.
     """
-    # band keys and both estimate-join sides read one id-keyed exchange (the
-    # estimate joins' own partitioning at scale); the entry filter keeps them
-    # equal, as Spark pushes the joins' inferred isnotnull(id) below it
-    sigs = (
-        minhash_signatures(df.filter(F.col(id_col).isNotNull()), text_col, num_hashes, shingle_k, seed)
-        .select(id_col, "sig")
-        .repartition(id_col)
-    )
-    cand = _lsh_candidates(sigs, id_col, num_hashes, bands, max_band_size)
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
+    sigs = minhash_signatures(df.filter(F.col(id_col).isNotNull()), text_col, num_hashes, shingle_k, seed)
+    # each candidate carries both signatures out of the self-join: the
+    # estimate needs no join back to the signed rows
+    pairs = _lsh_candidates(sigs.select(id_col, "sig"), id_col, _band_keys(num_hashes, bands), max_band_size)
     est = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
         lambda acc, x: acc + x,
     ) / F.lit(float(num_hashes))
     return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
+        pairs.withColumn("est_jaccard", F.round(est, 6))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
+        .distinct()
     )
 
 
@@ -209,7 +217,9 @@ def ngram_jaccard_pairs(
     The hot-band cap is opt-in and null ids never pair (see
     minhash_lsh_pairs)."""
     sigs = minhash_signatures(df.filter(F.col(id_col).isNotNull()), text_col, num_hashes, seed=seed)
-    cand = _lsh_candidates(sigs, id_col, num_hashes, lsh_bands, max_band_size)
+    cand = _lsh_candidates(
+        sigs.select(id_col, "sig"), id_col, _band_keys(num_hashes, lsh_bands), max_band_size
+    ).select("id_a", "id_b").distinct()
 
     @F.pandas_udf(ArrayType(LongType()))
     def _gram_hashes(texts: pd.Series) -> pd.Series:

@@ -159,7 +159,9 @@ def test_stale_staging_dirs_are_removed(spark, tmp_path, small, monkeypatch):
         w.write(small, run_id="r1")
     monkeypatch.undo()
     assert len(os.listdir(w.data_dir)) == 1 and read_manifest(w.path) == []
-    # no process has this pid (pid_max is < 2^22 on linux)
+    # no process has this pid (pid_max is < 2^22 on linux); no commit has
+    # run, so the killed writer's tmp is the first file in _snapshots/
+    os.makedirs(w.table.meta_dir)
     with open(os.path.join(w.table.meta_dir, "v1.json.tmp.4999999"), "w") as f:
         f.write("{")
     w.write(small, run_id="r2")

@@ -177,6 +177,35 @@ def test_spatial_join_plans_have_no_python_node(spark, name):
             assert node not in plan, f"{name}: {node} in\n{plan[:3000]}"
 
 
+# the Python nodes each query's own UDFs bring
+_DRIVER_ROW_QUERIES = {
+    "ann_recall": {"ArrowEvalPython"},
+    "geocore_collections": set(),
+    "snapshot_time_travel": set(),
+}
+
+
+@pytest.mark.parametrize("name", list(_DRIVER_ROW_QUERIES))
+def test_driver_row_queries_plan_no_existing_rdd(spark, name):
+    """Queries that build a DataFrame from driver rows (a brute top-k
+    collected once, translated docs, per-version aggregates) hand them over
+    as a LocalTableScan: no plan they run pickles the rows into Scan
+    ExistingRDD, and no Python node runs but the query's own UDFs."""
+    import __spark_entry__ as m
+
+    out = {}
+
+    def run():
+        out["df"] = df = m.queries()[name](spark, "/root/testdata/sf0.01")
+        assert df.collect()
+
+    plans = _sql_plans_of(spark, run)
+    final = out["df"]._jdf.queryExecution().executedPlan().toString()
+    for plan in [final.split("== Initial Plan ==")[0]] + plans:
+        for node in set(_PYTHON_NODES) - _DRIVER_ROW_QUERIES[name]:
+            assert node not in plan, f"{name}: {node} in\n{plan[:3000]}"
+
+
 def test_harvest_plans_have_one_python_node(spark, tmp_path, monkeypatch):
     """run_harvest crosses into Python once: over every SQL execution it
     issues there is one MapInPandas, the page tasks that fetch, translate
@@ -213,11 +242,11 @@ _DEDUP_QUERY_UDFS = {
 
 @pytest.mark.parametrize("name", list(_DEDUP_QUERY_UDFS))
 def test_dedup_plans_sign_each_row_once(spark, name):
-    """Each LSH dedup operator crosses into Python once per UDF: every
-    consumer of the signed rows reads one exchange (a ReusedExchange in the
-    final plan), so each UDF has exactly one ArrowEvalPython node in the
-    final adaptive plan. The MinHash query runs the hot-band cap, the
-    n-gram one does not."""
+    """Each LSH dedup operator crosses into Python once per UDF: both sides
+    of the shared bucket self-join (text.dedup._lsh_candidates) read one
+    exchange, a ReusedExchange in the final plan, so each UDF has exactly
+    one ArrowEvalPython node in the final adaptive plan. The MinHash query
+    runs the hot-band cap, the n-gram one does not."""
     from collections import Counter
 
     import __spark_entry__ as m
@@ -228,3 +257,4 @@ def test_dedup_plans_sign_each_row_once(spark, name):
     final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
     nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[", final)
     assert Counter(u for node in nodes for u in re.findall(r"\b(_\w+)\(", node)) == udfs, final
+    assert "ReusedExchange" in final, final

@@ -66,6 +66,7 @@ def test_latest_version_reads_names_not_files(tmp_path):
     """latest_version() takes the highest v<N>.json name without parsing
     any snapshot, so a commit costs no read of the history."""
     t = SnapshotTable(str(tmp_path / "tbl"))
+    os.makedirs(t.meta_dir)
     with open(os.path.join(t.meta_dir, "v3.json"), "w") as f:
         f.write("{not json")
     assert t.latest_version() == 3
@@ -131,3 +132,18 @@ def test_crashed_commit_does_not_block_next_append(spark, tmp_path):
     assert v == 2
     assert t.read(spark).count() == 15
     assert os.path.join(t.data_dir, "s2") in t.vacuum()
+
+
+def test_reads_of_a_missing_table_create_nothing(tmp_path):
+    """Reading a path no commit has reached is a read: it finds no versions
+    and leaves the path as it was. The first commit makes _snapshots/."""
+    from stac_to_geocore_spark.tables.lineage import LineageWriter, read_manifest
+
+    path = str(tmp_path / "missing")
+    t = SnapshotTable(path)
+    assert t.history() == [] and t.latest_version() == 0 and t.vacuum() == []
+    assert read_manifest(path) == []
+    assert LineageWriter(path).is_complete({"rows": 1}) is False
+    assert not os.path.exists(path)
+    assert t.commit("complete", lambda prev: prev) == 1
+    assert os.listdir(t.meta_dir) == ["v1.json"]
