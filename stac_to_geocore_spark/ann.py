@@ -198,8 +198,11 @@ def ivf_topk(
 
     from stac_to_geocore_spark.partitioning import fan_out
 
+    # coalesce(-1): the UDF result is nullable, so the join's inferred
+    # isnotnull(ivf_cell) would be pushed below the projection with its own
+    # copy of the UDF and sign every data row twice (see h3x.h3_encode)
     data = fan_out(emb).withColumn("nb", _norm(vec_col)).withColumn(
-        "ivf_cell", ivf_assign_udf(centroids, 1)(F.col(vec_col))[0])
+        "ivf_cell", F.coalesce(ivf_assign_udf(centroids, 1)(F.col(vec_col))[0], F.lit(-1)))
     q = (
         queries.withColumn("na", _norm(q_vec))
         .withColumn("ivf_cell", F.explode(ivf_assign_udf(centroids, n_probe)(F.col(q_vec))))

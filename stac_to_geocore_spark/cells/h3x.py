@@ -21,7 +21,7 @@ principles:
   not stitch boundary hexes across faces (the env has no h3 wheel to borrow
   or validate Uber's 122-base-cell tables — SURVEY.md §7.0), so ids follow
   the H3 *bit-layout spirit* but are not bit-identical to Uber H3. All
-  engine semantics (hierarchy, rings, covers, joins) are internally
+  engine semantics (hierarchy, covers, joins) are internally
   consistent and invariant-tested.
 
 Id layout (63 bits used):
@@ -36,13 +36,10 @@ into H3 (res 5-9) ... via vectorized pandas/Arrow UDFs").
 
 from __future__ import annotations
 
-import functools
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.types import LongType
 
 # --- icosahedron construction (deterministic, golden ratio) ---
 
@@ -281,60 +278,19 @@ def h3_children_np(cell: np.ndarray) -> np.ndarray:
     return _pack(face7, ca, cb, r0 + 1)
 
 
-def _disk_offsets(k: int) -> np.ndarray:
-    """All axial offsets within hex distance k: (2k+1 rows, 2) ints."""
-    offs = []
-    for da in range(-k, k + 1):
-        for db in range(max(-k, -da - k), min(k, -da + k) + 1):
-            offs.append((da, db))
-    return np.array(offs, dtype=np.int64)
-
-
-def h3_kring_np(cell: np.ndarray, k: int) -> np.ndarray:
-    """Grid-disk of radius k around each cell.
-
-    Returns shape (n, m) cell ids (m = 3k^2+3k+1). Offsets are applied on the
-    cell's own face lattice, converted to lat/lon through the face plane, and
-    re-encoded — so offsets that spill over a face boundary land on the
-    correct adjacent face's lattice (geometric ring; exact within a face,
-    cover-approximate across boundaries).
-    """
-    cell = np.atleast_1d(np.asarray(cell, dtype=np.int64))
-    face, a, b, res = h3_unpack(cell)
-    r0 = int(res[0])
-    if not (res == r0).all():
-        raise ValueError("mixed resolutions in one kring call")
-    offs = _disk_offsets(k)  # (m, 2)
-    af = (a[:, None] + offs[None, :, 0]).astype(np.float64)
-    bf = (b[:, None] + offs[None, :, 1]).astype(np.float64)
-    zl = af + bf * _TAU
-    zp = zl / _RES_XFORM[r0]
-    xyz = _plane_to_xyz(np.broadcast_to(face[:, None], af.shape), zp)
-    lat, lon = _xyz_to_latlon(xyz)
-    return h3_encode_np(lat, lon, r0)
-
-
-# --- Spark surface (Arrow-batched pandas UDFs; no per-row Python) ---
-
-
-@functools.lru_cache(maxsize=64)
-def _parent_udf(parent_res: int, _skey):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _par(cells: pd.Series) -> pd.Series:
-        return pd.Series(h3_parent_np(cells.to_numpy(np.int64), parent_res))
-
-    return _par
+# --- Spark surface: the session's cell UDFs (sql_functions.cell_udfs) ---
 
 
 def h3_parent(cell: Column, parent_res: int) -> Column:
     """Column form of the exact aperture-7 parent — the key for multi-res
     rollups (aggregate at fine res once, roll up to any coarser res with a
-    map-side re-key instead of re-scanning the raw table)."""
+    map-side re-key instead of re-scanning the raw table). A -1 cell (no
+    cell, see h3_encode) stays -1."""
     from pyspark.sql.functions import coalesce, lit
 
-    return coalesce(_parent_udf(parent_res, _session_cache_key())(cell), lit(-1))
+    from stac_to_geocore_spark.sql_functions import cell_udfs
+
+    return coalesce(cell_udfs(_session_cache_key())["h3_parent"](cell, lit(parent_res)), lit(-1))
 
 
 def _session_cache_key():
@@ -353,23 +309,15 @@ def _session_cache_key():
     return (sc.applicationId, sc.startTime)
 
 
-@functools.lru_cache(maxsize=64)
-def _encode_udf(res: int, _skey):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _enc(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        return pd.Series(h3_encode_np(lat_s.to_numpy(np.float64), lon_s.to_numpy(np.float64), res))
-
-    return _enc
-
-
 def h3_encode(lat: Column, lon: Column, res: int) -> Column:
+    """Column form of h3_encode_np; a NULL or NaN coordinate gives -1."""
     from pyspark.sql.functions import coalesce, lit
 
-    # the kernel never yields null, but Catalyst can't know that: when the
+    from stac_to_geocore_spark.sql_functions import cell_udfs
+
+    # the UDF result is nullable, and Catalyst can't see past it: when the
     # encoded cell is a join key, the inferred isnotnull(key) filter gets
     # pushed below the projection and forces a SECOND ArrowEvalPython pass
     # per row. coalesce(-1) makes the expression provably non-nullable so
     # the inferred filter is pruned and the UDF runs exactly once.
-    return coalesce(_encode_udf(res, _session_cache_key())(lat, lon), lit(-1))
+    return coalesce(cell_udfs(_session_cache_key())["h3_encode"](lat, lon, lit(res)), lit(-1))

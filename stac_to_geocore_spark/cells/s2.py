@@ -18,13 +18,11 @@ Known-answer checks used in tests (derivable from the scheme definition):
 
 from __future__ import annotations
 
-import functools
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+
+from stac_to_geocore_spark.cells.h3x import _latlon_to_xyz, _session_cache_key
 
 MAX_LEVEL = 30
 
@@ -39,13 +37,6 @@ _IJ_TO_POS = np.array(
 _SWAP_MASK = 1
 _INVERT_MASK = 2
 _POS_TO_ORIENTATION = np.array([_SWAP_MASK, 0, 0, _SWAP_MASK | _INVERT_MASK], dtype=np.int64)
-
-
-def _latlon_to_xyz(lat_deg: np.ndarray, lon_deg: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    lat = np.radians(lat_deg)
-    lon = np.radians(lon_deg)
-    cl = np.cos(lat)
-    return cl * np.cos(lon), cl * np.sin(lon), np.sin(lat)
 
 
 def _xyz_to_face_uv(x: np.ndarray, y: np.ndarray, z: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -148,58 +139,27 @@ def s2_encode_xyz_np(x: np.ndarray, y: np.ndarray, z: np.ndarray, level: int = 1
     face, u, v = _xyz_to_face_uv(x, y, z)
     i = _st_to_ij(_uv_to_st(u))
     j = _st_to_ij(_uv_to_st(v))
-    leaf = _face_ij_to_leaf(face, i, j).view(np.uint64)
-    if level == MAX_LEVEL:
-        return leaf.view(np.int64)
-    lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - level))
-    cell = (leaf & ~(np.uint64(2) * lsb - np.uint64(1))) | lsb
-    return cell.view(np.int64)
+    return s2_parent_np(_face_ij_to_leaf(face, i, j), level)
 
 
 def s2_encode_np(lat_deg: np.ndarray, lon_deg: np.ndarray, level: int = 12) -> np.ndarray:
     """lat/lon degrees -> S2 cell id (int64 two's-complement view) at `level`."""
-    x, y, z = _latlon_to_xyz(np.asarray(lat_deg, dtype=np.float64), np.asarray(lon_deg, dtype=np.float64))
-    return s2_encode_xyz_np(x, y, z, level)
+    xyz = _latlon_to_xyz(np.asarray(lat_deg, dtype=np.float64), np.asarray(lon_deg, dtype=np.float64))
+    return s2_encode_xyz_np(xyz[..., 0], xyz[..., 1], xyz[..., 2], level)
 
 
 def s2_parent_np(cell: np.ndarray, level: int) -> np.ndarray:
-    """Parent at a coarser level — pure bit math (prefix truncation)."""
+    """Parent at a coarser level — pure bit math (prefix truncation; the
+    identity at MAX_LEVEL)."""
     c = np.asarray(cell).view(np.uint64)
     lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - level))
     return ((c & ~(np.uint64(2) * lsb - np.uint64(1))) | lsb).view(np.int64)
 
 
-def s2_level_np(cell: np.ndarray) -> np.ndarray:
-    """Level from the trailing set bit."""
-    c = np.asarray(cell).view(np.uint64)
-    # count trailing zeros of the lsb
-    tz = np.zeros(c.shape, dtype=np.int64)
-    x = c.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = (x & ((np.uint64(1) << np.uint64(shift)) - np.uint64(1))) == 0
-        has_more = x != 0
-        step = mask & has_more
-        tz[step] += shift
-        x[step] >>= np.uint64(shift)
-    return MAX_LEVEL - tz // 2
-
-
-@functools.lru_cache(maxsize=64)
-def _s2_encode_udf(level: int, _skey):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _enc(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        return pd.Series(s2_encode_np(lat_s.to_numpy(np.float64), lon_s.to_numpy(np.float64), level))
-
-    return _enc
-
-
 def s2_encode(lat: Column, lon: Column, level: int = 12) -> Column:
-    """Spark column: S2 cell id at `level` via Arrow-batched pandas UDF
-    (UDF cached per (level, session) — cloudpickling one costs ~0.1-0.3s of
-    driver time per call; the session key avoids a dead-JVM handle after a
-    session restart, see h3x._session_cache_key)."""
-    from stac_to_geocore_spark.cells.h3x import _session_cache_key
+    """Spark column: S2 cell id at `level` through the session's s2_encode
+    UDF (sql_functions.cell_udfs, shared with SQL); a NULL or NaN
+    coordinate gives NULL."""
+    from stac_to_geocore_spark.sql_functions import cell_udfs
 
-    return _s2_encode_udf(level, _session_cache_key())(lat, lon)
+    return cell_udfs(_session_cache_key())["s2_encode"](lat, lon, F.lit(level))

@@ -22,7 +22,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MAX_MERCATOR_LAT = 85.05112877980659
@@ -50,16 +50,6 @@ def tile_y_expr(lat: Column, z: int) -> Column:
     merc = F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r))
     raw = F.floor((F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * n)
     return F.greatest(F.lit(0), F.least(F.lit(2**z - 1), raw)).cast("long")
-
-
-def tile_assign(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat", zooms: tuple[int, ...] = (12,)) -> DataFrame:
-    """Add tile_z{z}_x / tile_z{z}_y columns for each requested zoom."""
-    out = df
-    for z in zooms:
-        out = out.withColumn(f"tile_z{z}_x", tile_x_expr(F.col(lon_col), z)).withColumn(
-            f"tile_z{z}_y", tile_y_expr(F.col(lat_col), z)
-        )
-    return out
 
 
 # --- numpy twin (oracle for tests + fixture generation) ---

@@ -53,7 +53,8 @@ def knn_join(
     Returns (query_id, point_id, rank, dist2), rank 1..k (dist2 in squared
     scaled degrees, rounded to 9 dp for stable hashing).
 
-    Raises RuntimeError if the expansion has not provably converged after
+    Raises ValueError if a query's lon or lat is null, NaN or +-inf, and
+    RuntimeError if the expansion has not provably converged after
     max_iter radius doublings (iterative algorithms never silently return
     partial results — same contract as text/components.py).
     """
@@ -61,6 +62,11 @@ def knn_join(
     qlon = queries["lon"].to_numpy(np.float64)
     qlat = queries["lat"].to_numpy(np.float64)
     qids = queries["query_id"].tolist()
+    # a query with no finite position has no nearest points: fail here,
+    # before the extent job, not after max_iter futile radius doublings
+    bad = int((~(np.isfinite(qlon) & np.isfinite(qlat))).sum())
+    if bad:
+        raise ValueError(f"{bad} knn_join query row(s) have a null or non-finite lon/lat")
     if not qids:
         return _empty(points, point_id)
 

@@ -33,6 +33,7 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -156,6 +157,18 @@ def pip_ring_join(
             f"pip_ring_join requires one ring per poly_id (refine joins edges "
             f"by poly_id); duplicates: {dups} — split multi-ring polygons into "
             f"distinct poly_ids and union the assignments"
+        )
+    # a null or non-finite vertex has no place on the plane: the bbox's
+    # min/max would skip or keep a NaN depending on where it sits in the ring
+    bad = np.array([
+        not (np.isfinite(np.asarray(x, np.float64)).all() and np.isfinite(np.asarray(y, np.float64)).all())
+        for x, y in zip(rings_pdf["ring_lon"], rings_pdf["ring_lat"])
+    ])
+    if bad.any():
+        ids = sorted(rings_pdf.loc[bad, "poly_id"].unique()[:5])
+        raise ValueError(
+            f"pip_ring_join requires finite ring vertices; rings with a null, "
+            f"NaN or +-inf vertex: {ids}"
         )
     xs = [list(map(float, v)) for v in rings_pdf["ring_lon"]]
     ys = [list(map(float, v)) for v in rings_pdf["ring_lat"]]

@@ -1,17 +1,18 @@
-"""Spark SQL surface for the cell encoders: register h3/s2 functions so
-pure-SQL users can build spatial filter-refine pipelines without touching
-the Python column API — the scalar complement of the `cover_cells` UDTF
-(spatial/cover.register_cover_udtf):
+"""The cell functions' one Spark surface: h3_encode, h3_parent and s2_encode
+are each ONE Arrow-batched UDF per session, registered for SQL and
+called by the column API (cells/h3x.h3_encode, h3x.h3_parent,
+s2.s2_encode) with its res/level as a literal argument — so both surfaces
+share one null handling and one evaluation. The SQL form is the scalar
+complement of the `cover_cells` UDTF (spatial/cover.register_cover_udtf):
 
     SELECT image_id, h3_encode(lat, lon, 7)  AS h3_r7,
                      h3_parent(h3_encode(lat, lon, 7), 5) AS cell_p5,
                      s2_encode(lat, lon, 12) AS s2_l12
     FROM images
 
-Unlike the column API (where res/level are Python literals baked into a
-cached UDF), SQL passes res as a per-row argument; the kernels need a
-scalar res, so each Arrow batch is grouped by the distinct res values it
-contains (in practice one) and encoded per group — still fully vectorized.
+res is a per-row argument; the kernels need a scalar res, so each Arrow
+batch is grouped by the distinct res values it contains (one, from the
+column API) and encoded per group — still fully vectorized.
 
 Reference anchor: the stac-to-geocore reference has no SQL surface at all
 (single-threaded dict ETL); this is part of the north-star engine
@@ -20,10 +21,17 @@ Reference anchor: the stac-to-geocore reference has no SQL surface at all
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql.types import LongType
+
+from stac_to_geocore_spark.cells.h3x import _session_cache_key, h3_encode_np, h3_parent_np
+from stac_to_geocore_spark.cells.s2 import s2_encode_np
 
 
 def _grouped_by_scalar(scalars: pd.Series, valid: pd.Series, kernel) -> pd.Series:
@@ -42,15 +50,16 @@ def _grouped_by_scalar(scalars: pd.Series, valid: pd.Series, kernel) -> pd.Serie
     return pd.Series(out)
 
 
-def register_spatial_sql(spark: SparkSession) -> None:
-    """Register h3_encode(lat, lon, res), h3_parent(cell, res), and
-    s2_encode(lat, lon, level) as Spark SQL functions (Arrow-batched
-    pandas UDFs). z/x/y tile math needs no UDF — it is plain SQL
-    (FLOOR((lon+180)/360*POW(2,z)) etc., see cells/tiles.py)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from stac_to_geocore_spark.cells.h3x import h3_encode_np, h3_parent_np
-    from stac_to_geocore_spark.cells.s2 import s2_encode_np
+@functools.lru_cache(maxsize=8)
+def cell_udfs(_skey) -> dict:
+    """The session's h3_encode(lat, lon, res), h3_parent(cell, res) and
+    s2_encode(lat, lon, level) UDFs, by name. Built once per session
+    (_skey = h3x._session_cache_key()): cloudpickling a UDF costs driver
+    time, and a UDF cached across a session restart would hold a dead-JVM
+    handle. A NULL or NaN coordinate encodes to NULL; h3_parent reads a
+    negative cell (the column API's -1 for "no cell") as NULL, never as
+    the valid-looking parent of its bits."""
+    from pyspark.sql.functions import arrow_udf, pandas_udf
 
     @pandas_udf(LongType())
     def _h3_encode(lat: pd.Series, lon: pd.Series, res: pd.Series) -> pd.Series:
@@ -61,12 +70,15 @@ def register_spatial_sql(spark: SparkSession) -> None:
             lambda m, r: h3_encode_np(la[m], lo[m], r),
         )
 
-    @pandas_udf(LongType())
-    def _h3_parent(cell: pd.Series, res: pd.Series) -> pd.Series:
-        c = cell.fillna(0).to_numpy(np.int64)  # masked rows never reach the kernel
-        return _grouped_by_scalar(
-            res, cell.notna(), lambda m, r: h3_parent_np(c[m], r)
-        )
+    # an Arrow UDF: a pandas UDF sees a long column holding a NULL as
+    # float64, which rounds every 63-bit cell id in that batch
+    @arrow_udf(LongType())
+    def _h3_parent(cell: pa.Array, res: pa.Array) -> pa.Array:
+        c = pc.fill_null(cell, 0).to_numpy()  # masked rows never reach the kernel
+        valid = pd.Series(cell.is_valid().to_numpy(zero_copy_only=False) & (c >= 0))
+        return pa.array(_grouped_by_scalar(
+            res.to_pandas(), valid, lambda m, r: h3_parent_np(c[m], r)
+        ))
 
     @pandas_udf(LongType())
     def _s2_encode(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
@@ -77,6 +89,13 @@ def register_spatial_sql(spark: SparkSession) -> None:
             lambda m, lv: s2_encode_np(la[m], lo[m], lv),
         )
 
-    spark.udf.register("h3_encode", _h3_encode)
-    spark.udf.register("h3_parent", _h3_parent)
-    spark.udf.register("s2_encode", _s2_encode)
+    return {"h3_encode": _h3_encode, "h3_parent": _h3_parent, "s2_encode": _s2_encode}
+
+
+def register_spatial_sql(spark: SparkSession) -> None:
+    """Register h3_encode(lat, lon, res), h3_parent(cell, res), and
+    s2_encode(lat, lon, level) as Spark SQL functions. z/x/y tile math
+    needs no UDF — it is plain SQL (FLOOR((lon+180)/360*POW(2,z)) etc.,
+    see cells/tiles.py)."""
+    for name, udf in cell_udfs(_session_cache_key()).items():
+        spark.udf.register(name, udf)

@@ -7,7 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from stac_to_geocore_spark.cells import h3x
-from stac_to_geocore_spark.cells.s2 import s2_encode, s2_encode_np, s2_level_np, s2_parent_np
+from stac_to_geocore_spark.cells.s2 import s2_encode, s2_encode_np, s2_parent_np
 from stac_to_geocore_spark.cells.tiles import tile_x_expr, tile_xy_np, tile_y_expr
 
 RNG = np.random.default_rng(1234)
@@ -32,10 +32,6 @@ class TestS2:
         for lvl in (10, 6, 2):
             direct = s2_encode_np(LAT, LON, lvl)
             assert (s2_parent_np(c14, lvl) == direct).all()
-
-    def test_level_extraction(self):
-        for lvl in (0, 7, 19, 30):
-            assert (s2_level_np(s2_encode_np(LAT, LON, lvl)) == lvl).all()
 
     def test_spark_udf_matches_numpy(self, spark):
         pdf = pd.DataFrame({"lat": LAT[:500], "lon": LON[:500]})
@@ -62,24 +58,6 @@ class TestH3Style:
         _, _, _, res = h3x.h3_unpack(c)
         assert (res == 7).all()
         assert (c == h3x.h3_encode_np(LAT, LON, 7)).all()
-
-    def test_kring_counts_and_membership(self):
-        cells = h3x.h3_encode_np(LAT[:100], LON[:100], 7)
-        for k in (1, 2, 3):
-            ring = h3x.h3_kring_np(cells, k)
-            assert ring.shape == (100, 3 * k * k + 3 * k + 1)
-            assert all(cells[i] in ring[i] for i in range(100))
-
-    def test_kring_covers_nearby_points(self):
-        # any point within ~1 cell spacing of another must be inside its 2-ring
-        base_lat, base_lon = LAT[:200], LON[:200]
-        spacing_deg = h3x.res_spacing(7) * 180 / np.pi
-        near_lat = base_lat + RNG.uniform(-0.4, 0.4, 200) * spacing_deg
-        near_lon = base_lon + RNG.uniform(-0.4, 0.4, 200) * spacing_deg
-        base = h3x.h3_encode_np(base_lat, base_lon, 7)
-        near = h3x.h3_encode_np(near_lat, near_lon, 7)
-        rings = h3x.h3_kring_np(base, 2)
-        assert all(near[i] in rings[i] for i in range(200))
 
     def test_children_parent_roundtrip_exact(self):
         """True aperture-7: every cell has exactly 7 children and each child

@@ -237,6 +237,8 @@ _DEDUP_QUERY_UDFS = {
     "minhash": ("minhash_near_dup", {"_sig": 1}),
     "ngram": ("ngram_jaccard", {"_sig": 1, "_gram_hashes": 1}),
     "embedding": ("embedding_dedup", {"_sig": 1}),
+    # not a self-join: one IVF assignment per side (data rows, query probes)
+    "ann_ivf": ("ann_ivf", {"_assign": 2}),
 }
 
 
@@ -246,7 +248,9 @@ def test_dedup_plans_sign_each_row_once(spark, name):
     of the shared bucket self-join (text.dedup._lsh_candidates) read one
     exchange, a ReusedExchange in the final plan, so each UDF has exactly
     one ArrowEvalPython node in the final adaptive plan. The MinHash query
-    runs the hot-band cap, the n-gram one does not."""
+    runs the hot-band cap, the n-gram one does not. ann_ivf signs each data
+    row once too: its nullable join key is coalesced, so no inferred
+    isnotnull(ivf_cell) filter re-runs the UDF below the projection."""
     from collections import Counter
 
     import __spark_entry__ as m
@@ -257,4 +261,4 @@ def test_dedup_plans_sign_each_row_once(spark, name):
     final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
     nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[", final)
     assert Counter(u for node in nodes for u in re.findall(r"\b(_\w+)\(", node)) == udfs, final
-    assert "ReusedExchange" in final, final
+    assert name == "ann_ivf" or "ReusedExchange" in final, final

@@ -281,6 +281,16 @@ def test_bbox_overlap_salts_hot_cells_on_side_b_only(spark, monkeypatch):
     assert got == _overlap_broadcast(monkeypatch, polys_a, polys_b) and len(got) > 0
 
 
+def _jobs_in_group(spark, group, run):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_bbox_overlap_self_join_builds_with_one_stats_probe(spark):
     """BUILDING a both-big self-join (before any action) runs only the one
     stats aggregation over its one input, which AQE runs as at most 2
@@ -288,14 +298,7 @@ def test_bbox_overlap_self_join_builds_with_one_stats_probe(spark):
     from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
     polys = _scatter_boxes(spark, 11000)
-    sc = spark.sparkContext
-    group = "overlap-build-jobs"
-    sc.setJobGroup(group, "bbox_overlap_join build")
-    try:
-        bbox_overlap_join(polys, polys)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert _jobs_in_group(spark, "overlap-build-jobs", lambda: bbox_overlap_join(polys, polys)) <= 2
 
 
 @pytest.mark.parametrize("bad", [
@@ -322,3 +325,44 @@ def test_spatial_joins_reject_bad_boxes(spark, bad):
                 lambda: pip_join(pts, boxes)):
         with pytest.raises(ValueError, match=r"^1 box row\(s\) .* must be split"):
             run()
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), None], ids=["nan", "inf", "null"])
+def test_knn_join_rejects_non_finite_queries_before_any_job(spark, points_pdf, bad):
+    """A query with no finite position used to run all max_iter radius
+    doublings and end in "did not converge"; it must fail on the driver
+    before the extent job."""
+    pts = spark.createDataFrame(points_pdf)
+    q = pd.DataFrame({"query_id": ["q0", "q1"], "lon": [-100.0, bad], "lat": [50.0, 51.0]})
+
+    def run():
+        with pytest.raises(ValueError, match=r"^1 knn_join query row\(s\) have a null or non-finite"):
+            knn_join(pts, q, k=3)
+
+    assert _jobs_in_group(spark, f"knn-bad-query-{bad}", run) == 0
+
+
+@pytest.mark.parametrize("where", ["first", "last"])
+@pytest.mark.parametrize("bad", [float("nan"), float("-inf"), None], ids=["nan", "inf", "null"])
+def test_pip_ring_join_rejects_non_finite_vertices(spark, where, bad):
+    """A NaN vertex used to give a bbox that depended on its position in the
+    ring (Python min/max skip a NaN only when it is not first), so the same
+    square matched 40 or 214 points; any null or non-finite vertex must
+    raise, naming the ring, before any job of the join runs."""
+    from stac_to_geocore_spark.session import local_df
+    from stac_to_geocore_spark.spatial.pip import pip_ring_join
+
+    sq_lon, sq_lat = [-100.0, -99.0, -99.0, -100.0], [50.0, 50.0, 51.0, 51.0]
+    bad_lon = [bad] + sq_lon if where == "first" else sq_lon + [bad]
+    rings = local_df(spark, [
+        ("ok", sq_lon, sq_lat),
+        ("bad", bad_lon, sq_lat + [50.5]),
+    ], "poly_id string, ring_lon array<double>, ring_lat array<double>")
+    pts = spark.createDataFrame([(1, -99.5, 50.3)], "point_id long, lon double, lat double")
+
+    def run():
+        with pytest.raises(ValueError, match=r"finite ring vertices; .*: \['bad'\]$"):
+            pip_ring_join(pts, rings)
+
+    # the one job is the bounded collect of the rings themselves
+    assert _jobs_in_group(spark, f"ring-bad-vertex-{where}-{bad}", run) == 1

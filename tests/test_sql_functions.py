@@ -1,5 +1,5 @@
 """SQL-registered cell encoders (sql_functions.register_spatial_sql) must
-match the Python column API exactly — same kernels, different surface."""
+match the Python column API exactly — one UDF per function behind both."""
 
 from __future__ import annotations
 
@@ -14,12 +14,22 @@ from stac_to_geocore_spark.sql_functions import register_spatial_sql
 
 
 def test_sql_functions_match_column_api(spark):
+    """Both surfaces call one UDF per function, so they agree on every row,
+    a NULL and a NaN latitude included: the column API's h3 is -1 where SQL
+    says NULL (coalesce keeps a join key non-nullable), h3_parent of that -1
+    stays -1 (it used to be the valid-looking parent of -1's bits), and s2
+    is NULL from both. SQL's h3_parent over a batch holding a NULL cell
+    keeps every other id exact (a pandas UDF would see it as float64)."""
     register_spatial_sql(spark)
     lon, lat = image_centroids(np.arange(500), seed=4)
-    df = spark.createDataFrame(pd.DataFrame({"pid": np.arange(500), "lon": lon, "lat": lat}))
+    df = (
+        spark.createDataFrame(pd.DataFrame({"pid": np.arange(500), "lon": lon, "lat": lat}))
+        .withColumn("lat", F.when(F.col("pid") == 7, F.lit(None))
+                    .when(F.col("pid") == 8, F.lit(float("nan"))).otherwise(F.col("lat")))
+    )
     df.createOrReplaceTempView("pts_sqlfn")
 
-    via_sql = spark.sql(
+    via_sql = {r.pid: r for r in spark.sql(
         """
         SELECT pid,
                h3_encode(lat, lon, 7)                 AS h3_r7,
@@ -27,19 +37,25 @@ def test_sql_functions_match_column_api(spark):
                s2_encode(lat, lon, 12)                AS s2_l12
         FROM pts_sqlfn
         """
-    ).toPandas().sort_values("pid").reset_index(drop=True)
+    ).collect()}
 
-    via_col = (
-        df.select(
-            "pid",
-            h3_encode(F.col("lat"), F.col("lon"), 7).alias("h3_r7"),
-            h3_parent(h3_encode(F.col("lat"), F.col("lon"), 7), 5).alias("cell_p5"),
-            s2_encode(F.col("lat"), F.col("lon"), 12).alias("s2_l12"),
-        )
-        .toPandas().sort_values("pid").reset_index(drop=True)
-    )
-    for c in ["h3_r7", "cell_p5", "s2_l12"]:
-        assert (via_sql[c].to_numpy() == via_col[c].to_numpy()).all(), c
+    via_col = {r.pid: r for r in df.select(
+        "pid",
+        h3_encode(F.col("lat"), F.col("lon"), 7).alias("h3_r7"),
+        h3_parent(h3_encode(F.col("lat"), F.col("lon"), 7), 5).alias("cell_p5"),
+        s2_encode(F.col("lat"), F.col("lon"), 12).alias("s2_l12"),
+    ).collect()}
+    assert via_sql.keys() == via_col.keys() == set(range(500))
+    for pid, col in via_col.items():
+        sql = via_sql[pid]
+        assert (col.h3_r7, col.cell_p5) == (
+            -1 if sql.h3_r7 is None else sql.h3_r7,
+            -1 if sql.cell_p5 is None else sql.cell_p5,
+        ), pid
+        assert col.s2_l12 == sql.s2_l12, pid
+    for pid in (7, 8):
+        assert (via_col[pid].h3_r7, via_col[pid].cell_p5, via_col[pid].s2_l12) == (-1, -1, None)
+        assert (via_sql[pid].h3_r7, via_sql[pid].cell_p5, via_sql[pid].s2_l12) == (None, None, None)
 
 
 def test_sql_functions_null_semantics(spark):
